@@ -12,7 +12,7 @@ Layout:
     ops/         training-data pipeline operators (dedup, similarity, text stats)
     pipeline.py  the mapInPandas extraction UDF (per-turn)
     conversation.py  conversation-level assembly (windows A1-A6, filters F2-F12)
-    lineage.py   lineage + checkpoint manifest + idempotent resume
+    lineage.py   bucket-checkpointed runs: one commit table + idempotent resume
     runner.py    spark-submit entry point
 """
 

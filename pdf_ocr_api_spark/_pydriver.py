@@ -29,9 +29,12 @@ equivalent to having built the session with the conf off.
 
 * opt-out: set ``PDF_OCR_SPARK_DF_DEBUGGING=1`` to keep PySpark's
   default error-context behavior (e.g. while debugging a failing job);
-* applies only when the private global exists with its expected type
-  (absent/renamed on another PySpark version → silent no-op, the
-  wrapper then just keeps its default behavior);
+* applies only on the PySpark releases this reasoning was checked
+  against (``VERIFIED_PYSPARK``) and only when the private global exists
+  with its expected type — any other version is a silent no-op, and the
+  wrapper then just keeps its default behavior;
+* honours an already-cached ``True``: the conf was read with debugging
+  on before the package was imported, and that choice stands;
 * never touches a session and never raises — safe to run at package
   import, including inside executor Python workers (where the
   DataFrame API is never called and the flag is inert).
@@ -48,23 +51,29 @@ import os
 
 __all__ = ["disable_dataframe_debug_origin"]
 
+# re-verify the module docstring's claims before adding a release here
+VERIFIED_PYSPARK = ("4.1.2",)
+
 
 def disable_dataframe_debug_origin() -> bool:
     """Disable PySpark's per-call debug-origin capture for this process.
 
     Returns True when the gate was switched off (or already off),
-    False when opted out or the PySpark internals don't match.
+    False when opted out, already on, or on an unverified PySpark.
     """
     if os.environ.get("PDF_OCR_SPARK_DF_DEBUGGING", "") == "1":
         return False
     try:
+        import pyspark
         import pyspark.errors.utils as _eu
     except Exception:  # pragma: no cover - pyspark always present in repo use
+        return False
+    if pyspark.__version__ not in VERIFIED_PYSPARK:
         return False
     if not hasattr(_eu, "_enable_debugging_cache"):  # pragma: no cover
         return False  # internals moved on this PySpark version: no-op
     cur = _eu._enable_debugging_cache
-    if cur is not None and not isinstance(cur, bool):  # pragma: no cover
+    if cur is not None and cur is not False:  # a cached True, or an unknown type
         return False
     _eu._enable_debugging_cache = False
     return True

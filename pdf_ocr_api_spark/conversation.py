@@ -559,6 +559,7 @@ def tipo_dim_df(spark, lista_tipos: list[dict]) -> DataFrame:
     """Build the J6 broadcast dimension (normalized names precomputed
     driver-side with the exact NFD semantics of the Python twin)."""
     from .functions.normalize import normalize_tipo
+    from .sources.io import local_frame
 
     rows = []
     seen = set()
@@ -568,7 +569,7 @@ def tipo_dim_df(spark, lista_tipos: list[dict]) -> DataFrame:
             continue  # reference takes the FIRST list match (ref :39-44)
         seen.add(nome)
         rows.append((item["id"], nome))
-    return spark.createDataFrame(rows, "id INT, nome_norm STRING")
+    return local_frame(spark, rows, "id INT, nome_norm STRING")
 
 
 def assemble_services_segmented(svc: DataFrame, chunk_turns: int = 512) -> DataFrame:

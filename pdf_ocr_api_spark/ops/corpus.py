@@ -418,11 +418,12 @@ def log_run(
     second row under the same ``batch-N`` run id (the data tables
     reconcile, see ``sync_signatures``); operators should de-duplicate
     on run id when aggregating."""
-    from ..sources.io import write_table
+    from ..sources.io import local_frame, write_table
 
     m = metrics or {}
     write_table(
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(mode, run_id, int(rows_kept), int(m.get("dropped_buckets") or 0), m.get("max_bucket"))],
             "mode STRING, run_id STRING, rows_kept LONG, dropped_buckets LONG, max_bucket LONG",
         ),

@@ -8,9 +8,9 @@ The reference's POST /ocr/parse (ref server.cjs:34-96) becomes a batch job:
         --run-id $(date +%s) --buckets 256
 
 The job id is the Spark applicationId (the reference mints a UUID,
-ref server.cjs:53); job state lives in the manifest/lineage tables
-(the reference's Xano store, ref server.cjs:11-30); resume is automatic
-(only pending buckets run).
+ref server.cjs:53); job state lives in the lineage commit table (the
+reference's Xano store, ref server.cjs:11-30); resume is automatic (only
+buckets without a ``done`` row run).
 
 ``python -m pdf_ocr_api_spark.runner --selftest`` runs a small
 generate→extract→resume cycle on local[*] for smoke checking a deploy.
@@ -65,7 +65,8 @@ def build_session(
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(description="transcript main-content extraction job")
     ap.add_argument("--input", help="transcripts table: parquet dir or catalog ident")
-    ap.add_argument("--output", help="output root (data/lineage/manifest live under it)")
+    ap.add_argument("--output", help="output root: <output>/data holds the turns by bucket, <output>/lineage "
+                                     "one commit row per bucket per run (metrics, resume guard, status)")
     ap.add_argument("--run-id", default=None)
     ap.add_argument("--buckets", type=int, default=64)
     ap.add_argument("--salt", type=int, default=None, help="salted repartition for skewed inputs")

@@ -124,6 +124,24 @@ def write_table(
         raise ValueError(mode)
 
 
+def local_frame(spark: SparkSession, rows: list, schema: str) -> DataFrame:
+    """Driver-side rows (tuples in ``schema`` order) as a DataFrame, built
+    through a ``pyarrow.Table``.
+
+    ``createDataFrame(list)`` ships pickled rows as a PythonRDD, so the
+    first action over it starts a Python worker; an Arrow table goes to
+    the JVM as record batches and never does, whatever
+    ``spark.sql.execution.arrow.pyspark.enabled`` says.
+    """
+    import pyarrow as pa
+    from pyspark.sql.types import DataType
+
+    struct = DataType.fromDDL(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(struct.names)
+    table = pa.Table.from_arrays([pa.array(list(c)) for c in cols], names=struct.names)
+    return spark.createDataFrame(table, struct)
+
+
 def table_exists(spark: SparkSession, target: str) -> bool:
     if is_table_ident(target):
         return spark.catalog.tableExists(target)

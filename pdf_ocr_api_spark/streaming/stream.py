@@ -6,7 +6,7 @@ ingest: new transcript files land in a directory / Iceberg table, each
 micro-batch flows through the SAME stateless mapInPandas extractor
 (`pipeline.make_extractor`), and results append to the output table with
 exactly-once file-sink semantics (checkpointed offsets — the streaming
-counterpart of the batch manifest in lineage.py).
+counterpart of the batch commit table in lineage.py).
 
 Late/out-of-order turns: extraction is per-turn pure, so no watermark is
 needed for correctness; the optional windowed throughput monitor keeps a

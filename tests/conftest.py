@@ -41,6 +41,14 @@ def node_available() -> bool:
 
 requires_node = pytest.mark.skipif(not node_available(), reason="node oracle unavailable")
 
+# the read-only reference checkout: tools/ref_oracle.js runs its parsers,
+# and a few tests read its sample files
+REFERENCE_ROOT = Path("/root/reference")
+
+requires_reference = pytest.mark.skipif(
+    not REFERENCE_ROOT.is_dir(), reason=f"reference checkout {REFERENCE_ROOT} absent"
+)
+
 
 def run_ref_oracle(op: str, cases: list) -> list:
     """Run the read-only reference implementation via tools/ref_oracle.js."""

@@ -7,10 +7,14 @@ from pyspark.sql import functions as F
 from pdf_ocr_api_spark.ops import multimodal
 from pdf_ocr_api_spark.sources import binary
 
+from tests.conftest import REFERENCE_ROOT, requires_reference
+
+pytestmark = requires_reference
+
 
 @pytest.fixture(scope="module")
 def pdfs(spark):
-    return binary.read_binary_docs(spark, "/root/reference/resources/*.pdf")
+    return binary.read_binary_docs(spark, f"{REFERENCE_ROOT}/resources/*.pdf")
 
 
 def test_binary_scan_reads_real_pdfs(pdfs):

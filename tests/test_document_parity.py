@@ -9,7 +9,7 @@ import json
 from pdf_ocr_api_spark import fixtures
 from pdf_ocr_api_spark.extract.document import parse_document_py
 
-from tests.conftest import requires_node, run_ref_oracle
+from tests.conftest import requires_node, requires_reference, run_ref_oracle
 
 
 def _conversations(n: int, depara):
@@ -26,6 +26,7 @@ def _conversations(n: int, depara):
 
 
 @requires_node
+@requires_reference
 def test_parse_document_parity(depara):
     cases = _conversations(60, depara)
     ref = run_ref_oracle("parseDocument", cases)
@@ -35,6 +36,7 @@ def test_parse_document_parity(depara):
 
 
 @requires_node
+@requires_reference
 def test_parse_document_single_doc(depara):
     doc = {"text": "Certidão CAT CREA 98765/2023 estado BA\nATIVIDADES\nObra um - fase: x M2 10,00", "pages": []}
     want = run_ref_oracle("parseDocument", [{"docs": [doc], "depara": depara}])[0]

@@ -9,6 +9,8 @@ from pdf_ocr_api_spark import fixtures
 from pdf_ocr_api_spark.extract.html_extract import extract_html
 from pdf_ocr_api_spark.extract.pdf_layout import extract_pdf_layout
 
+from tests.conftest import REFERENCE_ROOT, requires_reference
+
 
 def test_html_main_content_recovery():
     """Generated pages: nav/footer link blocks must be pruned, main div
@@ -56,11 +58,12 @@ def test_pdf_layout_reading_order():
             assert clean[s:e] == clean[s:e].strip()
 
 
+@requires_reference
 def test_pdf_layout_real_adobe_sample(tmp_path):
     """The reference repo's own golden output (result.zip →
     structuredData.json, ref SURVEY §5) must extract without error and
     keep every non-empty Text element."""
-    with zipfile.ZipFile("/root/reference/result.zip") as z:
+    with zipfile.ZipFile(REFERENCE_ROOT / "result.zip") as z:
         doc = json.loads(z.read("structuredData.json"))
     clean, spans = extract_pdf_layout(doc)
     n_text_elements = sum(1 for e in doc["elements"] if (e.get("Text") or "").strip())
@@ -75,13 +78,14 @@ def test_pdf_layout_empty_and_missing():
     assert extract_pdf_layout({"elements": [{"Path": "//P"}]}) == ("", [])
 
 
+@requires_reference
 def test_pdf_layout_styling_spans_from_ref_golden():
     """with_styling=True must surface the reference's styling-info model
     (Font family/weight/italic, TextSize, Lang — ref
     extract-text-table-info-with-styling-info-from-pdf.js:51-54, golden
     structuredData.json) on every span, byte-consistent with the plain
     variant's offsets."""
-    with zipfile.ZipFile("/root/reference/result.zip") as z:
+    with zipfile.ZipFile(REFERENCE_ROOT / "result.zip") as z:
         doc = json.loads(z.read("structuredData.json"))
     clean_plain, plain = extract_pdf_layout(doc)
     clean, styled = extract_pdf_layout(doc, with_styling=True)

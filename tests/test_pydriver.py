@@ -2,6 +2,9 @@
 opt-out honored, and provably result-neutral (the wrapper only decorates
 error metadata, never values)."""
 
+import os
+
+import pyspark
 import pyspark.errors.utils as eu
 import pytest
 
@@ -15,13 +18,17 @@ def restore_gate():
     eu._enable_debugging_cache = prev
 
 
+@pytest.mark.skipif(
+    os.environ.get("PDF_OCR_SPARK_DF_DEBUGGING") == "1", reason="opted out of the gate switch"
+)
 def test_package_import_disabled_the_gate():
     # conftest imported the package long before this test ran
     assert eu._enable_debugging_cache is False
     assert eu.is_debugging_enabled() is False
 
 
-def test_idempotent_and_reports_true(restore_gate):
+def test_idempotent_and_reports_true(restore_gate, monkeypatch):
+    monkeypatch.delenv("PDF_OCR_SPARK_DF_DEBUGGING", raising=False)
     assert disable_dataframe_debug_origin() is True
     assert disable_dataframe_debug_origin() is True
     assert eu._enable_debugging_cache is False
@@ -32,6 +39,21 @@ def test_env_opt_out_leaves_gate_untouched(restore_gate, monkeypatch):
     eu._enable_debugging_cache = True
     assert disable_dataframe_debug_origin() is False
     assert eu._enable_debugging_cache is True
+
+
+def test_cached_true_is_honoured(restore_gate, monkeypatch):
+    monkeypatch.delenv("PDF_OCR_SPARK_DF_DEBUGGING", raising=False)
+    eu._enable_debugging_cache = True
+    assert disable_dataframe_debug_origin() is False
+    assert eu._enable_debugging_cache is True
+
+
+def test_unverified_pyspark_version_is_left_alone(restore_gate, monkeypatch):
+    monkeypatch.delenv("PDF_OCR_SPARK_DF_DEBUGGING", raising=False)
+    eu._enable_debugging_cache = None
+    monkeypatch.setattr(pyspark, "__version__", "4.2.0")
+    assert disable_dataframe_debug_origin() is False
+    assert eu._enable_debugging_cache is None
 
 
 def test_results_identical_with_gate_on_and_off(restore_gate, spark):

@@ -112,3 +112,65 @@ def test_lineage_input_count_measured_on_input(spark, transcripts, tmp_path):
     }
     got = {r.bucket: r.input_count for r in lin.collect()}
     assert got == want
+
+
+def test_crash_before_commit_reprocesses_exactly_that_bucket(spark, transcripts, tmp_path, monkeypatch):
+    """The data write lands but the commit append never does: no ``done``
+    row exists for the bucket, and the next run reprocesses exactly it."""
+    out = str(tmp_path / "crash")
+    with_b = transcripts.withColumn("b", lineage.bucket_expr(8))
+    lineage.run(spark, with_b.filter(F.col("b") < 4).drop("b"), out, run_id="r1", n_buckets=8)
+
+    real_write = lineage.write_table
+
+    def crash_on_commit(df, target, *args, **kwargs):
+        if target.endswith("/lineage"):
+            raise RuntimeError("crash before commit")
+        return real_write(df, target, *args, **kwargs)
+
+    monkeypatch.setattr(lineage, "write_table", crash_on_commit)
+    with pytest.raises(RuntimeError, match="crash before commit"):
+        lineage.run(spark, with_b.filter(F.col("b") <= 4).drop("b"), out, run_id="r2", n_buckets=8)
+    monkeypatch.undo()
+
+    assert 4 in {r.bucket for r in lineage.read_output(spark, out).select("bucket").distinct().collect()}
+    assert lineage.done_buckets(spark, out) == [0, 1, 2, 3]
+
+    s3 = lineage.run(spark, with_b.filter(F.col("b") <= 4).drop("b"), out, run_id="r3", n_buckets=8)
+    assert s3["buckets_processed"] == [4]
+    lin = lineage.read_lineage(spark, out).filter(F.col("bucket") == 4).collect()
+    assert [(r.run_id, r.status) for r in lin] == [("r3", "done")]
+    assert lin[0].input_count == lin[0].extracted_count > 0
+
+
+def test_old_two_table_root_refused(spark, transcripts, tmp_path):
+    """A root written with a separate ``manifest`` table (its lineage rows
+    carry no status) predates the single commit table: refuse it loudly
+    instead of misreading which buckets are done."""
+    out = str(tmp_path / "old")
+    spark.createDataFrame(
+        [(b, 1, 1, 10, 10, 0, 5, "a", 7) for b in range(4)],
+        "bucket INT, input_count BIGINT, extracted_count BIGINT, bytes_in BIGINT, bytes_out BIGINT, "
+        "services_count BIGINT, proc_us BIGINT, run_id STRING, wall_ms INT",
+    ).withColumn("ts", F.current_timestamp()).write.parquet(f"{out}/lineage")
+    spark.createDataFrame(
+        [(b, "a", "done", "full", 8) for b in range(4)],
+        "bucket INT, run_id STRING, status STRING, mode STRING, n_buckets INT",
+    ).withColumn("ts", F.current_timestamp()).write.parquet(f"{out}/manifest")
+    with pytest.raises(ValueError, match="two-table layout"):
+        lineage.run(spark, transcripts, out, run_id="b", n_buckets=8)
+
+
+def test_fresh_run_spark_job_budget(spark, transcripts, tmp_path):
+    """Guard on the bookkeeping's cost: a fresh-root run launches the
+    data write's jobs, the read-back's schema inference, the one rollup
+    collect and the one commit append — nothing more."""
+    sc = spark.sparkContext
+    group = f"lineage-budget-{tmp_path.name}"
+    sc.setJobGroup(group, "fresh-root lineage.run")
+    try:
+        lineage.run(spark, transcripts, str(tmp_path / "budget"), run_id="a", n_buckets=8)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 6

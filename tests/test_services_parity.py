@@ -14,7 +14,7 @@ from pdf_ocr_api_spark.extract.services import parse_services
 from pdf_ocr_api_spark.extract.tipo import detect_tipo_certidao, map_by_sigla
 from pdf_ocr_api_spark.extract.units import normalize_unidade
 
-from tests.conftest import requires_node, run_ref_oracle
+from tests.conftest import requires_node, requires_reference, run_ref_oracle
 
 
 def _payload_cases(n: int):
@@ -30,6 +30,7 @@ def _payload_cases(n: int):
 
 
 @requires_node
+@requires_reference
 def test_parse_services_fuzz_parity(depara):
     cases, metas = _payload_cases(300)
     ref = run_ref_oracle("parseServices", cases)
@@ -57,6 +58,7 @@ ADVERSARIAL_TEXTS = [
 
 
 @requires_node
+@requires_reference
 def test_parse_services_adversarial_parity(depara):
     cases = [{"doc": {"text": t, "pages": []}, "depara": depara} for t in ADVERSARIAL_TEXTS]
     ref = run_ref_oracle("parseServices", cases)
@@ -65,6 +67,7 @@ def test_parse_services_adversarial_parity(depara):
 
 
 @requires_node
+@requires_reference
 def test_normalize_unidade_parity(depara):
     vals = [
         "M2", "m²", "M²", "M³", "m3", "KG", "kg", "UT", "un", "UN", "MÊS",
@@ -79,6 +82,7 @@ def test_normalize_unidade_parity(depara):
 
 
 @requires_node
+@requires_reference
 def test_detect_tipo_parity():
     lista = fixtures.DEPARA_RAW["tipoCertidao"]
     texts = [
@@ -93,6 +97,7 @@ def test_detect_tipo_parity():
 
 
 @requires_node
+@requires_reference
 def test_map_by_sigla_parity():
     lista = fixtures.DEPARA_RAW["nivelAtividade"]
     vals = ["execução da obra", "obra executada", "fiscalização", "projeto básico",
