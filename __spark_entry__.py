@@ -1,8 +1,8 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 ``queries()`` exposes one entry per implemented operator family from
-SURVEY.md §2 plus the training-data-pipeline operators (dedup, similarity,
-text analysis, multimodal plumbing), each expressed over the driver's
+SURVEY.md §2 plus the corpus-cleaning operators (dedup, similarity,
+text analysis, domain caps), each expressed over the driver's
 synthetic tables; ``oracle_sql()`` carries the DuckDB twin for every
 SQL-expressible entry. Ops whose hashes are engine-specific (xxhash64
 MinHash/SimHash, SRP-LSH) or that run the mapInPandas extraction UDF are
@@ -226,7 +226,7 @@ def q_a6_running_number(spark, sf_dir):
 
 
 def q_w_sessionize(spark, sf_dir):
-    """Stateful scan — 30-minute-gap sessionization (streaming-adjacent)."""
+    """Stateful scan — 30-minute-gap sessionization."""
     from pyspark.sql import Window
 
     e = _t(spark, sf_dir, "events")
@@ -734,61 +734,20 @@ def q_ann_brute_cosine(spark, sf_dir):
 
 
 def q_ann_index_family(spark, sf_dir):
-    """The CONSOLIDATED approximate-ANN entry (r4: the driver caps its
-    gate at 50 entries; the four single-query approximate indexes share
-    one check) — every index family answers the same top-10 query and
-    the union rides back with a ``method`` tag:
+    """The approximate-ANN entry: SRP multi-table OR-construction +
+    multiprobe LSH answers the top-10 query to the vec_id=0 embedding,
+    tagged ``method='lsh'``.
 
-    * ``lsh``   — SRP multi-table OR-construction + multiprobe
-    * ``ivf``   — k-means coarse quantizer, probe + exact rerank
-    * ``pq``    — product-quantization LUT scoring + exact rerank
-    * ``ivfpq`` — residual (true-IVFADC) lists of codes, per-list LUTs
-
-    Rows-only by design (lossy/approximate indexes); each family's
-    recall floor, determinism, and persistence round-trip are asserted
-    in tests (test_ops.py), and the exact brute-force twin is the
-    separately-oracled ``ann_brute_cosine``/``ann_batch_cosine``."""
+    Rows-only by design (approximate index); its recall floor is
+    asserted in tests (test_ops.py), and the exact brute-force twin is
+    the separately-oracled ``ann_brute_cosine``/``ann_batch_cosine``."""
     from pdf_ocr_api_spark.ops import similarity
 
     e = _t(spark, sf_dir, "embeddings")
     qv = list(e.filter(F.col("vec_id") == 0).select("embedding").collect()[0][0])
     cand = e.filter(F.col("vec_id") != 0)
-
-    lsh = similarity.lsh_topk(cand, qv, k=10).select(
+    return similarity.lsh_topk(cand, qv, k=10).select(
         F.lit("lsh").alias("method"), "id", "cosine"
-    )
-    indexed, cents = similarity.ivf_index(cand, n_lists=8)
-    ivf = similarity.ivf_topk(indexed, cents, qv, k=10, nprobe=3).select(
-        F.lit("ivf").alias("method"), "id", "cosine"
-    )
-    codes, cb = similarity.pq_index(cand, m=4)
-    pq = similarity.pq_topk(codes, cb, qv, k=10, emb=cand).select(
-        F.lit("pq").alias("method"), "id", "cosine"
-    )
-    pcodes, pcents, pcbs = similarity.ivfpq_index(cand, n_lists=16, m=4, residual=True)
-    ivfpq = similarity.ivfpq_topk(
-        pcodes, pcents, pcbs, qv, k=10, nprobe=4, emb=cand, residual=True
-    ).select(F.lit("ivfpq").alias("method"), "id", "cosine")
-    return lsh.unionByName(ivf).unionByName(pq).unionByName(ivfpq)
-
-
-def q_ann_ivfpq_batch(spark, sf_dir):
-    """Batched index-backed ANN (r4): N queries against the residual
-    IVF×PQ index in ONE pruned scan — per-(query, probed-list) LUTs in a
-    broadcast TABLE (no literal-LUT plans), probe-union partition
-    pruning, per-query window top-k, exact rerank. Rows-only (lossy
-    index); per-query equality with single-query ivfpq_topk asserted in
-    tests."""
-    from pdf_ocr_api_spark.ops import similarity
-
-    e = _t(spark, sf_dir, "embeddings")
-    queries = e.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    cand = e.filter(F.col("vec_id") >= 3)
-    codes, cents, cbs = similarity.ivfpq_index(cand, n_lists=16, m=4, residual=True)
-    return similarity.ivfpq_topk_batch(
-        codes, cents, cbs, queries, k=10, nprobe=4, emb=cand, residual=True
     )
 
 
@@ -866,59 +825,24 @@ def q_clean_corpus(spark, sf_dir):
     return out.select("conv_id", "turn_idx", "lang", "n_tokens")
 
 
-def q_mm_media(spark, sf_dir):
-    """The CONSOLIDATED multimodal entry (r4: the driver caps its gate at
-    50 entries and the three r3 ``mm_*`` rows fell off the end —
-    sniff→decode→feature is ONE path, so it is one entry now).
+def q_domain_cap(spark, sf_dir):
+    """Domain blocklist then Gopher-style per-domain cap: drop two
+    sources, keep at most 5 documents per remaining source — the ones
+    with the smallest md5-portable hash of (source, doc_id, salt), so
+    DuckDB reproduces the exact selection."""
+    from pdf_ocr_api_spark.ops import domains
 
-    REAL decode path end-to-end, distributed (rows-only: the feature
-    extractor is Python-side by design; codec correctness carries its
-    own pytest/property suite): each documents row's text bytes become a
-    genuine 24-bit BMP payload INSIDE the executors, and media_features
-    routes it through magic-byte sniffing, the actual numpy BMP decoder,
-    and the image-feature extractor — byte metadata (n_bytes) and the
-    per-channel/luma feature vector both come back.
+    d = _t(spark, sf_dir, "documents")
+    kept = domains.cap_per_domain(domains.filter_domains(d, ["src1", "src5"]), n=5)
+    return kept.select("doc_id", "source")
 
-    The gate entry serializes the ARRAY<FLOAT> feature to a CSV string
-    (r5): the driver canonicalizes EVERY entry with a pandas multi-column
-    sort, whose lexsort factorizes (hashes) each column — Python lists
-    are unhashable, so a raw array column is a guaranteed RED row
-    (CORRECTNESS_r04 mm_media). Only scalar columns may leave a gate
-    entry."""
-    from pyspark.sql import functions as F
 
-    from pdf_ocr_api_spark.ops import multimodal
+def q_domain_stats(spark, sf_dir):
+    """Per-domain corpus profile (n_docs, n_chars, whitespace-token
+    count) — one partial-aggregated shuffle on the source key."""
+    from pdf_ocr_api_spark.ops import domains
 
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-
-    def build(batches):
-        import numpy as np
-        import pandas as pd
-
-        from pdf_ocr_api_spark.ops import codecs
-
-        need = 16 * 12 * 3
-        for pdf in batches:
-            payloads = []
-            for t in pdf["text"]:
-                b = (t or " ").encode("utf-8")
-                reps = need // len(b) + 1
-                arr = np.frombuffer((b * reps)[:need], np.uint8).reshape(12, 16, 3)
-                payloads.append(codecs.encode_bmp(arr))
-            yield pd.DataFrame(
-                {"media_id": pdf["doc_id"], "kind": "image", "payload": payloads}
-            )
-
-    media = d.mapInPandas(build, "media_id BIGINT, kind STRING, payload BINARY")
-    feats = multimodal.media_features(media)
-    return feats.select(
-        "media_id",
-        "kind",
-        "n_bytes",
-        F.expr(
-            "concat_ws(',', transform(feature, x -> printf('%.5f', x)))"
-        ).alias("feature_csv"),
-    )
+    return domains.domain_stats(_t(spark, sf_dir, "documents"))
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
@@ -981,22 +905,18 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "substring_dedup": q_substring_dedup,
         "lm_train": q_lm_train,
         "ann_brute_cosine": q_ann_brute_cosine,
-        # r4 consolidation: the driver evaluates at most 50 entries — the
-        # four single-query approximate indexes (lsh/ivf/pq/ivfpq) share
-        # one union entry, and the three mm_* rows share one real-decode
-        # entry, so EVERY registered entry gets a driver row again
         "ann_index_family": q_ann_index_family,
         "ann_batch_cosine": q_ann_batch_cosine,
-        "ann_ivfpq_batch": q_ann_ivfpq_batch,
+        "domain_stats": q_domain_stats,
         "dedup_embedding": q_dedup_embedding,
         "clean_corpus": q_clean_corpus,
-        "mm_media": q_mm_media,
+        "domain_cap": q_domain_cap,
     }
 
 
 def oracle_sql() -> dict[str, str]:
     """DuckDB twins. Omitted entries (extraction UDF, engine-specific
-    hashing, approximate ANN, Python feature stub) get rows-only checks."""
+    hashing, approximate ANN) get rows-only checks."""
     lang_case = _lang_id_sql()
     return {
         "f_filter_pushdown": """
@@ -1592,6 +1512,23 @@ def oracle_sql() -> dict[str, str]:
             )
             SELECT doc_id AS id FROM corpus
             WHERE doc_id NOT IN (SELECT id FROM losers)
+        """,
+        "domain_cap": """
+            SELECT doc_id, source FROM documents
+            WHERE source NOT IN ('src1', 'src5')
+            QUALIFY row_number() OVER (
+              PARTITION BY source
+              ORDER BY ('0x' || substr(md5(source || chr(31) || CAST(doc_id AS VARCHAR)
+                                           || chr(31) || 'domain-cap-v1'), 1, 15))::BIGINT,
+                       doc_id
+            ) <= 5
+        """,
+        "domain_stats": r"""
+            SELECT source AS domain, count(*) AS n_docs,
+                   CAST(sum(length(coalesce(text, ''))) AS BIGINT) AS n_chars,
+                   CAST(sum(len(list_filter(regexp_split_to_array(text, '[ \t\n\x0b\f\r]+'),
+                                            x -> x != ''))) AS BIGINT) AS n_tokens
+            FROM documents GROUP BY source
         """,
     }
 

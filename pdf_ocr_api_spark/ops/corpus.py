@@ -332,7 +332,7 @@ def clean_corpus_incremental(
     ``_tid``s sort after every kept ``_tid`` (string order of
     conv_id⟂turn_idx), thresholds unchanged, and no new turn chains two
     history entries together (see ``incremental_keep``; bridges/chains
-    through dropped docs are the standard streaming-dedup divergence).
+    through dropped docs are the standard incremental-dedup divergence).
 
     ``kept_sigs``: the kept corpus' persisted signature table
     (``corpus_signatures`` — id = turn surrogate). At 100 TB persist it
@@ -412,12 +412,8 @@ def log_run(
 ) -> None:
     """Append one run-summary row (mode, run id, rows kept, the
     dropped-bucket recall-loss accounting) to the store's runs table —
-    the single schema both the batch runner and the streaming job write,
-    so the two surfaces never drift apart. The log is telemetry with
-    AT-LEAST-ONCE semantics: a replayed streaming micro-batch appends a
-    second row under the same ``batch-N`` run id (the data tables
-    reconcile, see ``sync_signatures``); operators should de-duplicate
-    on run id when aggregating."""
+    one row per corpus job (``runner`` keys it by the Spark application
+    id), in the single schema both clean modes write."""
     from ..sources.io import local_frame, write_table
 
     m = metrics or {}
@@ -453,8 +449,7 @@ def sync_signatures(
     crash window closes at the cost of two narrow id scans.
 
     ``num_hashes``/``k`` are PERSISTED next to the index (a
-    ``{sig_target}_props`` one-row table, the ``save_ivfpq_index``
-    pattern) and VERIFIED on every later sync: a mismatched index makes
+    ``{sig_target}_props`` one-row table) and VERIFIED on every later sync: a mismatched index makes
     ``element_at`` return NULLs that ``concat_ws`` silently drops, so
     band hashes collapse — that must be a loud ValueError, not a recall
     loss (r5 advice). Pre-props indexes (r4 stores) get their props

@@ -628,8 +628,8 @@ def incremental_keep(
     kept set is already near-dup-free at this threshold, and no new doc
     BRIDGES two kept docs (a bridge makes the full recompute retract one
     of the two previously-kept docs — an incremental pass cannot un-keep
-    history; it keeps both and drops the bridge, the standard streaming-
-    dedup divergence, exercised and documented in tests)."""
+    history; it keeps both and drops the bridge, the standard
+    incremental-dedup divergence, exercised and documented in tests)."""
     sig_new = minhash_signatures(batch, text_col, id_col, num_hashes, k, parallelism)
     if kept_sigs is not None:
         # COMPATIBILITY GATE (r5 advice): a stored signature table built

@@ -180,7 +180,7 @@ def filter_domains(
     broadcast LEFT_ANTI / LEFT_SEMI join for ``exact``, and is
     collected to the literal path for ``suffix`` (blocklists are
     curated-size by nature — never corpus-scale; the same
-    metadata-scale-collect contract as the ANN index layouts).  NULL
+    metadata-scale-collect contract as any driver-side list).  NULL
     domains never match a list, so ``block`` keeps them and ``allow``
     drops them (documented C4 convention: an unattributable page
     cannot clear an allow-list)."""
@@ -346,7 +346,7 @@ def cap_per_domain_incremental(
     ``domain_stats``).  Domains absent from the index have full quota.
 
     Documented divergence from the full recompute (standard for
-    streaming caps): a recompute over history ∪ batch re-draws the n
+    incremental caps): a recompute over history ∪ batch re-draws the n
     smallest hashes OVERALL and could evict stored docs in favor of
     smaller-hash batch docs; the incremental form never evicts — it
     fills remaining slots with the batch's smallest hashes.  Both are

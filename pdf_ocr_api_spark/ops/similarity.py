@@ -2,16 +2,18 @@
 
 * brute-force cosine top-k — the exactness baseline: dot product via
   ``aggregate(zip_with(...))`` (pure JVM expression, codegen'd), one
-  orderBy+limit (Spark plans TakeOrderedAndProject — no full sort).
-* LSH-bucketed ANN — the 100 TB path: signed-random-projection signatures
-  computed from driver-seeded hyperplanes (literal arrays broadcast into
-  the plan), bucket equality prunes the candidate set before the exact
-  cosine rerank; multiprobe = flip each signature bit once.
+  orderBy+limit (Spark plans TakeOrderedAndProject — no full sort);
+  ``brute_force_topk_batch`` answers many queries in one corpus scan.
+* LSH-bucketed ANN — signed-random-projection signatures computed from
+  driver-seeded hyperplanes (literal arrays in the plan), bucket
+  equality prunes the candidate set before the exact cosine rerank;
+  multiprobe = flip each signature bit once.
+* embedding near-duplicate pairs — an exact O(n²) self-join and the
+  banded-SRP blocked variant that verifies only candidate pairs.
 
-At scale the brute force is a full scan per query (fine for batch scoring
-of a handful of queries); the LSH variant turns it into a hash-partition
-lookup. An IVF variant would replace the hyperplanes with k-means
-centroids — same plan shape (bucket join + rerank).
+The brute force is a full scan per query (fine for batch scoring of a
+handful of queries); the LSH variant turns it into a filter on
+signature buckets over the same scan.
 """
 
 from __future__ import annotations
@@ -76,9 +78,8 @@ def brute_force_topk_batch(
     corpus against N seed/blocklist vectors, score against N probes):
     per-query ``brute_force_topk`` would scan the corpus N times; this
     scans once, and the only shuffle is the per-query top-k aggregation
-    on uniform query-id keys. At 100 TB with thousands of queries,
-    compose with the IVF/PQ indexes instead (probe per query); for the
-    tens-of-queries regime the broadcast product is the right plan."""
+    on uniform query-id keys. For the tens-of-queries regime the
+    broadcast product is the right plan."""
     from pyspark.sql import Window
 
     scored = emb.crossJoin(F.broadcast(queries)).select(
@@ -152,739 +153,6 @@ def lsh_topk(
     return brute_force_topk(cand, query_vec, k, id_col=id_col, vec_col=vec_col)
 
 
-def _sq_dist(col, center: list[float]):
-    c = F.array(*[F.lit(float(x)) for x in center])
-    return F.aggregate(F.zip_with(col, c, lambda x, y: (x - y) * (x - y)), F.lit(0.0), lambda a, v: a + v)
-
-
-def _fit_centroids_deterministic(
-    emb: DataFrame,
-    n_lists: int,
-    id_col: str,
-    vec_col: str,
-    seed: int,
-    sample_cap: int = 8192,
-    sample=None,
-) -> list[list[float]]:
-    """Partitioning-independent k-means fit: the training sample is the
-    ``sample_cap`` rows with the smallest xxhash64(id) — a VALUE-based
-    selection, identical for any physical layout — and Lloyd's runs
-    driver-side on numpy with seeded init (the shared ``_lloyd`` kernel).
-    At corpus scale the sample is one TakeOrdered scan; 8k ×
-    few-hundred dims fits any driver. ``sample``: a pre-collected numpy
-    sample to reuse (composed indexes fit both quantizers from ONE
-    collection — see ``ivfpq_index``)."""
-    x = sample if sample is not None else _pq_sample(emb, id_col, vec_col, sample_cap)
-    centers = _lloyd(x, n_lists, seed)
-    return [[float(v) for v in c] for c in centers]
-
-
-def ivf_index(
-    emb: DataFrame,
-    n_lists: int = 16,
-    vec_col: str = "embedding",
-    seed: int = 42,
-    id_col: str = "vec_id",
-    deterministic: bool = True,
-    sample=None,
-) -> tuple[DataFrame, list[list[float]]]:
-    """IVF (inverted-file) index: k-means coarse quantizer.
-
-    List assignment is a pure expression — per-centroid squared
-    distances via zip_with, argmin via array_position(array_min) — so
-    the assignment scan stays in codegen and parallelizes like any map.
-
-    Returns ``(emb + ivf_list column, centroids)``. At 100 TB the index
-    build samples the corpus for the fit and the assignment is one scan;
-    queries touch ``nprobe``/``n_lists`` of the data.
-
-    ``deterministic=True`` (default) fits on a value-hash-selected
-    sample with driver-side Lloyd's — centroids are identical for ANY
-    input partitioning. ``deterministic=False`` uses pyspark.ml
-    KMeans (distributed k-means||) whose seeded init is still
-    partition-order dependent; persist the centroids with the index in
-    that mode (they ARE the index metadata).
-    """
-    if deterministic:
-        centroids = _fit_centroids_deterministic(emb, n_lists, id_col, vec_col, seed, sample=sample)
-    else:
-        from pyspark.ml.clustering import KMeans
-        from pyspark.ml.functions import array_to_vector
-
-        fit_df = emb.select(array_to_vector(F.col(vec_col).cast("array<double>")).alias("features"))
-        model = KMeans(k=n_lists, seed=seed, maxIter=20).fit(fit_df)
-        centroids = [[float(x) for x in c] for c in model.clusterCenters()]
-
-    dists = F.array(*[_sq_dist(F.col(vec_col).cast("array<double>"), c) for c in centroids])
-    assigned = emb.withColumn(
-        "ivf_list", (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
-    )
-    return assigned, centroids
-
-
-def _write_centroids(spark, centroids: list[list[float]], target: str) -> None:
-    spark_centroids = spark.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
-        "list_id INT, centroid ARRAY<DOUBLE>",
-    )
-    from ..sources.io import write_table
-
-    write_table(spark_centroids, target, mode="create")
-
-
-def _read_centroids(spark, target: str) -> list[list[float]]:
-    from ..sources.io import read_table
-
-    rows = read_table(spark, target).orderBy("list_id").collect()
-    return [[float(x) for x in r.centroid] for r in rows]
-
-
-def _write_codebooks(spark, codebooks: list, target: str) -> None:
-    rows = [
-        (i, j, [float(x) for x in centroid])
-        for i, cb in enumerate(codebooks)
-        for j, centroid in enumerate(cb)
-    ]
-    meta = spark.createDataFrame(rows, "subspace INT, code INT, centroid ARRAY<DOUBLE>")
-    from ..sources.io import write_table
-
-    write_table(meta, target, mode="create")
-
-
-def _read_codebooks(spark, target: str) -> list:
-    from ..sources.io import read_table
-
-    rows = read_table(spark, target).orderBy("subspace", "code").collect()
-    m = max(r.subspace for r in rows) + 1
-    codebooks: list[list] = [[] for _ in range(m)]
-    for r in rows:
-        codebooks[r.subspace].append([float(x) for x in r.centroid])
-    return codebooks
-
-
-def save_ivf_index(spark, indexed: DataFrame, centroids: list[list[float]], target: str) -> None:
-    """Persist an IVF index: the assigned vectors (partitioned by
-    ivf_list so a probe prunes whole files/partitions) + the centroids
-    as index METADATA (they ARE the index — reloading must never refit,
-    or assignments and queries would disagree)."""
-    from ..sources.io import write_table
-
-    write_table(indexed, f"{target}_vectors", mode="create", partition_by=["ivf_list"])
-    _write_centroids(spark, centroids, f"{target}_centroids")
-
-
-def load_ivf_index(spark, target: str) -> tuple[DataFrame, list[list[float]]]:
-    """Load a persisted IVF index; centroids come back in list_id order."""
-    from ..sources.io import read_table
-
-    indexed = read_table(spark, f"{target}_vectors")
-    return indexed, _read_centroids(spark, f"{target}_centroids")
-
-
-def ivf_topk(
-    indexed: DataFrame,
-    centroids: list[list[float]],
-    query_vec: list[float],
-    k: int = 10,
-    nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """ANN query over an IVF index: probe the ``nprobe`` nearest lists,
-    exact cosine rerank inside them (driver computes the probe set)."""
-    q = query_vec
-    d2 = [sum((float(a) - float(b)) ** 2 for a, b in zip(q, c)) for c in centroids]
-    probes = sorted(range(len(centroids)), key=lambda i: d2[i])[:nprobe]
-    cand = indexed.filter(F.col("ivf_list").isin(probes))
-    return brute_force_topk(cand, q, k, id_col=id_col, vec_col=vec_col)
-
-
-# ---------------------------------------------------------------------------
-# Product quantization (PQ) — the memory-compressed ANN path: vectors are
-# stored as m uint8 codes (one k-means codebook per subspace), queries score
-# rows via per-subspace lookup tables folded into the plan as literal
-# arrays (pure JVM expressions). At 100 TB this shrinks the index ~dim*4/m
-# bytes→m bytes per vector and turns scoring into m array lookups.
-# ---------------------------------------------------------------------------
-
-
-def _pq_sample(emb: DataFrame, id_col: str, vec_col: str, sample_cap: int = 8192):
-    """Value-hash-selected training sample (partitioning-independent —
-    the same selection rule as the IVF fit)."""
-    import numpy as np
-
-    rows = (
-        emb.select(F.col(vec_col).alias("v"), F.xxhash64(F.col(id_col)).alias("h"))
-        .orderBy("h")
-        .limit(sample_cap)
-        .collect()
-    )
-    if not rows:
-        raise ValueError("no vectors to index (empty input)")
-    return np.array([list(r.v) for r in rows], dtype=np.float64)
-
-
-def _lloyd(x, k, seed, iters=25):
-    import numpy as np
-
-    rng = np.random.default_rng(seed)
-    centers = x[rng.choice(len(x), size=min(k, len(x)), replace=False)]
-    x_sq = (x * x).sum(axis=1)[:, None]
-    for _ in range(iters):
-        d2 = x_sq + (centers * centers).sum(axis=1)[None, :] - 2.0 * (x @ centers.T)
-        assign = d2.argmin(axis=1)
-        new = np.array(
-            [x[assign == j].mean(axis=0) if (assign == j).any() else centers[j] for j in range(len(centers))]
-        )
-        if np.allclose(new, centers):
-            break
-        centers = new
-    return centers
-
-
-def pq_index(
-    emb: DataFrame,
-    m: int = 4,
-    n_centroids: int = 256,
-    normalize: bool = True,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-    sample=None,
-    keep_cols: tuple = (),
-) -> tuple[DataFrame, list]:
-    """Build a PQ index: (codes_df(id, codes ARRAY<INT>), codebooks).
-
-    The dim must divide by ``m`` subspaces; each subspace gets a
-    ``n_centroids``-entry k-means codebook fitted driver-side on the
-    deterministic value-hash sample (identical for any partitioning).
-    ``normalize=True`` L2-normalizes vectors before coding so squared-L2
-    ranking is monotone in cosine (the corpus convention here). Encoding
-    is a vectorized Arrow-batched pandas UDF (a 256-way argmin per
-    subspace is numpy work, not codegen work); QUERY scoring is pure
-    expressions (see ``pq_topk``)."""
-    import numpy as np
-
-    x = sample if sample is not None else _pq_sample(emb, id_col, vec_col)
-    dim = x.shape[1]
-    if dim % m != 0:
-        raise ValueError(f"dim={dim} must divide by m={m}")
-    dsub = dim // m
-    if normalize:
-        x = x / np.maximum(np.linalg.norm(x, axis=1)[:, None], 1e-12)
-    codebooks = [
-        _lloyd(x[:, i * dsub : (i + 1) * dsub], n_centroids, seed + i) for i in range(m)
-    ]
-    cb = [np.ascontiguousarray(c) for c in codebooks]
-
-    @F.pandas_udf("array<integer>")
-    def encode(col):
-        import pandas as pd
-
-        vecs = np.array(col.tolist(), dtype=np.float64)
-        if normalize:
-            vecs = vecs / np.maximum(np.linalg.norm(vecs, axis=1)[:, None], 1e-12)
-        codes = np.empty((len(vecs), m), dtype=np.int32)
-        for i in range(m):
-            sub = vecs[:, i * dsub : (i + 1) * dsub]
-            d2 = (
-                (sub * sub).sum(axis=1)[:, None]
-                + (cb[i] * cb[i]).sum(axis=1)[None, :]
-                - 2.0 * (sub @ cb[i].T)
-            )
-            codes[:, i] = d2.argmin(axis=1)
-        return pd.Series(list(codes))
-
-    codes_df = emb.select(
-        F.col(id_col).alias("id"), *keep_cols, encode(F.col(vec_col)).alias("codes")
-    )
-    return codes_df, [c.tolist() for c in codebooks]
-
-
-def save_pq_index(spark, codes_df: DataFrame, codebooks: list, target: str) -> None:
-    """Persist a PQ index: codes table + codebooks as index metadata
-    (a reload must never refit — codes and queries would disagree)."""
-    from ..sources.io import write_table
-
-    write_table(codes_df, f"{target}_codes", mode="create")
-    _write_codebooks(spark, codebooks, f"{target}_codebooks")
-
-
-def load_pq_index(spark, target: str) -> tuple[DataFrame, list]:
-    from ..sources.io import read_table
-
-    codes = read_table(spark, f"{target}_codes")
-    return codes, _read_codebooks(spark, f"{target}_codebooks")
-
-
-def pq_topk(
-    codes_df: DataFrame,
-    codebooks: list,
-    query_vec: list[float],
-    k: int = 10,
-    normalize: bool = True,
-    emb: DataFrame | None = None,
-    refine: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """ANN query over a PQ index: the driver folds the query into
-    per-subspace lookup tables (LUT[i][c] = ‖q_i − codebook_i[c]‖²) and
-    the score is ``Σ element_at(LUT_i, code_i + 1)`` — m literal-array
-    lookups per row, whole-stage-codegen friendly, one
-    TakeOrderedAndProject. With ``emb`` given, the LUT top ``k·refine``
-    candidates are exactly reranked by cosine (asymmetric-distance
-    refinement, the standard PQ recipe)."""
-    import numpy as np
-
-    q = np.asarray(query_vec, dtype=np.float64)
-    if normalize:
-        q = q / max(float(np.linalg.norm(q)), 1e-12)
-    m = len(codebooks)
-    dsub = len(q) // m
-    dist = None
-    for i in range(m):
-        cbi = np.asarray(codebooks[i])
-        qi = q[i * dsub : (i + 1) * dsub]
-        lut = ((cbi - qi[None, :]) ** 2).sum(axis=1)
-        term = F.element_at(
-            F.array(*[F.lit(float(v)) for v in lut]),
-            F.element_at("codes", i + 1) + 1,
-        )
-        dist = term if dist is None else dist + term
-    scored = codes_df.select("id", dist.alias("pq_dist"))
-    top = scored.orderBy(F.asc("pq_dist"), F.asc("id")).limit(k * refine if emb is not None else k)
-    if emb is None:
-        return top
-    # alias the candidate ids: an unqualified F.col("id") would be
-    # ambiguous (or trivially self-referential) whenever emb itself
-    # carries an 'id' column
-    top_ids = top.select(F.col("id").alias("_pq_id"))
-    cand = emb.join(top_ids, emb[id_col] == top_ids["_pq_id"], "left_semi")
-    return brute_force_topk(cand, [float(v) for v in query_vec], k, id_col=id_col, vec_col=vec_col)
-
-
-def ivfpq_index(
-    emb: DataFrame,
-    n_lists: int = 16,
-    m: int = 4,
-    n_centroids: int = 256,
-    normalize: bool = True,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-    residual: bool = False,
-) -> tuple[DataFrame, list[list[float]], list]:
-    """IVF×PQ composition — the standard disk-scale ANN layout (IVFADC
-    shape: inverted lists of compressed codes): the IVF coarse quantizer
-    buckets vectors into ``n_lists`` lists, PQ compresses each vector to
-    ``m`` codes. Returns ``(codes(id, ivf_list, codes), centroids,
-    codebooks)``.
-
-    At 100 TB the index table is persisted partitioned by ``ivf_list``
-    (as ``save_ivfpq_index`` does) so a probe prunes whole files; the
-    codes column is ~m bytes/vector, so a probe's scan is RAM-speed even
-    for billion-vector lists. Both quantizers fit on ONE deterministic
-    value-hash sample (one TakeOrdered collection, identical for any
-    input partitioning), and the index is built in ONE corpus pass: the
-    coarse assignment expression and the PQ encoder run in the same
-    projection — no self-join, no second scan.
-
-    ``residual=True`` (pass explicitly; kept off by default for on-disk
-    compatibility with plain-PQ scoring) switches to true IVFADC: codes
-    quantize the RESIDUAL ``v − centroid[list]`` (in L2-normalized
-    space), which is far more compressible than raw vectors because each
-    list's residuals are centered at the origin; queries then build one
-    LUT per probed list from ``(q − centroid)``. Measured on the test
-    corpus: higher recall at identical code budget."""
-    x = _pq_sample(emb, id_col, vec_col)
-    if not residual:
-        assigned, centroids = ivf_index(
-            emb, n_lists, vec_col=vec_col, seed=seed, id_col=id_col, sample=x
-        )
-        codes_df, codebooks = pq_index(
-            assigned, m, n_centroids, normalize, id_col=id_col, vec_col=vec_col,
-            seed=seed, sample=x, keep_cols=("ivf_list",),
-        )
-        return codes_df, centroids, codebooks
-
-    import numpy as np
-
-    # IVFADC in normalized space: coarse fit + assignment + residuals +
-    # codebooks all over L2-normalized vectors
-    xn = x / np.maximum(np.linalg.norm(x, axis=1)[:, None], 1e-12) if normalize else x
-    centers = _lloyd(xn, n_lists, seed)
-    centroids = [[float(v) for v in c] for c in centers]
-    # sample residuals for the codebook fit
-    d2 = (
-        (xn * xn).sum(axis=1)[:, None]
-        + (centers * centers).sum(axis=1)[None, :]
-        - 2.0 * (xn @ centers.T)
-    )
-    res = xn - centers[d2.argmin(axis=1)]
-    dim = xn.shape[1]
-    if dim % m != 0:
-        raise ValueError(f"dim={dim} must divide by m={m}")
-    dsub = dim // m
-    codebooks_np = [
-        np.ascontiguousarray(_lloyd(res[:, i * dsub : (i + 1) * dsub], n_centroids, seed + i))
-        for i in range(m)
-    ]
-    # the ENCODE pass is the shared fixed-quantizer encoder — the same
-    # function ivfpq_append runs, so appended codes are byte-identical
-    # to build-time codes by construction
-    codebooks_l = [c.tolist() for c in codebooks_np]
-    codes_df = _ivfpq_encode(emb, centroids, codebooks_l, normalize, True, id_col, vec_col)
-    return codes_df, centroids, codebooks_l
-
-
-def _ivfpq_encode(
-    emb: DataFrame,
-    centroids: list[list[float]],
-    codebooks: list,
-    normalize: bool,
-    residual: bool,
-    id_col: str,
-    vec_col: str,
-    with_dist: bool = False,
-) -> DataFrame:
-    """One-scan IVF×PQ encoder against FIXED quantizers — the shared
-    backend of the index builds AND the incremental append path
-    (append-encoded codes must be identical to build-encoded ones, so
-    each build path's exact computation is reused). Returns (id,
-    ivf_list, codes[, cdist]); ``cdist`` is the vector's distance to its
-    assigned coarse centroid — the drift signal ``ivfpq_append``
-    accounts with.
-
-    Space contract (mirrors the build paths EXACTLY, down to the
-    floating-point evaluation order): residual indexes assign AND
-    encode in L2-normalized space with the same numpy kernel the
-    residual build runs. Raw indexes assign in RAW space with the SAME
-    codegen expression ``ivf_index`` assigns with at build time (a
-    numpy reimplementation can disagree on near-tie distances and land
-    a vector in a different list than the build would — the r5 review
-    finding), and PQ-encode the normalized full vector with
-    ``pq_index``'s numpy formula."""
-    import numpy as np
-
-    cents = np.ascontiguousarray(np.asarray(centroids, dtype=np.float64))
-    cb = [np.ascontiguousarray(np.asarray(c, dtype=np.float64)) for c in codebooks]
-    m = len(cb)
-    dsub = cents.shape[1] // m
-
-    if not residual:
-        # ivf_list + distance via the build's own expression (ivf_index)
-        vd = F.col(vec_col).cast("array<double>")
-        dists = F.array(*[_sq_dist(vd, c) for c in centroids])
-        sel = [
-            F.col(id_col).alias("id"),
-            F.col(vec_col).alias("_v"),
-            (F.array_position(dists, F.array_min(dists)) - 1).cast("int").alias("ivf_list"),
-        ]
-        if with_dist:
-            sel.append(F.sqrt(F.greatest(F.array_min(dists), F.lit(0.0))).alias("cdist"))
-        assigned = emb.select(*sel)
-
-        @F.pandas_udf("array<integer>")
-        def pqcodes(col):
-            import pandas as pd
-
-            vecs = np.array(col.tolist(), dtype=np.float64)
-            if normalize:
-                vecs = vecs / np.maximum(np.linalg.norm(vecs, axis=1)[:, None], 1e-12)
-            codes_ = np.empty((len(vecs), m), dtype=np.int32)
-            for i in range(m):
-                sub = vecs[:, i * dsub : (i + 1) * dsub]
-                sd = (
-                    (sub * sub).sum(axis=1)[:, None]
-                    + (cb[i] * cb[i]).sum(axis=1)[None, :]
-                    - 2.0 * (sub @ cb[i].T)
-                )
-                codes_[:, i] = sd.argmin(axis=1)
-            return pd.Series(list(codes_))
-
-        cols = ["id", "ivf_list", pqcodes(F.col("_v")).alias("codes")]
-        if with_dist:
-            cols.append("cdist")
-        return assigned.select(*cols)
-
-    @F.pandas_udf("struct<ivf_list: integer, codes: array<integer>, cdist: double>")
-    def encode(col):
-        import pandas as pd
-
-        vecs = np.array(col.tolist(), dtype=np.float64)
-        vn = (
-            vecs / np.maximum(np.linalg.norm(vecs, axis=1)[:, None], 1e-12)
-            if normalize
-            else vecs
-        )
-        dd = (
-            (vn * vn).sum(axis=1)[:, None]
-            + (cents * cents).sum(axis=1)[None, :]
-            - 2.0 * (vn @ cents.T)
-        )
-        lists = dd.argmin(axis=1)
-        cdist = np.sqrt(np.maximum(dd[np.arange(len(vecs)), lists], 0.0))
-        base = vn - cents[lists]
-        codes_ = np.empty((len(vecs), m), dtype=np.int32)
-        for i in range(m):
-            sub = base[:, i * dsub : (i + 1) * dsub]
-            sd = (
-                (sub * sub).sum(axis=1)[:, None]
-                + (cb[i] * cb[i]).sum(axis=1)[None, :]
-                - 2.0 * (sub @ cb[i].T)
-            )
-            codes_[:, i] = sd.argmin(axis=1)
-        return pd.DataFrame(
-            {"ivf_list": lists.astype(np.int32), "codes": list(codes_), "cdist": cdist}
-        )
-
-    enc = emb.select(F.col(id_col).alias("id"), encode(F.col(vec_col)).alias("_e"))
-    cols = [
-        "id",
-        F.col("_e.ivf_list").alias("ivf_list"),
-        F.col("_e.codes").alias("codes"),
-    ]
-    if with_dist:
-        cols.append(F.col("_e.cdist").alias("cdist"))
-    return enc.select(*cols)
-
-
-_DRIFT_SCHEMA = "batch STRING, n_vectors LONG, mean_dist DOUBLE"
-
-
-def save_ivfpq_index(
-    spark,
-    codes: DataFrame,
-    centroids: list[list[float]],
-    codebooks: list,
-    target: str,
-    residual: bool = False,
-    emb: DataFrame | None = None,
-    normalize: bool = True,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Persist an IVF×PQ index: codes partitioned by ivf_list (probe =
-    partition pruning) + both quantizers as metadata (reload must never
-    refit) + an index-properties table so a loaded index knows which
-    scoring scheme (raw vs residual/IVFADC) its codes were built for.
-
-    Pass ``emb`` (the vectors the codes were built from) to also record
-    the BUILD-TIME assignment-drift baseline (mean distance to assigned
-    centroid) in a ``{target}_drift`` table — ``ivfpq_append`` compares
-    each appended batch against it so an operator knows when the frozen
-    quantizers have drifted off the data and a rebuild is due. The
-    baseline is estimated on the deterministic value-hash SAMPLE
-    (``_pq_sample`` — the same rows the quantizers were fitted on):
-    re-encoding the whole corpus just to average a distance would
-    double the build cost at scale (the r5 review finding), and a batch
-    mean vs a sample mean are estimates of the same expectation.
-
-    ``normalize`` is PERSISTED in the props table alongside
-    ``residual`` and read back by ``ivfpq_append`` — a
-    normalize-mismatched append would silently emit divergent codes,
-    the same silent-failure class the signature-index props guard
-    closes for MinHash."""
-    import numpy as np
-
-    from ..sources.io import write_table
-
-    write_table(codes, f"{target}_codes", mode="create", partition_by=["ivf_list"])
-    _write_centroids(spark, centroids, f"{target}_centroids")
-    _write_codebooks(spark, codebooks, f"{target}_codebooks")
-    props = spark.createDataFrame(
-        [("residual", str(bool(residual))), ("normalize", str(bool(normalize)))],
-        "key STRING, value STRING",
-    )
-    write_table(props, f"{target}_props", mode="create")
-    if emb is not None:
-        x = _pq_sample(emb, id_col, vec_col)
-        basis = (
-            x / np.maximum(np.linalg.norm(x, axis=1)[:, None], 1e-12)
-            if (residual and normalize)
-            else x
-        )
-        cents = np.asarray(centroids, dtype=np.float64)
-        dd = (
-            (basis * basis).sum(axis=1)[:, None]
-            + (cents * cents).sum(axis=1)[None, :]
-            - 2.0 * (basis @ cents.T)
-        )
-        mean_dist = float(np.sqrt(np.maximum(dd.min(axis=1), 0.0)).mean())
-        write_table(
-            spark.createDataFrame([("build", int(len(x)), mean_dist)], _DRIFT_SCHEMA),
-            f"{target}_drift",
-            mode="create",
-        )
-
-
-def ivfpq_append(
-    spark,
-    target: str,
-    new_emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    batch: str = "append",
-) -> dict:
-    """Incremental IVF×PQ maintenance — the index-side mirror of the
-    corpus' grow-only story (``corpus.clean_corpus_incremental``): new
-    vectors are assigned to the EXISTING coarse centroids, encoded with
-    the EXISTING codebooks (one shared encoder — append codes are
-    byte-identical to what a build with these quantizers would emit),
-    and appended to the persisted ``ivf_list``-partitioned layout; no
-    rebuild, no refit, probes prune exactly as before.
-
-    Frozen quantizers drift off a shifting corpus silently — recall
-    decays with no error anywhere. So every append records the batch's
-    mean assigned-centroid distance next to the build-time baseline
-    (``{target}_drift``) and returns ``drift_ratio`` (batch mean /
-    build mean): an operator alerts on it (≳1.2-1.5 is the usual
-    rebuild trigger) instead of discovering recall loss downstream.
-    ``drift_ratio`` is None for pre-r5 indexes saved without a
-    baseline, and for an EMPTY batch (no vectors → no batch mean).
-
-    The scoring scheme (``residual``) and vector normalization are read
-    from the index's props table, never from the caller — a
-    normalize-mismatched append would silently emit divergent codes
-    (pre-r5 indexes without a ``normalize`` prop load as True, the
-    build default)."""
-    from ..sources.io import read_table, table_exists, write_table
-
-    _, centroids, codebooks, props = load_ivfpq_index(spark, target)
-    enc = _ivfpq_encode(
-        new_emb, centroids, codebooks, props["normalize"], props["residual"],
-        id_col, vec_col, with_dist=True,
-    ).localCheckpoint(eager=True)  # one encode pass feeds stats AND the write
-    stats = enc.agg(F.count("*").alias("n"), F.avg("cdist").alias("d")).collect()[0]
-    write_table(
-        enc.drop("cdist"), f"{target}_codes", mode="append", partition_by=["ivf_list"]
-    )
-    batch_mean = float(stats.d) if stats.d is not None else None
-    row = (batch, int(stats.n), batch_mean if batch_mean is not None else 0.0)
-    drift_target = f"{target}_drift"
-    if table_exists(spark, drift_target):
-        write_table(spark.createDataFrame([row], _DRIFT_SCHEMA), drift_target, mode="append")
-        base = [
-            r.mean_dist
-            for r in read_table(spark, drift_target).filter(F.col("batch") == "build").collect()
-        ]
-        build_mean = base[0] if base else None
-    else:
-        write_table(spark.createDataFrame([row], _DRIFT_SCHEMA), drift_target, mode="create")
-        build_mean = None
-    return {
-        "appended": int(stats.n),
-        "mean_dist": batch_mean if batch_mean is not None else 0.0,
-        "build_mean_dist": build_mean,
-        "drift_ratio": (
-            batch_mean / build_mean if (build_mean and batch_mean is not None) else None
-        ),
-    }
-
-
-def load_ivfpq_index(
-    spark, target: str
-) -> tuple[DataFrame, list[list[float]], list, dict]:
-    """Returns (codes, centroids, codebooks, props); ``props['residual']``
-    tells ``ivfpq_topk`` which scoring scheme the codes require (older
-    indexes without a props table load as residual=False), and
-    ``props['normalize']`` (r5) tells ``ivfpq_append`` which space the
-    codes were built in (pre-r5 indexes load as True, the build
-    default)."""
-    from ..sources.io import read_table
-
-    codes = read_table(spark, f"{target}_codes")
-    try:
-        props = {r.key: r.value for r in read_table(spark, f"{target}_props").collect()}
-    except Exception:
-        props = {"residual": "False"}
-    props["residual"] = props.get("residual", "False") == "True"
-    props["normalize"] = props.get("normalize", "True") == "True"
-    return (
-        codes,
-        _read_centroids(spark, f"{target}_centroids"),
-        _read_codebooks(spark, f"{target}_codebooks"),
-        props,
-    )
-
-
-def ivfpq_topk(
-    codes: DataFrame,
-    centroids: list[list[float]],
-    codebooks: list,
-    query_vec: list[float],
-    k: int = 10,
-    nprobe: int = 4,
-    normalize: bool = True,
-    emb: DataFrame | None = None,
-    refine: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    residual: bool = False,
-) -> DataFrame:
-    """Query an IVF×PQ index: probe the ``nprobe`` nearest lists (driver
-    picks the probe set → partition pruning on the persisted index),
-    LUT-score the surviving codes in codegen, exact-rerank the top
-    ``k·refine`` against ``emb`` when given (asymmetric-distance
-    refinement). Plan shape: pruned scan → literal-array lookups →
-    TakeOrderedAndProject → (optional) semi-join rerank.
-
-    ``residual`` must match how the index was built: residual indexes
-    score each probed list with its OWN LUTs built from
-    ``(q − centroid_list)`` — still literal arrays in codegen, one
-    when-branch per probed list (nprobe is small)."""
-    import numpy as np
-
-    q = [float(v) for v in query_vec]
-    if not residual:
-        # probe selection uses the RAW query: the coarse quantizer was
-        # fitted and assigned on raw vectors (ivf_index), so probing must
-        # measure in the same space — PQ's normalize applies only inside
-        # pq_topk's LUTs
-        d2 = [sum((a - b) ** 2 for a, b in zip(q, c)) for c in centroids]
-        probes = sorted(range(len(centroids)), key=lambda i: d2[i])[:nprobe]
-        cand = codes.filter(F.col("ivf_list").isin(probes)).drop("ivf_list")
-        return pq_topk(
-            cand, codebooks, query_vec, k=k, normalize=normalize, emb=emb,
-            refine=refine, id_col=id_col, vec_col=vec_col,
-        )
-
-    qn = np.asarray(q, dtype=np.float64)
-    if normalize:
-        qn = qn / max(float(np.linalg.norm(qn)), 1e-12)
-    cents = np.asarray(centroids, dtype=np.float64)
-    d2 = ((cents - qn[None, :]) ** 2).sum(axis=1)
-    probes = [int(i) for i in np.argsort(d2)[:nprobe]]
-    m = len(codebooks)
-    dsub = len(qn) // m
-
-    dist = None
-    for li in probes:
-        rq = qn - cents[li]
-        term = None
-        for i in range(m):
-            cbi = np.asarray(codebooks[i])
-            lut = ((cbi - rq[i * dsub : (i + 1) * dsub][None, :]) ** 2).sum(axis=1)
-            t = F.element_at(
-                F.array(*[F.lit(float(v)) for v in lut]),
-                F.element_at("codes", i + 1) + 1,
-            )
-            term = t if term is None else term + t
-        branch = F.when(F.col("ivf_list") == li, term)
-        dist = branch if dist is None else dist.when(F.col("ivf_list") == li, term)
-
-    scored = codes.filter(F.col("ivf_list").isin(probes)).select(
-        "id", dist.alias("pq_dist")
-    )
-    top = scored.orderBy(F.asc("pq_dist"), F.asc("id")).limit(k * refine if emb is not None else k)
-    if emb is None:
-        return top
-    top_ids = top.select(F.col("id").alias("_pq_id"))
-    cand = emb.join(top_ids, emb[id_col] == top_ids["_pq_id"], "left_semi")
-    return brute_force_topk(cand, q, k, id_col=id_col, vec_col=vec_col)
-
-
 def cosine_to_query_expr(vec_col, qvec_col):
     """cosine(vec, query) between two array columns WITH the zero-query-
     norm guard ``cosine_to`` applies driver-side (``or 1.0``): an
@@ -896,168 +164,6 @@ def cosine_to_query_expr(vec_col, qvec_col):
     qd = qvec_col.cast("array<double>")
     qn = _norm(qd)
     return _dot(vd, qd) / (_norm(vd) * F.when(qn == 0.0, F.lit(1.0)).otherwise(qn))
-
-
-def _collect_queries(queries: DataFrame, qid_col: str, qvec_col: str) -> list:
-    """Collect the (small) query table driver-side — queries are index
-    METADATA scale (seed/blocklist vectors, thousands at most), the same
-    bounded-collect class as centroids/codebooks."""
-    return [(r[0], [float(v) for v in r[1]]) for r in queries.select(qid_col, qvec_col).collect()]
-
-
-def _per_query_topk(scored: DataFrame, k: int, order_cols) -> DataFrame:
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(*order_cols)
-    return (
-        scored.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= k)
-        .drop("_rk")
-    )
-
-
-def ivf_topk_batch(
-    indexed: DataFrame,
-    centroids: list[list[float]],
-    queries: DataFrame,
-    k: int = 10,
-    nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    qid_col: str = "query_id",
-    qvec_col: str = "query_vec",
-) -> DataFrame:
-    """Batched IVF ANN: ONE pruned scan answers every query.
-
-    Driver computes each query's ``nprobe`` probe lists (same selection
-    code as ``ivf_topk`` — per-query equality asserted in tests), the
-    (query_id, ivf_list) probe pairs broadcast-join the index (so a
-    vector row is scored ONLY against queries probing its list — on the
-    persisted ivf_list-partitioned layout the union filter prunes whole
-    partitions), and a per-query window keeps the top k by
-    (round(cosine, 6) desc, id asc) — the single-query rank order.
-    Returns (query_id, id, cosine)."""
-    qs = _collect_queries(queries, qid_col, qvec_col)
-    probe_rows = []
-    for qid, q in qs:
-        d2 = [sum((float(a) - float(b)) ** 2 for a, b in zip(q, c)) for c in centroids]
-        for li in sorted(range(len(centroids)), key=lambda i: d2[i])[:nprobe]:
-            probe_rows.append((qid, int(li)))
-    spark = indexed.sparkSession
-    qid_type = queries.schema[qid_col].dataType.simpleString()
-    probes = spark.createDataFrame(probe_rows, f"query_id {qid_type}, ivf_list INT")
-    all_lists = sorted({li for _, li in probe_rows})
-    qv = queries.select(F.col(qid_col).alias("query_id"), F.col(qvec_col).alias("_qv"))
-    scored = (
-        indexed.filter(F.col("ivf_list").isin(all_lists))
-        .join(F.broadcast(probes), "ivf_list")
-        .join(F.broadcast(qv), "query_id")
-        .select(
-            "query_id",
-            F.col(id_col).alias("id"),
-            F.round(cosine_to_query_expr(F.col(vec_col), F.col("_qv")), 6).alias("cosine"),
-        )
-    )
-    return _per_query_topk(scored, k, [F.desc("cosine"), F.asc("id")])
-
-
-def ivfpq_topk_batch(
-    codes: DataFrame,
-    centroids: list[list[float]],
-    codebooks: list,
-    queries: DataFrame,
-    k: int = 10,
-    nprobe: int = 4,
-    normalize: bool = True,
-    emb: DataFrame | None = None,
-    refine: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    qid_col: str = "query_id",
-    qvec_col: str = "query_vec",
-    residual: bool = False,
-) -> DataFrame:
-    """Batched IVF×PQ ANN — the training-pipeline shape (dedupe/score a
-    corpus against THOUSANDS of seed or blocklist vectors) in ONE pruned
-    scan of the code table.
-
-    Single-query ``ivfpq_topk`` folds the query's LUTs into the plan as
-    literal arrays — perfect for one query, but N queries would need N
-    plans (N scans) or an N·m·256-literal plan. Here the LUTs live in a
-    broadcast TABLE instead: one row per (query, probed list) carrying
-    that pair's m×n_centroids LUT (for residual/IVFADC indexes the LUT
-    is built from ``q − centroid[list]``, per list; raw indexes reuse
-    the query's single LUT across its probed lists), the broadcast join
-    attaches them to the pruned code rows, and the score is m
-    column-to-column array lookups — no literals, plan size O(m), any
-    query count. Per-query window top-k by (pq_dist asc, id asc), then
-    the optional exact cosine rerank of each query's top ``k·refine``
-    (round 6, id tie-break — the single-query rank order exactly;
-    per-query equality with ``ivfpq_topk`` asserted in tests).
-
-    Probe selection mirrors each mode of ``ivfpq_topk`` verbatim (raw
-    probes measure in RAW space; residual probes in normalized space)."""
-    import numpy as np
-
-    qs = _collect_queries(queries, qid_col, qvec_col)
-    cents = np.asarray(centroids, dtype=np.float64)
-    m = len(codebooks)
-    dsub = cents.shape[1] // m
-    cbs = [np.ascontiguousarray(cb, dtype=np.float64) for cb in codebooks]
-
-    def _luts_for(rq):
-        return [
-            ((cbs[i] - rq[i * dsub : (i + 1) * dsub][None, :]) ** 2).sum(axis=1).tolist()
-            for i in range(m)
-        ]
-
-    lut_rows = []
-    for qid, q in qs:
-        qn = np.asarray(q, dtype=np.float64)
-        if normalize:
-            qn = qn / max(float(np.linalg.norm(qn)), 1e-12)
-        if residual:
-            d2 = ((cents - qn[None, :]) ** 2).sum(axis=1)
-            for li in (int(i) for i in np.argsort(d2)[:nprobe]):
-                lut_rows.append((qid, li, _luts_for(qn - cents[li])))
-        else:
-            d2r = [sum((float(a) - float(b)) ** 2 for a, b in zip(q, c)) for c in centroids]
-            probes = sorted(range(len(centroids)), key=lambda i: d2r[i])[:nprobe]
-            lut = _luts_for(qn)
-            for li in probes:
-                lut_rows.append((qid, int(li), lut))
-
-    spark = codes.sparkSession
-    qid_type = queries.schema[qid_col].dataType.simpleString()
-    luts = spark.createDataFrame(
-        lut_rows, f"query_id {qid_type}, ivf_list INT, lut ARRAY<ARRAY<DOUBLE>>"
-    )
-    all_lists = sorted({li for _, li, _ in lut_rows})
-
-    dist = None
-    for i in range(m):
-        t = F.element_at(F.element_at("lut", i + 1), F.element_at("codes", i + 1) + 1)
-        dist = t if dist is None else dist + t
-    scored = (
-        codes.filter(F.col("ivf_list").isin(all_lists))
-        .join(F.broadcast(luts), "ivf_list")
-        .select("query_id", "id", dist.alias("pq_dist"))
-    )
-    top = _per_query_topk(
-        scored, k * refine if emb is not None else k, [F.asc("pq_dist"), F.asc("id")]
-    )
-    if emb is None:
-        return top
-    qv = queries.select(F.col(qid_col).alias("query_id"), F.col(qvec_col).alias("_qv"))
-    cand = top.select("query_id", "id").join(
-        emb.select(F.col(id_col).alias("id"), F.col(vec_col).alias("_v")), "id"
-    )
-    rer = cand.join(F.broadcast(qv), "query_id").select(
-        "query_id",
-        "id",
-        F.round(cosine_to_query_expr(F.col("_v"), F.col("_qv")), 6).alias("cosine"),
-    )
-    return _per_query_topk(rer, k, [F.desc("cosine"), F.asc("id")])
 
 
 def cosine_pair_expr(a, b):

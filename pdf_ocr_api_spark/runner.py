@@ -496,13 +496,11 @@ def _write_report(spark, args, corpus_target) -> dict:
 def _show_runs(args) -> int:
     """The 100 TB operator's alert path as ONE CLI call (VERDICT r4 #7):
     read the store's ``runs`` table (written by every --clean-corpus /
-    --clean-incremental job and the streaming job via ``corpus.log_run``)
-    and print a JSON summary — per-mode run counts, rows kept, and the
-    dropped-bucket recall-loss totals. ``log_run`` is at-least-once
-    (replayed streaming micro-batches append a second row under the same
-    run id), so rows are de-duplicated on (mode, run_id) first. The runs
-    table is one row per JOB — operator metadata scale, safe to
-    aggregate driver-side."""
+    --clean-incremental job via ``corpus.log_run``) and print a JSON
+    summary — per-mode run counts, rows kept, and the dropped-bucket
+    recall-loss totals. Rows are de-duplicated on (mode, run_id)
+    first. The runs table is one row per JOB — operator metadata
+    scale, safe to aggregate driver-side."""
     from pyspark.sql import functions as F  # noqa: N812
 
     from .sources.io import read_table, sub_target, table_exists

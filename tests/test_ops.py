@@ -214,25 +214,6 @@ def test_multimodal_decode_is_stub():
         multimodal.decode_image(b"not an image")
 
 
-def test_ivf_ann(emb, spark):
-    df, vecs = emb
-    indexed, centroids = similarity.ivf_index(df, n_lists=4)
-    assert len(centroids) == 4
-    # deterministic mode: identical centroids/assignments for ANY input
-    # partitioning (value-hash sample + driver-side Lloyd's)
-    a1 = indexed.orderBy("vec_id").select("ivf_list").toPandas().ivf_list.tolist()
-    a2 = similarity.ivf_index(df.repartition(7), n_lists=4)[0].orderBy("vec_id").select("ivf_list").toPandas().ivf_list.tolist()
-    assert a1 == a2
-    assert set(a1) <= {0, 1, 2, 3}
-
-    q = [float(x) for x in vecs[0]]
-    got = similarity.ivf_topk(indexed.filter(F.col("vec_id") != 0), centroids, q, k=5, nprobe=2)
-    ids = [r.id for r in got.collect()]
-    assert 1 in ids  # the planted near neighbor lives in the probed list
-    brute = {r.id for r in similarity.brute_force_topk(df.filter(F.col("vec_id") != 0), q, k=5).collect()}
-    assert len(brute & set(ids)) >= 2
-
-
 def test_embedding_near_dup(emb, spark):
     df, vecs = emb
     exact = similarity.embedding_near_pairs_exact(df, threshold=0.95)
@@ -376,33 +357,6 @@ def test_connected_components_vs_union_find(spark):
     assert got == want
 
 
-def test_ivf_index_save_load_roundtrip(emb, spark, tmp_path):
-    """Persisted IVF index must reload to identical assignments and
-    centroids (never refit), and queries over the loaded index must
-    equal queries over the in-memory one. The vectors table is
-    partitioned by ivf_list so a probe prunes whole partitions."""
-    df, vecs = emb
-    indexed, centroids = similarity.ivf_index(df, n_lists=4)
-    target = str(tmp_path / "ivf_idx")
-    similarity.save_ivf_index(spark, indexed, centroids, target)
-    loaded, c2 = similarity.load_ivf_index(spark, target)
-    assert c2 == [[float(x) for x in c] for c in centroids]
-    a = indexed.orderBy("vec_id").select("vec_id", "ivf_list").toPandas()
-    b = loaded.orderBy("vec_id").select("vec_id", "ivf_list").toPandas()
-    assert a.vec_id.tolist() == b.vec_id.tolist()
-    assert a.ivf_list.tolist() == b.ivf_list.tolist()
-
-    q = [float(x) for x in vecs[0]]
-    got1 = [r.id for r in similarity.ivf_topk(indexed.filter(F.col("vec_id") != 0), centroids, q, k=5, nprobe=2).collect()]
-    got2 = [r.id for r in similarity.ivf_topk(loaded.filter(F.col("vec_id") != 0), c2, q, k=5, nprobe=2).collect()]
-    assert got1 == got2
-
-    # partition pruning: the probe filter must reach the scan
-    import os
-    parts = [p for p in os.listdir(f"{target}_vectors") if p.startswith("ivf_list=")]
-    assert len(parts) == 4
-
-
 def test_near_dup_groups_end_to_end(docs):
     """LSH -> Jaccard verify -> components: the exact/near dups of doc 0
     form one group with keeper 0; unrelated docs form no group."""
@@ -413,49 +367,6 @@ def test_near_dup_groups_end_to_end(docs):
     # dedup keep-list semantics: drop everything whose comp != id
     drop = {i for i, c in groups.items() if i != c}
     assert drop == {1, 2, 6}
-
-
-def test_pq_index_deterministic_and_recall(near_dup_corpus, spark):
-    """PQ codes are partitioning-invariant (value-hash sample fit +
-    pure encode); LUT-scored top-k with exact rerank reaches
-    recall@10 >= 0.8 vs brute force."""
-    df = near_dup_corpus
-    codes1, cb1 = similarity.pq_index(df, m=4)
-    codes2, cb2 = similarity.pq_index(df.repartition(7), m=4)
-    assert cb1 == cb2
-    a = codes1.orderBy("id").toPandas()
-    b = codes2.orderBy("id").toPandas()
-    assert a.codes.map(tuple).tolist() == b.codes.map(tuple).tolist()
-
-    q = [float(x) for x in df.filter(F.col("vec_id") == 0).select("embedding").collect()[0][0]]
-    cand = df.filter(F.col("vec_id") != 0)
-    cand_codes = codes1.filter(F.col("id") != 0)
-    brute = [r.id for r in similarity.brute_force_topk(cand, q, k=10).collect()]
-    approx = {r.id for r in similarity.pq_topk(cand_codes, cb1, q, k=10, emb=cand).collect()}
-    recall = len(set(brute) & approx) / 10
-    assert recall >= 0.8, f"recall@10={recall}"
-    # LUT-only path (no rerank) still returns a full result set
-    lut_only = {r.id for r in similarity.pq_topk(cand_codes, cb1, q, k=10).collect()}
-    assert len(lut_only) == 10
-
-
-def test_pq_dim_guard(emb):
-    df, _ = emb
-    with pytest.raises(ValueError, match="divide"):
-        similarity.pq_index(df, m=5)  # dim 16 % 5 != 0
-
-
-def test_pq_index_save_load_roundtrip(near_dup_corpus, spark, tmp_path):
-    df = near_dup_corpus
-    codes, cb = similarity.pq_index(df, m=4)
-    target = str(tmp_path / "pq_idx")
-    similarity.save_pq_index(spark, codes, cb, target)
-    codes2, cb2 = similarity.load_pq_index(spark, target)
-    assert cb2 == cb
-    q = [float(x) for x in df.filter(F.col("vec_id") == 0).select("embedding").collect()[0][0]]
-    a = [r.id for r in similarity.pq_topk(codes.filter(F.col("id") != 0), cb, q, k=5).collect()]
-    b = [r.id for r in similarity.pq_topk(codes2.filter(F.col("id") != 0), cb2, q, k=5).collect()]
-    assert a == b
 
 
 def test_clean_corpus_end_to_end(spark, depara):
@@ -908,100 +819,19 @@ def test_bucket_cap_drop_is_observable(spark):
     assert dedup.warn_dropped_buckets(raw2) == 0
 
 
-def test_ivfpq_recall_and_roundtrip(near_dup_corpus, spark, tmp_path):
-    """IVF×PQ composition: probe + LUT-score + exact rerank reaches
-    recall@10 >= 0.8 vs brute force; persisted index reloads to
-    identical results (never refits)."""
-    df = near_dup_corpus
-    codes, cents, cbs = similarity.ivfpq_index(df, n_lists=8, m=4)
-    q = [float(x) for x in df.filter(F.col("vec_id") == 0).select("embedding").collect()[0][0]]
-    cand = df.filter(F.col("vec_id") != 0)
-    cand_codes = codes.filter(F.col("id") != 0)
-    brute = [r.id for r in similarity.brute_force_topk(cand, q, k=10).collect()]
-    approx = {
-        r.id
-        for r in similarity.ivfpq_topk(
-            cand_codes, cents, cbs, q, k=10, nprobe=4, emb=cand
-        ).collect()
-    }
-    recall = len(set(brute) & approx) / 10
-    assert recall >= 0.8, f"recall@10={recall}"
-    # LUT-only (no rerank) still returns a full result set
-    lut_only = similarity.ivfpq_topk(cand_codes, cents, cbs, q, k=10, nprobe=4).collect()
-    assert len(lut_only) == 10
-
-    target = str(tmp_path / "ivfpq_idx")
-    similarity.save_ivfpq_index(spark, codes, cents, cbs, target)
-    codes2, cents2, cbs2, props = similarity.load_ivfpq_index(spark, target)
-    assert cents2 == cents and cbs2 == cbs and props["residual"] is False
-    a = [r.id for r in similarity.ivfpq_topk(
-        codes.filter(F.col("id") != 0), cents, cbs, q, k=5, nprobe=4).collect()]
-    b = [r.id for r in similarity.ivfpq_topk(
-        codes2.filter(F.col("id") != 0), cents2, cbs2, q, k=5, nprobe=4).collect()]
-    assert a == b
-
-
-def test_ivfpq_topk_batch_equals_single_query(near_dup_corpus, spark):
-    """Batched index-backed ANN must reproduce the single-query path
-    EXACTLY, per query: raw LUT-only, raw + rerank, and residual
-    (IVFADC) + rerank — broadcast LUT-table scoring vs literal-LUT
-    plans, probe selection mirrored per mode."""
-    df = near_dup_corpus
-    queries = df.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    qvecs = {
-        r.query_id: [float(x) for x in r.query_vec] for r in queries.collect()
-    }
-
-    for residual in (False, True):
-        codes, cents, cbs = similarity.ivfpq_index(df, n_lists=8, m=4, residual=residual)
-        for emb in (None, df):
-            batch = similarity.ivfpq_topk_batch(
-                codes, cents, cbs, queries, k=5, nprobe=3, emb=emb, residual=residual
-            ).collect()
-            for qid, q in qvecs.items():
-                single = similarity.ivfpq_topk(
-                    codes, cents, cbs, q, k=5, nprobe=3, emb=emb, residual=residual
-                ).collect()
-                got = [r for r in batch if r.query_id == qid]
-                if emb is None:
-                    assert [(r.id, r.pq_dist) for r in got] == [
-                        (r.id, r.pq_dist) for r in single
-                    ], (residual, qid)
-                else:
-                    assert [(r.id, r.cosine) for r in got] == [
-                        (r.id, r.cosine) for r in single
-                    ], (residual, qid)
-
-
 def test_batch_cosine_zero_query_guard(near_dup_corpus, spark):
     """An all-zero query must score 0.0 rows (the single-query path's
-    driver-side `or 1.0` guard), NOT NULL out the cosine column and rank
-    arbitrary ties — batch == single-query even on this edge."""
+    driver-side `or 1.0` guard, mirrored in ``cosine_to_query_expr``),
+    NOT NULL out the cosine column and rank arbitrary ties — batch ==
+    single-query even on this edge."""
     df = near_dup_corpus
-    indexed, cents = similarity.ivf_index(df, n_lists=8)
     zq = spark.createDataFrame(
         [(99, [0.0] * 16)], "query_id LONG, query_vec ARRAY<FLOAT>"
     )
-    batch = similarity.ivf_topk_batch(indexed, cents, zq, k=5, nprobe=3).collect()
-    single = similarity.ivf_topk(indexed, cents, [0.0] * 16, k=5, nprobe=3).collect()
+    batch = similarity.brute_force_topk_batch(df, zq, k=5).collect()
+    single = similarity.brute_force_topk(df, [0.0] * 16, k=5).collect()
     assert [(r.id, r.cosine) for r in batch] == [(r.id, r.cosine) for r in single]
-    assert all(r.cosine == 0.0 for r in batch)
-
-
-def test_ivf_topk_batch_equals_single_query(near_dup_corpus, spark):
-    df = near_dup_corpus
-    indexed, cents = similarity.ivf_index(df, n_lists=8)
-    queries = df.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    batch = similarity.ivf_topk_batch(indexed, cents, queries, k=5, nprobe=3).collect()
-    for r in queries.collect():
-        q = [float(x) for x in r.query_vec]
-        single = similarity.ivf_topk(indexed, cents, q, k=5, nprobe=3).collect()
-        got = [(x.id, x.cosine) for x in batch if x.query_id == r.query_id]
-        assert got == [(x.id, x.cosine) for x in single], r.query_id
+    assert len(batch) == 5 and all(r.cosine == 0.0 for r in batch)
 
 
 def test_script_id_routing(spark):
@@ -1298,48 +1128,6 @@ def test_brute_force_topk_batch_matches_per_query(emb):
         assert grouped[qid] == want, (qid, grouped[qid], want)
 
 
-def test_ivfpq_residual_encoding(near_dup_corpus, spark, tmp_path):
-    """True-IVFADC residual mode: codes quantize v - centroid[list];
-    recall@10 (with rerank) >= 0.8, and LUT-only ranking is at least as
-    good as raw-vector PQ at the same code budget on this corpus. The
-    persisted props table round-trips the scoring scheme."""
-    df = near_dup_corpus
-    q = [float(x) for x in df.filter(F.col("vec_id") == 0).select("embedding").collect()[0][0]]
-    cand = df.filter(F.col("vec_id") != 0)
-    brute = [r.id for r in similarity.brute_force_topk(cand, q, k=10).collect()]
-
-    def recall(codes, cents, cbs, residual, rerank):
-        got = {
-            r.id
-            for r in similarity.ivfpq_topk(
-                codes.filter(F.col("id") != 0), cents, cbs, q, k=10, nprobe=4,
-                emb=cand if rerank else None, residual=residual,
-            ).collect()
-        }
-        return len(set(brute) & got) / 10
-
-    codes_r, cents_r, cbs_r = similarity.ivfpq_index(df, n_lists=8, m=4, residual=True)
-    codes_p, cents_p, cbs_p = similarity.ivfpq_index(df, n_lists=8, m=4, residual=False)
-
-    assert recall(codes_r, cents_r, cbs_r, True, rerank=True) >= 0.8
-    lut_res = recall(codes_r, cents_r, cbs_r, True, rerank=False)
-    lut_raw = recall(codes_p, cents_p, cbs_p, False, rerank=False)
-    assert lut_res >= lut_raw, (lut_res, lut_raw)
-
-    # determinism across partitionings
-    codes_r2, cents_r2, cbs_r2 = similarity.ivfpq_index(df.repartition(7), n_lists=8, m=4, residual=True)
-    assert cents_r2 == cents_r and cbs_r2 == cbs_r
-    a = codes_r.orderBy("id").toPandas()
-    b = codes_r2.orderBy("id").toPandas()
-    assert a.ivf_list.tolist() == b.ivf_list.tolist()
-    assert a.codes.map(tuple).tolist() == b.codes.map(tuple).tolist()
-
-    target = str(tmp_path / "ivfpq_res")
-    similarity.save_ivfpq_index(spark, codes_r, cents_r, cbs_r, target, residual=True)
-    codes3, cents3, cbs3, props = similarity.load_ivfpq_index(spark, target)
-    assert props["residual"] is True and cents3 == cents_r and cbs3 == cbs_r
-
-
 def test_with_lang_id_script_route(spark):
     """r5 wiring: script_route=True tags non-Latin-dominant rows
     'und-<script>' and leaves latin/'und'-script rows EXACTLY as the
@@ -1549,78 +1337,6 @@ def test_png_real_feature_path(spark):
     assert np.allclose(got[1], multimodal.image_features(rgba[:, :, :3]), atol=1e-6)
 
 
-@pytest.mark.parametrize("residual", [True, False])
-def test_ivfpq_append_matches_build(near_dup_corpus, spark, tmp_path, residual):
-    """r5 incremental index maintenance: vectors appended to a persisted
-    IVF×PQ index (existing centroids/codebooks, no refit) must carry
-    EXACTLY the codes a build with those quantizers would have given
-    them, land in the partitioned layout, and probe identically."""
-    df = near_dup_corpus
-    old = df.filter(F.col("vec_id") < 200)
-    new = df.filter(F.col("vec_id") >= 200)
-
-    # full-corpus build = ground truth codes for the new rows UNDER THE
-    # OLD QUANTIZERS: fit both quantizers on the old rows only, then
-    # encode everything with them (the shared fixed-quantizer encoder)
-    codes_old, cents, cbs = similarity.ivfpq_index(old, n_lists=8, m=4, residual=residual)
-    want_new = similarity._ivfpq_encode(
-        new, cents, cbs, True, residual, "vec_id", "embedding"
-    ).orderBy("id").collect()
-
-    target = str(tmp_path / f"ivfpq_app_{int(residual)}")
-    similarity.save_ivfpq_index(
-        spark, codes_old, cents, cbs, target, residual=residual, emb=old
-    )
-    out = similarity.ivfpq_append(spark, target, new, batch="b1")
-    assert out["appended"] == new.count()
-    assert out["build_mean_dist"] is not None and out["drift_ratio"] is not None
-    # same-distribution batch: assignment drift stays near the baseline
-    assert 0.5 < out["drift_ratio"] < 1.5, out
-
-    codes2, cents2, cbs2, props = similarity.load_ivfpq_index(spark, target)
-    assert cents2 == cents and cbs2 == cbs and props["residual"] is residual
-    got_new = codes2.filter(F.col("id") >= 200).orderBy("id").collect()
-    assert [(r.id, r.ivf_list, list(r.codes)) for r in got_new] == [
-        (r.id, r.ivf_list, list(r.codes)) for r in want_new
-    ]
-    # probing the appended index == probing a frame built with the same
-    # quantizers over the union
-    q = [float(x) for x in df.filter(F.col("vec_id") == 0).select("embedding").collect()[0][0]]
-    union_codes = codes_old.unionByName(
-        similarity._ivfpq_encode(new, cents, cbs, True, residual, "vec_id", "embedding")
-    )
-    a = [r.id for r in similarity.ivfpq_topk(
-        codes2.filter(F.col("id") != 0), cents2, cbs2, q, k=10, nprobe=4,
-        residual=residual).collect()]
-    b = [r.id for r in similarity.ivfpq_topk(
-        union_codes.filter(F.col("id") != 0), cents, cbs, q, k=10, nprobe=4,
-        residual=residual).collect()]
-    assert a == b
-
-    # drift table accumulates one row per batch next to the build row
-    from pdf_ocr_api_spark.sources.io import read_table
-
-    drift = {r.batch: r for r in read_table(spark, f"{target}_drift").collect()}
-    assert set(drift) == {"build", "b1"}
-    assert drift["b1"].n_vectors == out["appended"]
-
-
-def test_ivfpq_append_without_baseline(near_dup_corpus, spark, tmp_path):
-    """Pre-r5 indexes saved without vectors have no drift baseline: the
-    append still lands and records ITS row, but drift_ratio is None
-    (unknown ≠ 1.0 — the operator must know the baseline is missing)."""
-    df = near_dup_corpus
-    old = df.filter(F.col("vec_id") < 200)
-    codes_old, cents, cbs = similarity.ivfpq_index(old, n_lists=8, m=4)
-    target = str(tmp_path / "ivfpq_nobase")
-    similarity.save_ivfpq_index(spark, codes_old, cents, cbs, target)
-    out = similarity.ivfpq_append(
-        spark, target, df.filter(F.col("vec_id") >= 200), batch="b1"
-    )
-    assert out["appended"] > 0 and out["mean_dist"] > 0
-    assert out["build_mean_dist"] is None and out["drift_ratio"] is None
-
-
 def test_runner_show_runs(spark, tmp_path, capsys):
     """r5: --show-runs is the operator's one-call alert surface — JSON
     per-mode summary of the persisted runs table, with the
@@ -1755,61 +1471,6 @@ def test_jpeg_real_feature_path(spark):
     assert np.allclose(got, multimodal.image_features(decoded), atol=1e-6)
     assert np.allclose(got[:6], multimodal.image_features(img)[:6], atol=0.02)
     assert multimodal.decode_image(payload).shape == img.shape
-
-
-def test_ivfpq_encode_matches_build_exactly(near_dup_corpus, spark):
-    """r5 review: the shared fixed-quantizer encoder must reproduce the
-    BUILD's own codes bit-for-bit on the build's input — including the
-    raw path, whose list assignment must ride the same codegen
-    expression as ivf_index (a numpy reimplementation can flip
-    near-tie assignments)."""
-    df = near_dup_corpus
-    for residual in (True, False):
-        codes, cents, cbs = similarity.ivfpq_index(df, n_lists=8, m=4, residual=residual)
-        want = sorted((r.id, r.ivf_list, tuple(r.codes)) for r in codes.collect())
-        got = sorted(
-            (r.id, r.ivf_list, tuple(r.codes))
-            for r in similarity._ivfpq_encode(
-                df, cents, cbs, True, residual, "vec_id", "embedding"
-            ).collect()
-        )
-        assert got == want, f"residual={residual}"
-
-
-def test_ivfpq_append_empty_batch_and_normalize_props(near_dup_corpus, spark, tmp_path):
-    """r5 review: an empty batch appends zero rows without crashing
-    (drift_ratio None — no batch mean exists), and the index's
-    normalize flag is persisted + honored by append (a mismatched
-    normalize would silently emit divergent codes)."""
-    df = near_dup_corpus
-    old = df.filter(F.col("vec_id") < 200)
-
-    # normalize=False build: props must round-trip and drive the append
-    codes, cents, cbs = similarity.ivfpq_index(
-        old, n_lists=8, m=4, residual=True, normalize=False
-    )
-    target = str(tmp_path / "ivfpq_nonorm")
-    similarity.save_ivfpq_index(
-        spark, codes, cents, cbs, target, residual=True, emb=old, normalize=False
-    )
-    _, _, _, props = similarity.load_ivfpq_index(spark, target)
-    assert props["normalize"] is False and props["residual"] is True
-
-    new = df.filter(F.col("vec_id") >= 200)
-    similarity.ivfpq_append(spark, target, new, batch="b1")
-    got = similarity.load_ivfpq_index(spark, target)[0].filter(F.col("id") >= 200)
-    want = similarity._ivfpq_encode(
-        new, cents, cbs, False, True, "vec_id", "embedding"
-    )
-    assert sorted((r.id, r.ivf_list, tuple(r.codes)) for r in got.collect()) == sorted(
-        (r.id, r.ivf_list, tuple(r.codes)) for r in want.collect()
-    )
-
-    # empty batch: no crash, zero appended, drift_ratio None
-    out = similarity.ivfpq_append(
-        spark, target, new.filter(F.col("vec_id") < 0), batch="b2"
-    )
-    assert out["appended"] == 0 and out["drift_ratio"] is None
 
 
 def test_jpeg_hostile_streams_raise_valueerror():

@@ -123,40 +123,6 @@ def test_incremental_keep_no_cartesian(spark):
     assert "BroadcastNestedLoopJoin" not in plan, plan[:1500]
 
 
-def test_ivfpq_probe_prunes_partitions(spark, tmp_path):
-    """A persisted IVF×PQ index is partitioned by ivf_list; the probe
-    filter must reach the scan as a PARTITION filter (file pruning), not
-    a post-scan filter — at 100 TB the probe reads nprobe/n_lists of the
-    index, never all of it."""
-    import numpy as np
-
-    from pdf_ocr_api_spark.ops import similarity
-
-    rng = np.random.default_rng(11)
-    rows = [(i, [float(x) for x in rng.standard_normal(8)]) for i in range(120)]
-    emb = spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<FLOAT>")
-    codes, cents, cbs = similarity.ivfpq_index(emb, n_lists=8, m=4)
-    target = str(tmp_path / "ivfpq_plan_idx")
-    similarity.save_ivfpq_index(spark, codes, cents, cbs, target)
-    loaded, cents2, cbs2, _props = similarity.load_ivfpq_index(spark, target)
-    top = similarity.ivfpq_topk(loaded, cents2, cbs2, rows[0][1], k=5, nprobe=2)
-    plan = PI.formatted_plan(top)
-    # partition pruning shows as PartitionFilters with the isin/in list
-    assert "PartitionFilters" in plan and "ivf_list" in plan.split("PartitionFilters", 1)[1][:300], plan[:2000]
-    assert "TakeOrderedAndProject" in PI.executed_plan(top)
-
-    # the BATCHED path must prune identically: the probe-union filter
-    # reaches the persisted scan as a partition filter, and the LUT
-    # table arrives via broadcast (no shuffle of the codes for the join)
-    queries = emb.limit(2).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    btop = similarity.ivfpq_topk_batch(loaded, cents2, cbs2, queries, k=5, nprobe=2)
-    bplan = PI.formatted_plan(btop)
-    assert "PartitionFilters" in bplan and "ivf_list" in bplan.split("PartitionFilters", 1)[1][:300], bplan[:2000]
-    assert "BroadcastHashJoin" in PI.executed_plan(btop)
-
-
 def test_fused_lang_id_single_regex_pass(stored, depara):
     """The sweep-form lang-ID must traverse the text ONCE: exactly one
     regexp_extract_all over the marker alternation in the plan,

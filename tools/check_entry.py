@@ -15,10 +15,11 @@ import hashlib
 import math
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
-SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+DEFAULT_SF_DIR = "/root/testdata/sf0.01"
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
@@ -57,12 +58,20 @@ def frame_hash(df) -> tuple[int, list[str], str]:
     return len(df), cols, h
 
 
+def duckdb_views(con, sf_dir: str):
+    """Register every driver table of ``sf_dir`` as a DuckDB view."""
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
+    return con
+
+
 def main() -> int:
     import duckdb
     from pyspark.sql import SparkSession
 
     import __spark_entry__ as entry
 
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else DEFAULT_SF_DIR
     spark = (
         SparkSession.builder.master("local[8]")
         .config("spark.sql.shuffle.partitions", "8")
@@ -72,9 +81,7 @@ def main() -> int:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')")
+    con = duckdb_views(duckdb.connect(), sf_dir)
 
     qs = entry.queries()
     oracles = entry.oracle_sql()
@@ -115,7 +122,7 @@ def main() -> int:
     for name, fn in qs.items():
         t0 = time.monotonic()
         try:
-            sdf_spark = fn(spark, SF_DIR)
+            sdf_spark = fn(spark, sf_dir)
             # DRIVER-CANON GUARD (r5, after the r4 mm_media RED row): the
             # driver canonicalizes EVERY entry (rows-only included) with a
             # pandas multi-column sort whose lexsort FACTORIZES (hashes)
