@@ -21,23 +21,13 @@ raw sample arrays, parseable with ``struct`` + ``numpy``:
   (IHDR/IDAT/IEND, CRC-checked) + per-scanline unfiltering (types 0-4)
   over numpy, 8-bit truecolor RGB/RGBA, non-interlaced. Palette/gray/
   16-bit/Adam7 raise ValueError like any unsupported flavor.
-* **JPEG** (r5 — baseline SOF0, ``ops/jpeg.py``): Huffman + 8×8 DCT
-  are plain arithmetic over the public T.81 Annex-K tables — encoder
-  (4:4:4/4:2:0, DRI/RSTn) + decoder (arbitrary sampling factors,
-  restart markers, grayscale); progressive/arithmetic-coded raise
-  ValueError.
 * **GIF** (r5 — compressed, but LZW is an algorithm, not a library):
   variable-width LZW encode/decode + palette mapping, 87a/89a, global
   or local color table, first frame, non-interlaced; encode is
   lossless for ≤256-color images (GIF's own model).
-* **FLAC** (r5 late, ``ops/flac.py``): Rice coding over integer
-  predictors — algorithms with zero external tables; full decoder
-  (constant/verbatim/fixed/LPC subframes, all stereo decorrelation
-  modes, CRC-8/16 + PCM MD5 verify) and a valid fixed-predictor
-  encoder (lossless round-trip, bit-exact).
 
 These are the real-decoder backends for ``ops.multimodal`` — the
-remaining codec-bound formats (MP3/MP4) stay honestly stubbed behind
+remaining codec-bound formats (JPEG/FLAC/MP3/MP4) stay stubbed behind
 ``NotImplementedError`` until a codec library exists here.
 """
 
@@ -753,38 +743,18 @@ def decode_gif(payload: bytes) -> np.ndarray:
 # ---------------------------------------------------------------------------
 
 
-def encode_jpeg(rgb, quality: int = 90, subsample: str = "444", restart_interval: int = 0) -> bytes:
-    """Baseline JFIF JPEG encode (delegates to ``ops.jpeg`` — the r5
-    pure-numpy baseline codec; see that module for scope)."""
-    from . import jpeg
-
-    return jpeg.encode_jpeg(rgb, quality, subsample, restart_interval)
-
-
-def decode_jpeg(payload: bytes):
-    """Baseline JFIF JPEG decode → (H, W, 3) uint8 (``ops.jpeg``);
-    progressive/arithmetic/12-bit raise ValueError."""
-    from . import jpeg
-
-    return jpeg.decode_jpeg(payload)
-
-
 def sniff_codec(payload: bytes | None) -> str | None:
-    """'bmp' | 'wav' | 'y4m' | 'ppm' | 'au' | 'png' | 'jpeg' | 'gif' |
-    'flac' when the payload is one of the decodable formats, else None
-    (codec-bound or unknown)."""
+    """'bmp' | 'wav' | 'y4m' | 'ppm' | 'au' | 'png' | 'gif' when the
+    payload is one of the decodable formats, else None (codec-bound or
+    unknown)."""
     if not payload:
         return None
     if payload[:2] == b"BM":
         return "bmp"
-    if payload[:4] == b"fLaC":
-        return "flac"
     if payload[:8] == _PNG_MAGIC:
         return "png"
     if payload[:6] in (b"GIF87a", b"GIF89a"):
         return "gif"
-    if payload[:3] == b"\xff\xd8\xff":
-        return "jpeg"
     if payload[:4] == b"RIFF" and payload[8:12] == b"WAVE":
         return "wav"
     if payload[:9] == b"YUV4MPEG2":

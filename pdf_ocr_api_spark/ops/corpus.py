@@ -278,11 +278,7 @@ def dedup_metrics(df: DataFrame) -> dict | None:
     as "metrics lost, read them off the original result", never as
     "no recall loss" — returning zeros here would be exactly the silent
     recall loss this accounting exists to prevent."""
-    for attr in ("_dedup_metrics", "_lsh_metrics"):
-        m = getattr(df, attr, None)
-        if m is not None:
-            return m
-    return None
+    return getattr(df, "_dedup_metrics", None)
 
 
 def clean_corpus_incremental(

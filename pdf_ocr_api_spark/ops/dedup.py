@@ -510,7 +510,7 @@ def near_dup_groups(
     out = connected_components(verified, reliable_checkpoint_dir=reliable_checkpoint_dir)
     # recall-loss accounting rides the result so composing operators
     # (clean_corpus) can surface it without re-running anything
-    out._lsh_metrics = metrics
+    out._dedup_metrics = metrics
     return out
 
 
@@ -616,7 +616,7 @@ def incremental_keep(
     independently: a template family inside the batch, or a mega-bucket
     in the stored index) are dropped before the joins, with the
     dropped-bucket count warned and attached to the result
-    (``_lsh_metrics``, readable via ``corpus.dedup_metrics``). When the
+    (``_dedup_metrics``, readable via ``corpus.dedup_metrics``). When the
     cap actually BINDS, results can diverge from a capped full recompute
     (the cap is corpus-global there, per-side here) — like the bridge
     caveat below, the equality contract assumes the backstop is sized to
@@ -743,7 +743,7 @@ def incremental_keep(
         .select("id")
     )
     out = batch.join(kept_new, batch[id_col] == kept_new["id"], "left_semi")
-    out._lsh_metrics = metrics
+    out._dedup_metrics = metrics
     return out
 
 

@@ -12,8 +12,8 @@ data inside is codec-bound:
   walk (version/layer/bitrate/samplerate tables) summing
   samples-per-frame / samplerate — exact duration for CBR and VBR both,
   no Xing header trusted.
-* The seven DECODABLE formats (``codecs.py``/``jpeg.py``) get their
-  metadata from their own headers via the same probe surface.
+* The seven DECODABLE formats (``codecs.py``) get their metadata from
+  their own headers via the same probe surface.
 
 So the stub boundary moves again: MP3/MP4 *decode* remains
 ``NotImplementedError``, but a 100 TB media pipeline's partition/filter
@@ -590,37 +590,6 @@ def _png_dims(d: bytes) -> tuple[int, int]:
     return w, h
 
 
-def _jpeg_dims(d: bytes) -> tuple[int, int]:
-    """JPEG dimensions from the SOF segment alone — no entropy decode.
-    Accepts ANY SOFn (incl. progressive, which full decode refuses):
-    the dimensions are metadata regardless of coding mode."""
-    sof = {0xC0, 0xC1, 0xC2, 0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF}
-    pos = 2
-    while pos + 4 <= len(d):
-        if d[pos] != 0xFF:
-            raise ValueError("bad JPEG marker alignment")
-        while pos + 1 < len(d) and d[pos + 1] == 0xFF:
-            pos += 1  # T.81 B.1.1.2: any number of 0xFF fill bytes
-        if pos + 4 > len(d):
-            break
-        marker = d[pos + 1]
-        if marker == 0xD8 or marker == 0x01 or 0xD0 <= marker <= 0xD7:
-            pos += 2
-            continue
-        (seglen,) = struct.unpack_from(">H", d, pos + 2)
-        if marker in sof:
-            if pos + 9 > len(d):
-                raise ValueError("truncated SOF")
-            h, w = struct.unpack_from(">HH", d, pos + 5)
-            if w <= 0 or h <= 0:
-                raise ValueError("bad JPEG dimensions")
-            return w, h
-        if marker == 0xDA or marker == 0xD9:
-            break
-        pos += 2 + seglen
-    raise ValueError("JPEG missing SOF")
-
-
 def _y4m_meta(d: bytes) -> tuple[int, int, int, int]:
     """Y4M (w, h, fps, n_frames) by a FRAME-marker walk — fixed stride
     per frame, zero plane materialization (decode_y4m would allocate
@@ -654,25 +623,11 @@ def _y4m_meta(d: bytes) -> tuple[int, int, int, int]:
     return w, h, fps, n
 
 
-def _flac_streaminfo(d: bytes) -> tuple[int, int]:
-    """(rate_hz, total_samples) from the mandatory first metadata block;
-    raises ValueError if it is not a well-formed STREAMINFO."""
-    from . import flac as flac_codec
-
-    if len(d) < 8 + 34:
-        raise ValueError("truncated FLAC header")
-    hdr = struct.unpack(">I", d[4:8])[0]
-    if (hdr >> 24) & 0x7F != 0 or (hdr & 0xFFFFFF) != 34:
-        raise ValueError("first FLAC metadata block is not STREAMINFO")
-    info = flac_codec._parse_streaminfo(d[8:42])
-    return info["rate"], info["total_samples"]
-
-
 def probe_media(payload: bytes) -> dict:
     """One probe for the MEDIA_SCHEMA meta struct: {mime, width, height,
     duration_ms} for every format this engine knows. A probe is
-    HEADER-ONLY wherever the format allows: PNG/JPEG dimensions come
-    from IHDR/SOF without inflating or entropy-decoding anything
+    HEADER-ONLY wherever the format allows: PNG/GIF dimensions come
+    from IHDR/the logical-screen descriptor without inflating anything
     (decoding compressed rasters just to read a width would make the
     metadata pass as expensive as the decode pass at 100 TB); BMP/PPM/
     WAV/AU/Y4M 'decodes' are header parses over zero-copy views and are
@@ -696,14 +651,14 @@ def _probe_media_impl(payload: bytes) -> dict:
         raise ValueError("empty payload")
     meta = {"mime": None, "width": None, "height": None, "duration_ms": None}
     kind = codecs.sniff_codec(d)
-    if kind in ("png", "jpeg", "gif"):
+    if kind in ("png", "gif"):
         if kind == "gif":
             # logical-screen descriptor alone — no LZW touched
             w, h = struct.unpack_from("<HH", d, 6)
             if w <= 0 or h <= 0:
                 raise ValueError("bad GIF dimensions")
         else:
-            w, h = _png_dims(d) if kind == "png" else _jpeg_dims(d)
+            w, h = _png_dims(d)
         meta.update(mime=f"image/{kind}", width=w, height=h)
         return meta
     if kind in ("bmp", "ppm"):
@@ -714,15 +669,6 @@ def _probe_media_impl(payload: bytes) -> dict:
         samples, rate = codecs.decode_wav(d) if kind == "wav" else codecs.decode_au(d)
         mime = "audio/wav" if kind == "wav" else "audio/basic"
         meta.update(mime=mime, duration_ms=int(len(samples) * 1000 / max(rate, 1)))
-        return meta
-    if kind == "flac":
-        # STREAMINFO-only: sample count and rate live in the first
-        # metadata block — no frame is Rice-decoded for a duration read
-        rate, total = _flac_streaminfo(d)
-        meta.update(
-            mime="audio/flac",
-            duration_ms=int(total * 1000 / max(rate, 1)) if total else None,
-        )
         return meta
     if kind == "y4m":
         w, h, fps, n_frames = _y4m_meta(d)

@@ -3,9 +3,8 @@
 Image/audio/video payloads are opaque ``binary`` columns with a typed
 metadata struct. Decode/feature/resize/frame-sample are REAL for the
 formats a stdlib + numpy codec can parse (``codecs.py``: 24-bit BMP,
-binary PPM, 8-bit truecolor PNG — DEFLATE is stdlib ``zlib`` — and
-baseline JPEG images — Huffman + DCT are plain arithmetic, ``jpeg.py``;
-PCM-16 WAV + Sun AU audio, YUV4MPEG2 video). For MP3/MP4 the stub
+binary PPM, 8-bit truecolor PNG — DEFLATE is stdlib ``zlib`` — and GIF
+images; PCM-16 WAV + Sun AU audio, YUV4MPEG2 video). For MP3/MP4 the stub
 boundary sits exactly at the codec: metadata probing (frame/box walks,
 ``mediameta.probe_*``) and MP4 sample DEMUX (``mediameta.demux_mp4`` —
 frame extraction through the stsc/stco/stsz tables) are REAL pure
@@ -42,9 +41,9 @@ FEATURE_DIM = 16
 def decode_image(payload: bytes) -> np.ndarray:
     """Image decode: REAL for 24-bit uncompressed BMP, binary PPM, and
     (r5) the two compressed formats that need no codec library — 8-bit
-    truecolor PNG (stdlib-zlib DEFLATE) and baseline JPEG (T.81 Huffman
-    + DCT, ``ops/jpeg.py``). Genuinely codec-bound formats (WebP/AVIF/…)
-    raise ``NotImplementedError`` until a codec library exists here.
+    truecolor PNG (stdlib-zlib DEFLATE) and GIF (LZW). Codec-bound
+    formats (JPEG/WebP/AVIF/…) raise ``NotImplementedError`` until a
+    codec library exists here.
     Returns (H, W, 3) uint8 — PNG alpha is dropped (RGBA → RGB) so every
     image kind feeds the same feature contract."""
     from . import codecs
@@ -56,23 +55,17 @@ def decode_image(payload: bytes) -> np.ndarray:
         return codecs.decode_ppm(payload)
     if kind == "png":
         return codecs.decode_png(payload)[:, :, :3]
-    if kind == "jpeg":
-        return codecs.decode_jpeg(payload)
     if kind == "gif":
         return codecs.decode_gif(payload)
     raise NotImplementedError(
-        "codec-bound image decode (WebP/AVIF/…) needs a codec library "
-        "(PIL/libvips) — absent in this container; BMP/PPM/PNG/JPEG/GIF decode for real"
+        "codec-bound image decode (JPEG/WebP/AVIF/…) needs a codec library "
+        "(PIL/libvips) — absent in this container; BMP/PPM/PNG/GIF decode for real"
     )
 
 
 def decode_audio(payload: bytes):
-    """Audio decode: REAL for PCM-16 WAV, Sun AU and (r5) FLAC —
-    lossless compression is Rice coding + integer predictors, i.e.
-    algorithms, no codec library needed (``ops/flac.py``) — →
-    ((n, ch) int16, rate). Non-16-bit FLAC is shifted to the int16
-    range (amplitude-preserving, >> for 20/24/32 bps, << for 8/12).
-    Codec-bound audio (MP3/AAC) raises NotImplementedError."""
+    """Audio decode: REAL for PCM-16 WAV and Sun AU → ((n, ch) int16,
+    rate). Codec-bound audio (FLAC/MP3/AAC) raises NotImplementedError."""
     from . import codecs
 
     kind = codecs.sniff_codec(payload)
@@ -80,18 +73,9 @@ def decode_audio(payload: bytes):
         return codecs.decode_wav(payload)
     if kind == "au":
         return codecs.decode_au(payload)
-    if kind == "flac":
-        from . import flac as flac_codec
-
-        samples, rate, bps = flac_codec.decode_flac(payload)
-        if bps > 16:
-            samples = samples >> (bps - 16)
-        elif bps < 16:
-            samples = samples << (16 - bps)
-        return samples.astype(np.int16), rate
     raise NotImplementedError(
-        "codec-bound audio (MP3/AAC) needs a codec library — absent here; "
-        "PCM WAV/AU and FLAC decode for real"
+        "codec-bound audio (FLAC/MP3/AAC) needs a codec library — absent here; "
+        "PCM WAV/AU decode for real"
     )
 
 
@@ -170,7 +154,7 @@ def video_features(frames_y: np.ndarray, fps: int, dim: int = FEATURE_DIM) -> np
 
 def media_feature_vector(payload: bytes, dim: int = FEATURE_DIM) -> np.ndarray:
     """Feature router: REAL features for decodable payloads (BMP / PPM /
-    PNG / JPEG / WAV / AU / Y4M via magic bytes), deterministic fake
+    PNG / GIF / WAV / AU / Y4M via magic bytes), deterministic fake
     stand-in for codec-bound or unknown bytes — so one UDF serves mixed
     corpora.
 
@@ -188,16 +172,12 @@ def media_feature_vector(payload: bytes, dim: int = FEATURE_DIM) -> np.ndarray:
             return image_features(codecs.decode_ppm(payload), dim)
         if kind == "png":
             return image_features(codecs.decode_png(payload)[:, :, :3], dim)
-        if kind == "jpeg":
-            return image_features(codecs.decode_jpeg(payload), dim)
         if kind == "gif":
             return image_features(codecs.decode_gif(payload), dim)
         if kind == "wav":
             return audio_features(*codecs.decode_wav(payload), dim=dim)
         if kind == "au":
             return audio_features(*codecs.decode_au(payload), dim=dim)
-        if kind == "flac":
-            return audio_features(*decode_audio(payload), dim=dim)
         if kind == "y4m":
             return video_features(*codecs.decode_y4m(payload), dim=dim)
     except ValueError:

@@ -346,11 +346,7 @@ def _clean_corpus_job(args) -> int:
             .withColumn("fp_version", F.lit(_ss.FP_VERSION))
         )
         write_table(delta, ss_target, mode="append" if incremental else "create")
-        out = cleaned.drop("_sid", "n_tokens_removed")
-        for attr in ("_dedup_metrics", "_lsh_metrics"):
-            if getattr(rows, attr, None) is not None:
-                setattr(out, attr, getattr(rows, attr))
-        return out, int(removed)
+        return cleaned.drop("_sid", "n_tokens_removed"), int(removed)
 
     def _log_run(mode: str, rows_kept: int, metrics: dict | None) -> None:
         # one run-summary row per job next to the store: the recall-loss
@@ -399,22 +395,16 @@ def _clean_corpus_job(args) -> int:
             }
         except ValueError as exc:
             raise SystemExit(f'--splits must look like "train=0.98,val=0.01": {exc}')
-        out = training.assign_splits(df, weights, key_col="conv_id", salt=args.split_salt)
-        # the recall-loss accounting rides a Python-side attribute that
-        # does NOT follow withColumn — carry it, or _log_run records None
-        for attr in ("_dedup_metrics", "_lsh_metrics"):
-            if getattr(df, attr, None) is not None:
-                setattr(out, attr, getattr(df, attr))
-        return out
+        return training.assign_splits(df, weights, key_col="conv_id", salt=args.split_salt)
 
     if args.clean_corpus:
         out = corpus_ops.clean_corpus(batch, **kw)
+        metrics = corpus_ops.dedup_metrics(out)
         ss_removed = 0
         if args.dedup_substrings:
             out, ss_removed = _substring_stage(out, incremental=False)
         out = _with_splits(out)
         write_table(out, corpus_target, mode="create")
-        metrics = corpus_ops.dedup_metrics(out)
         # signatures from the STORED table (the scale pattern: never keep
         # the cleaning plan alive just to hash its output twice);
         # sync_signatures also makes a crashed/half-finished bootstrap
@@ -443,11 +433,11 @@ def _clean_corpus_job(args) -> int:
     kept = read_table(spark, corpus_target)
     sigs = read_table(spark, sig_target)
     new_rows = corpus_ops.clean_corpus_incremental(kept, batch, kept_sigs=sigs, **kw)
+    metrics = corpus_ops.dedup_metrics(new_rows)
     ss_removed = 0
     if args.dedup_substrings:
         new_rows, ss_removed = _substring_stage(new_rows, incremental=True)
     new_rows = _with_splits(new_rows)
-    metrics = corpus_ops.dedup_metrics(new_rows)
     # one computation, two appends: materialize the (batch-sized) result
     new_rows = new_rows.localCheckpoint(eager=True)
     write_table(new_rows, corpus_target, mode="append")
@@ -498,9 +488,8 @@ def _show_runs(args) -> int:
     read the store's ``runs`` table (written by every --clean-corpus /
     --clean-incremental job via ``corpus.log_run``) and print a JSON
     summary — per-mode run counts, rows kept, and the dropped-bucket
-    recall-loss totals. Rows are de-duplicated on (mode, run_id)
-    first. The runs table is one row per JOB — operator metadata
-    scale, safe to aggregate driver-side."""
+    recall-loss totals. The runs table is one row per JOB — operator
+    metadata scale, safe to aggregate driver-side."""
     from pyspark.sql import functions as F  # noqa: N812
 
     from .sources.io import read_table, sub_target, table_exists
@@ -513,7 +502,7 @@ def _show_runs(args) -> int:
     if not table_exists(spark, runs_target):
         print(json.dumps({"error": f"no runs table at {runs_target} (no clean job has run here)"}))
         return 1
-    runs = read_table(spark, runs_target).dropDuplicates(["mode", "run_id"])
+    runs = read_table(spark, runs_target)
     per_mode = [
         r.asDict()
         for r in runs.groupBy("mode")

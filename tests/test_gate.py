@@ -1,6 +1,7 @@
 """The driver-gate registry (__spark_entry__.py): its size, its oracle
-keys, the library modules its lazy entry imports name, and the hash
-equality of the domain entries with their DuckDB twins."""
+keys, the hash equality of the domain entries with their DuckDB twins,
+and that every library import named in the gate file or in a library
+module (function-level ones included) resolves."""
 
 from __future__ import annotations
 
@@ -36,27 +37,62 @@ def test_every_oracle_is_a_registered_entry():
     assert set(entry.oracle_sql()) <= set(entry.queries())
 
 
-def _library_imports() -> list[tuple[str, str | None]]:
-    """(module, imported name) for every ``pdf_ocr_api_spark`` import in
-    the gate file, at any nesting depth (entry imports are lazy)."""
-    tree = ast.parse((ROOT / "__spark_entry__.py").read_text())
+def _library_imports(path: Path) -> list[tuple[int, str, str | None]]:
+    """(line, module, imported name) for every ``pdf_ocr_api_spark``
+    import in ``path``, at any nesting depth (entry imports and many
+    library imports are function-level, so a plain import of the file
+    never runs them). Relative imports resolve against the file's own
+    package."""
+    package = path.relative_to(ROOT).with_suffix("").parts[:-1]
     out = []
-    for node in ast.walk(tree):
-        if isinstance(node, ast.ImportFrom) and (node.module or "").startswith("pdf_ocr_api_spark"):
-            out += [(node.module, a.name) for a in node.names]
+    for node in ast.walk(ast.parse(path.read_text())):
+        if isinstance(node, ast.ImportFrom):
+            module = node.module or ""
+            if node.level:
+                base = package[: len(package) - node.level + 1]
+                module = ".".join(base + ((module,) if module else ()))
+            if module.startswith("pdf_ocr_api_spark"):
+                out += [(node.lineno, module, a.name) for a in node.names if a.name != "*"]
         elif isinstance(node, ast.Import):
-            out += [(a.name, None) for a in node.names if a.name.startswith("pdf_ocr_api_spark")]
+            out += [
+                (node.lineno, a.name, None)
+                for a in node.names
+                if a.name.startswith("pdf_ocr_api_spark")
+            ]
     return out
 
 
-def test_entry_library_imports_resolve():
-    imports = _library_imports()
-    assert imports
-    for module, name in imports:
-        mod = importlib.import_module(module)
+def _dangling(path: Path) -> list[str]:
+    """``file:line module.name`` for each import of ``path`` that names
+    no module or attribute."""
+    rel = path.relative_to(ROOT)
+    missing = []
+    for line, module, name in _library_imports(path):
+        try:
+            mod = importlib.import_module(module)
+        except ModuleNotFoundError:
+            missing.append(f"{rel}:{line} {module}")
+            continue
         if name is None or hasattr(mod, name):
             continue
-        assert importlib.util.find_spec(f"{module}.{name}") is not None, (module, name)
+        if importlib.util.find_spec(f"{module}.{name}") is None:
+            missing.append(f"{rel}:{line} {module}.{name}")
+    return missing
+
+
+def test_entry_library_imports_resolve():
+    gate = ROOT / "__spark_entry__.py"
+    assert _library_imports(gate)
+    assert _dangling(gate) == []
+
+
+@pytest.mark.parametrize(
+    "rel",
+    sorted(str(p.relative_to(ROOT)) for p in (ROOT / "pdf_ocr_api_spark").rglob("*.py")),
+)
+def test_library_imports_resolve(rel):
+    missing = _dangling(ROOT / rel)
+    assert not missing, missing
 
 
 @pytest.mark.parametrize("name", ["domain_cap", "domain_stats"])

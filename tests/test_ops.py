@@ -1091,24 +1091,6 @@ def test_corrupt_sniffed_payloads_degrade_not_crash(spark):
     assert len(fr) == 2
 
 
-def test_sniff_kind_bmp_validation(spark):
-    """sniff_kind must not classify arbitrary 'BM…' bytes as bmp — only
-    payloads with a known BITMAPINFOHEADER size byte at offset 14."""
-    from pdf_ocr_api_spark.ops import codecs
-    from pdf_ocr_api_spark.sources.binary import sniff_kind
-
-    real = codecs.encode_bmp(np.zeros((4, 4, 3), np.uint8))
-    rows = [
-        (0, bytearray(real)),
-        (1, bytearray(b"BMW sales figures, a text document")),
-        (2, bytearray(b"RIFF\x00\x00\x00\x00WAVEdata")),
-        (3, bytearray(b"YUV4MPEG2 W2 H2 F25:1\n")),
-    ]
-    df = spark.createDataFrame(rows, "i LONG, payload BINARY")
-    got = {r.i: r.kind for r in df.select("i", sniff_kind(F.col("payload")).alias("kind")).collect()}
-    assert got == {0: "bmp", 1: "unknown", 2: "riff", 3: "y4m"}
-
-
 def test_brute_force_topk_batch_matches_per_query(emb):
     """One-scan batched ANN must equal per-query brute force for every
     query (modulo the shared rounded-cosine tie-break)."""
@@ -1366,135 +1348,21 @@ def test_runner_show_runs(spark, tmp_path, capsys):
     assert out["modes"][0]["runs"] == 1 and out["modes"][0]["rows_kept"] == 1
     assert out["dropped_buckets_total"] == 0 and out["recall_loss_alert"] is False
 
-
-def test_jpeg_roundtrip_psnr():
-    """r5 JPEG codec: encode→decode is faithful (PSNR-bounded — JPEG is
-    lossy by design) across 4:4:4 / 4:2:0, restart intervals, grayscale
-    and odd shapes; deterministic byte-for-byte."""
-    from pdf_ocr_api_spark.ops import codecs
-
-    def psnr(a, b):
-        mse = ((a.astype(np.float64) - b.astype(np.float64)) ** 2).mean()
-        return 99.0 if mse == 0 else 10 * np.log10(255.0**2 / mse)
-
-    x = np.linspace(0, 255, 64)[None, :] * np.ones((48, 1))
-    img = np.stack([x, x[::-1] * 0.7 + 30, np.full((48, 64), 128.0)], axis=2).astype(np.uint8)
-
-    for sub in ("444", "420", "422"):
-        for ri in (0, 3):
-            b = codecs.encode_jpeg(img, quality=90, subsample=sub, restart_interval=ri)
-            assert codecs.sniff_codec(b) == "jpeg"
-            back = codecs.decode_jpeg(b)
-            assert back.shape == img.shape
-            assert psnr(img, back) > 40, (sub, ri)
-    # determinism
-    assert codecs.encode_jpeg(img, 90) == codecs.encode_jpeg(img, 90)
-
-    # grayscale replicates to 3 channels
-    g = x.astype(np.uint8)
-    backg = codecs.decode_jpeg(codecs.encode_jpeg(g, quality=90))
-    assert backg.shape == (48, 64, 3)
-    assert psnr(np.repeat(g[:, :, None], 3, 2), backg) > 40
-
-    # odd shapes, noisy content, both layouts with restarts. 4:2:0 on
-    # NOISE loses chroma by design (2×2 decimation), so its fidelity is
-    # judged against the chroma-decimated reference, not the original.
-    def decimated_ref(im):
-        f = im.astype(np.float64)
-        r, g, b = f[:, :, 0], f[:, :, 1], f[:, :, 2]
-        y = 0.299 * r + 0.587 * g + 0.114 * b
-        cb = -0.168736 * r - 0.331264 * g + 0.5 * b
-        cr = 0.5 * r - 0.418688 * g - 0.081312 * b
-        h, w = y.shape
-        out = []
-        for p in (cb, cr):
-            pp = np.pad(p, ((0, (-h) % 2), (0, (-w) % 2)), mode="edge")
-            d = pp.reshape(pp.shape[0] // 2, 2, pp.shape[1] // 2, 2).mean(axis=(1, 3))
-            out.append(np.repeat(np.repeat(d, 2, 0), 2, 1)[:h, :w])
-        cb, cr = out
-        return np.clip(np.stack(
-            [y + 1.402 * cr, y - 0.344136 * cb - 0.714136 * cr, y + 1.772 * cb], axis=2
-        ), 0, 255)
-
-    rng = np.random.default_rng(5)
-    for shape in [(1, 1, 3), (7, 9, 3), (17, 23, 3), (16, 16, 3)]:
-        im = rng.integers(0, 256, shape, dtype=np.uint8)
-        for sub in ("444", "420"):
-            back = codecs.decode_jpeg(codecs.encode_jpeg(im, 95, sub, 2))
-            assert back.shape == shape
-            ref = im if sub == "444" else decimated_ref(im)
-            assert psnr(ref, back) > 25, (shape, sub)
-
-
-def test_jpeg_reject_corrupt_and_unsupported():
-    """r5 JPEG codec: progressive streams, truncation anywhere, and
-    garbage all raise ValueError; the feature router degrades."""
-    from pdf_ocr_api_spark.ops import codecs, multimodal
-
-    rng = np.random.default_rng(3)
-    img = rng.integers(0, 256, (16, 16, 3), dtype=np.uint8)
-    good = codecs.encode_jpeg(img, 90)
-
-    # progressive: flip SOF0 (FFC0) to SOF2 (FFC2)
-    prog = good.replace(b"\xff\xc0", b"\xff\xc2", 1)
-    with pytest.raises(ValueError):
-        codecs.decode_jpeg(prog)
-    # truncations at several depths: header, mid-segment, mid-scan
-    for cut in (2, 10, len(good) // 2, len(good) - 3):
-        with pytest.raises(ValueError):
-            codecs.decode_jpeg(good[:cut])
-    with pytest.raises(ValueError):
-        codecs.decode_jpeg(b"\x00\x01\x02")
-    with pytest.raises(ValueError):
-        codecs.decode_jpeg(b"\xff\xd8\xff\xd9")  # EOI, no image
-    # router: corrupt JPEG-prefixed bytes → deterministic stand-in
-    bad = good[: len(good) // 2]
-    assert np.allclose(multimodal.media_feature_vector(bad), multimodal.fake_features(bad))
-
-
-def test_jpeg_real_feature_path(spark):
-    """r5: JPEG payloads flow through the REAL decode path in the
-    distributed feature UDF, and the features approximate the source
-    image's (JPEG is lossy: compare against the decoded image exactly,
-    the original loosely)."""
-    from pdf_ocr_api_spark.ops import codecs, multimodal
-
-    x = np.linspace(0, 255, 32)[None, :] * np.ones((24, 1))
-    img = np.stack([x, x * 0.5, x[::-1]], axis=2).astype(np.uint8)
-    payload = codecs.encode_jpeg(img, quality=95)
-    decoded = codecs.decode_jpeg(payload)
-
-    df = spark.createDataFrame(
-        [(0, "image", bytearray(payload))], "media_id LONG, kind STRING, payload BINARY"
-    )
-    got = np.array(multimodal.media_features(df).collect()[0].feature, np.float32)
-    assert np.allclose(got, multimodal.image_features(decoded), atol=1e-6)
-    assert np.allclose(got[:6], multimodal.image_features(img)[:6], atol=0.02)
-    assert multimodal.decode_image(payload).shape == img.shape
-
-
-def test_jpeg_hostile_streams_raise_valueerror():
-    """r5 review: sampling factor 0 (ZeroDivisionError bait) and
-    implausible SOF dimensions (32 GiB allocation bait) must be
-    ValueError — the router's only degrade path."""
-    import struct as _s
-
-    from pdf_ocr_api_spark.ops import codecs
-
-    rng = np.random.default_rng(1)
-    good = codecs.encode_jpeg(rng.integers(0, 256, (8, 8, 3), dtype=np.uint8), 90)
-
-    # locate SOF0 and patch a component's sampling byte to h=1,v=0
-    i = good.index(b"\xff\xc0")
-    b = bytearray(good)
-    b[i + 11] = 0x10  # first component hv byte (after len/prec/h/w/nc + id)
-    with pytest.raises(ValueError):
-        codecs.decode_jpeg(bytes(b))
-    # implausible dimensions: patch SOF h/w to 65535x65535
-    b = bytearray(good)
-    _s.pack_into(">HH", b, i + 5, 65535, 65535)
-    with pytest.raises(ValueError):
-        codecs.decode_jpeg(bytes(b))
+    # two incremental jobs in ONE Spark application share the run_id
+    # (the applicationId) and must still count as two runs
+    for i, extra in enumerate(["a sailor mends the torn net before the storm reaches "
+                               "the harbour and the boats come home at dusk",
+                               "the baker rises early to knead fresh dough while the "
+                               "town sleeps and the ovens slowly warm up"]):
+        inc = str(tmp_path / f"inc{i}")
+        spark.createDataFrame([(f"n{i}", 0, "user", extra, None)], schema).write.parquet(inc)
+        assert runner.main(["--clean-incremental", "--input", inc, "--output", root] + knobs) == 0
+    capsys.readouterr()
+    assert runner.main(["--show-runs", "--output", root]) == 0
+    out = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    modes = {m["mode"]: m for m in out["modes"]}
+    assert modes["clean_corpus"]["runs"] == 1
+    assert modes["clean_incremental"]["runs"] == 2
 
 
 def test_png_hostile_streams_raise_valueerror():
@@ -1604,8 +1472,8 @@ def test_probe_mp4_and_mp3():
 
 
 def test_media_metadata_distributed(spark):
-    """r5: media_metadata fills the MEDIA_SCHEMA meta fields for ALL
-    nine formats in one shuffle-free mapInPandas pass; unknown bytes
+    """r5: media_metadata fills the MEDIA_SCHEMA meta fields for every
+    probed format in one shuffle-free mapInPandas pass; unknown bytes
     degrade to nulls."""
     from pdf_ocr_api_spark.ops import codecs, mediameta, multimodal
 
@@ -1617,7 +1485,6 @@ def test_media_metadata_distributed(spark):
         0: ("image", codecs.encode_bmp(img)),
         1: ("image", codecs.encode_ppm(img)),
         2: ("image", codecs.encode_png(img)),
-        3: ("image", codecs.encode_jpeg(img, 90)),
         4: ("audio", codecs.encode_wav(pcm, 16000)),
         5: ("audio", codecs.encode_au(pcm, 8000)),
         6: ("video", codecs.encode_y4m(frames, fps=5)),
@@ -1630,7 +1497,7 @@ def test_media_metadata_distributed(spark):
         "media_id LONG, kind STRING, payload BINARY",
     )
     got = {r.media_id: r for r in multimodal.media_metadata(df).collect()}
-    for i in (0, 1, 2, 3):
+    for i in (0, 1, 2):
         assert (got[i].width, got[i].height) == (16, 12), i
         assert got[i].mime.startswith("image/")
     assert got[4].duration_ms == 500 and got[4].mime == "audio/wav"
@@ -1647,9 +1514,9 @@ def test_media_metadata_distributed(spark):
 def test_probe_hardening_review_fixes(spark):
     """r5 review batch 2: truncated container bodies are ValueError (not
     struct.error/IndexError), unknown-duration sentinels are None, ID3v2.4
-    footers are skipped, JPEG fill bytes tolerated, mixed-samplerate MP3
-    durations correct, Y4M probed without materializing frames, and
-    out-of-schema header values become nulls instead of killing the UDF."""
+    footers are skipped, mixed-samplerate MP3 durations correct, Y4M
+    probed without materializing frames, and out-of-schema header values
+    become nulls instead of killing the UDF."""
     import struct as _s
 
     from pdf_ocr_api_spark.ops import codecs, mediameta, multimodal
@@ -1692,14 +1559,8 @@ def test_probe_hardening_review_fixes(spark):
     # ±1 ms: the parts are floored independently of the whole
     assert abs(got["duration_ms"] - (m2["duration_ms"] + m1["duration_ms"])) <= 1
 
-    # JPEG fill bytes before a marker still probe
     rng = np.random.default_rng(0)
     img = rng.integers(0, 256, (8, 10, 3), dtype=np.uint8)
-    good = codecs.encode_jpeg(img, 90)
-    i = good.index(b"\xff\xc0")
-    filled = good[:i] + b"\xff" + good[i:]  # extra 0xFF fill byte
-    m = mediameta.probe_media(filled)
-    assert (m["width"], m["height"]) == (10, 8)
 
     # Y4M walk equals the decoder's frame count without materializing
     y4m = codecs.encode_y4m(rng.integers(0, 256, (7, 12, 12), dtype=np.uint8), fps=5)

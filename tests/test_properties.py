@@ -261,24 +261,6 @@ def test_png_corrupt_never_crashes_router(data, seed):
     assert multimodal.media_feature_vector(mutated).shape == (16,)
 
 
-@settings(max_examples=40, deadline=None)
-@given(data=st.binary(min_size=0, max_size=200), seed=st.integers(0, 2**31 - 1))
-def test_jpeg_corrupt_never_crashes_router(data, seed):
-    """r5: mutated/truncated JPEG-prefixed bytes either decode or raise
-    ValueError; the multimodal router always yields a 16-dim vector."""
-    from pdf_ocr_api_spark.ops import codecs, multimodal
-
-    rng = np.random.default_rng(seed)
-    real = codecs.encode_jpeg(rng.integers(0, 256, (9, 11, 3), dtype=np.uint8), 90)
-    cut = int(rng.integers(0, len(real)))
-    mutated = real[:cut] + data
-    try:
-        codecs.decode_jpeg(mutated)
-    except ValueError:
-        pass
-    assert multimodal.media_feature_vector(mutated).shape == (16,)
-
-
 @settings(max_examples=60, deadline=None)
 @given(data=st.binary(min_size=0, max_size=300))
 def test_probe_media_corrupt_never_escapes(data):
