@@ -165,33 +165,6 @@ def _filter_assembled(svc: DataFrame) -> DataFrame:
     return svc.filter(keep)
 
 
-def conversation_text(extracted: DataFrame) -> DataFrame:
-    """A1 — ordered concat of per-turn document text (ref :59-61).
-
-    ``doc_text`` (emitted by the pipeline) is what the reference's
-    parseDocument sees per chunk: the raw payload text for prose turns, the
-    embedded ``text`` field for Document-AI payloads, the extracted clean
-    text for html/layout turns (payload kinds the reference outsourced to
-    cloud services).
-
-    **Explicit opt-in only**: this materializes one conversation's ENTIRE
-    text in a single aggregation buffer/row — conversation-size-bound, the
-    one shape that cannot survive a hot conversation at 100×. The record
-    assembly no longer consumes it; every conversation-level scalar is
-    computed segmented (``conversation_scalars``) instead.
-    """
-    e = extracted.withColumn("_doc_text", F.coalesce(F.col("doc_text"), F.lit("")))
-    return e.groupBy("conv_id").agg(
-        F.concat_ws(
-            "\n",
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("turn_idx", "_doc_text"))),
-                lambda s: s["_doc_text"],
-            ),
-        ).alias("conv_text")
-    )
-
-
 # J6 tokens probed against the normalized conversation text
 # (ref parser/detectTipoCertidao.js:9-31); the boundary-piece width below
 # derives from the longest one.

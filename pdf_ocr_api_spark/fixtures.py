@@ -147,7 +147,6 @@ _BOILER_LINES = [
 _UF_CODES = ["BA", "SP", "RJ", "MG", "PR", "CE", "GO"]
 _TOOLS = ["search", "browser", "python", "calculator"]
 
-PAYLOAD_KINDS = ["plain", "boiler", "html", "pdf_table", "pdf_layout", "cat", "lines"]
 _KIND_CUM = [
     ("plain", 0.35),
     ("boiler", 0.55),

@@ -373,26 +373,3 @@ HDR_ITEM = re.compile(r"\bITEM\b", re.ASCII)
 HDR_UNIDADE = re.compile(r"\bUNIDADE\b", re.ASCII)
 HDR_QUANTIDADE = re.compile(r"\bQUANTIDADE\b|\bQTD\b", re.ASCII)
 HDR_DESCRICAO = re.compile(r"\bNATUREZA\b|\bSERVIC|\bDESCRIC", re.ASCII)
-
-# F10 — legacy isServicoValido deny-list, ref parser/formatFinalResponse.js:1-13
-ITEM_DENY = [
-    re.compile(r"^UF:", re.IGNORECASE),
-    re.compile(r"^CEP:", re.IGNORECASE),
-    re.compile(r"^Início da Obra", re.IGNORECASE),
-    re.compile(r"^Término da Obra", re.IGNORECASE),
-    re.compile(r"ENGENHEIRO", re.IGNORECASE),
-]
-
-# T13 — OCR scrub chain, ref ocr-tesseract.cjs:31-35 (global, /i where noted)
-OCR_SCRUB = [
-    (re.compile(r"\b[eac]{3,}\b", re.ASCII | re.IGNORECASE), ""),
-    (re.compile(r"\s{2,}"), " "),
-    (re.compile(r"(\n\s*){2,}"), "\n"),
-    (re.compile(r"\s+([.,;:])"), r"\1"),
-]
-
-
-def ocr_scrub(texto: str) -> str:
-    for rx, rep in OCR_SCRUB:
-        texto = rx.sub(rep, texto)
-    return texto

@@ -94,16 +94,6 @@ def _marker_basis(col):
     return F.translate(F.lower(F.coalesce(col, F.lit(""))), _ACC_SRC, _ACC_DST)
 
 
-def lang_scores(col):
-    """Marker-hit counts per language → map<string,int>-like struct."""
-    return F.struct(
-        *[
-            F.size(F.regexp_extract_all(_marker_basis(col), F.lit(rx), 0)).alias(lang)
-            for lang, rx in LANG_MARKERS.items()
-        ]
-    )
-
-
 def _lang_id_from_scores(scores: list[tuple[str, "F.Column"]]):
     """argmax with LANG_MARKERS-order tie-break, built so each score
     expression appears at most TWICE (in greatest() and in one equality).

@@ -89,8 +89,6 @@ def extract_schema(
     )
 
 
-EXTRACT_SCHEMA = extract_schema()
-
 _STYLE_NULLS = {
     "font_family": None,
     "font_weight": None,

@@ -15,33 +15,9 @@ Production setup (documented for spark-submit deployments):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
-
-def iceberg_available(spark: SparkSession) -> bool:
-    """True when an Iceberg catalog is configured AND the runtime jar is
-    on the classpath. Catalogs are looked up in the session's
-    RuntimeConfig, not the SparkContext conf — catalogs registered at
-    runtime via ``spark.conf.set("spark.sql.catalog.x", ...)`` (as the
-    jar-gated test fixture does) never appear in the context conf."""
-    try:
-        confs = spark.conf.getAll  # pyspark >= 3.4 property
-    except Exception:
-        # older pyspark: fall back to the SparkContext conf rather than
-        # silently reporting "no catalog" (catalogs set at launch via
-        # --conf DO appear there)
-        confs = dict(spark.sparkContext.getConf().getAll())
-    has_catalog = any(k.startswith("spark.sql.catalog.") for k in confs)
-    if not has_catalog:
-        return False
-    try:
-        spark._jvm.java.lang.Class.forName("org.apache.iceberg.spark.SparkCatalog")
-        return True
-    except Exception:
-        return False
-
-
 import re as _re
+
+from pyspark.sql import DataFrame, SparkSession
 
 _IDENT_RX = _re.compile(r"^[A-Za-z_][\w]*(\.[A-Za-z_][\w]*){1,2}$")
 _FILE_EXT = (".parquet", ".json", ".csv", ".orc", ".avro")

@@ -1,13 +1,16 @@
 """The driver-gate registry (__spark_entry__.py): its size, its oracle
 keys, the hash equality of the domain entries with their DuckDB twins,
-and that every library import named in the gate file or in a library
-module (function-level ones included) resolves."""
+that every library import named in the gate file or in a library
+module (function-level ones included) resolves, and that every
+top-level library definition is referenced somewhere."""
 
 from __future__ import annotations
 
 import ast
 import importlib
 import importlib.util
+import re
+from collections import Counter
 from pathlib import Path
 
 import duckdb
@@ -16,6 +19,7 @@ import pytest
 import __spark_entry__ as entry
 
 ROOT = Path(__file__).resolve().parents[1]
+LIBRARY = sorted((ROOT / "pdf_ocr_api_spark").rglob("*.py"))
 
 
 def _load_check_entry():
@@ -86,13 +90,39 @@ def test_entry_library_imports_resolve():
     assert _dangling(gate) == []
 
 
-@pytest.mark.parametrize(
-    "rel",
-    sorted(str(p.relative_to(ROOT)) for p in (ROOT / "pdf_ocr_api_spark").rglob("*.py")),
-)
+@pytest.mark.parametrize("rel", [str(p.relative_to(ROOT)) for p in LIBRARY])
 def test_library_imports_resolve(rel):
     missing = _dangling(ROOT / rel)
     assert not missing, missing
+
+
+def _top_level_names(path: Path) -> list[tuple[int, str]]:
+    """(line, name) for each module-level ``def``/``class``/``Name =``."""
+    out = []
+    for node in ast.parse(path.read_text()).body:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            out.append((node.lineno, node.name))
+        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            out += [(node.lineno, t.id) for t in targets if isinstance(t, ast.Name)]
+    return out
+
+
+def test_library_definitions_are_referenced():
+    """A library definition whose name occurs in no ``*.py`` file of the
+    repo but its own definition is dead code. Counting ``\\w+`` runs
+    equals counting word-boundary matches of an identifier."""
+    words = Counter()
+    for p in ROOT.rglob("*.py"):
+        if not {".git", ".perfbench_work"} & set(p.relative_to(ROOT).parts):
+            words.update(re.findall(r"\w+", p.read_text()))
+    dead = [
+        f"{path.relative_to(ROOT)}:{line} {name}"
+        for path in LIBRARY
+        for line, name in _top_level_names(path)
+        if words[name] <= 1
+    ]
+    assert not dead, dead
 
 
 @pytest.mark.parametrize("name", ["domain_cap", "domain_stats"])

@@ -4,7 +4,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from pdf_ocr_api_spark.ops import dedup, multimodal, similarity, textstats
+from pdf_ocr_api_spark.ops import dedup, similarity, textstats
 
 
 @pytest.fixture(scope="module")
@@ -201,19 +201,6 @@ def test_fingerprint_stability(docs):
     assert a[0] != a[4]
 
 
-def test_multimodal_features_deterministic(spark):
-    media = multimodal.synthesize_media(spark, 30)
-    f1 = multimodal.media_features(media.repartition(1)).orderBy("media_id").toPandas()
-    f2 = multimodal.media_features(media.repartition(7)).orderBy("media_id").toPandas()
-    assert f1.feature.map(tuple).tolist() == f2.feature.map(tuple).tolist()
-    assert (f1.n_bytes > 0).all()
-
-
-def test_multimodal_decode_is_stub():
-    with pytest.raises(NotImplementedError):
-        multimodal.decode_image(b"not an image")
-
-
 def test_embedding_near_dup(emb, spark):
     df, vecs = emb
     exact = similarity.embedding_near_pairs_exact(df, threshold=0.95)
@@ -278,25 +265,6 @@ def test_lsh_topk_multi_table_recall(near_dup_corpus):
     approx = {r.id for r in similarity.lsh_topk(cand, q, k=10).collect()}
     recall = len(set(brute) & approx) / 10
     assert recall >= 0.9, f"recall@10={recall} brute={brute} approx={sorted(approx)}"
-
-
-def test_multimodal_resize_and_frame_sample(spark):
-    media = multimodal.synthesize_media(spark, 12)
-    rs = multimodal.resize_media(media, 32, 32).orderBy("media_id").toPandas()
-    assert len(rs) == 12 and (rs.width == 32).all()
-    rs2 = multimodal.resize_media(media.repartition(5), 32, 32).orderBy("media_id").toPandas()
-    assert rs.payload.map(bytes).tolist() == rs2.payload.map(bytes).tolist()
-
-    fr = multimodal.frame_sample(media.filter("kind = 'video'"), n_frames=3)
-    pdf = fr.orderBy("media_id", "frame_idx").toPandas()
-    n_videos = media.filter("kind = 'video'").count()
-    assert len(pdf) == 3 * n_videos
-    # frames differ across frame_idx but are deterministic per (media, idx)
-    g = pdf[pdf.media_id == pdf.media_id.iloc[0]]
-    assert len({tuple(f) for f in g.frame}) == 3
-
-    with pytest.raises(NotImplementedError):
-        multimodal.resize_image(b"x", 8, 8)
 
 
 def test_minhash_band_divisibility_guard(docs):
@@ -934,163 +902,6 @@ def test_with_lang_id_fused_equals_per_lang(spark, docs):
     assert fused == per_lang
 
 
-def test_codecs_roundtrip():
-    """Pure-numpy codecs: encode→decode identity for BMP (incl. rows
-    needing padding), WAV (mono + stereo), Y4M (multi-frame)."""
-    from pdf_ocr_api_spark.ops import codecs
-
-    rng = np.random.default_rng(5)
-    for w, h in [(7, 5), (16, 12), (3, 9)]:  # 7*3=21 → 3 pad bytes
-        rgb = rng.integers(0, 256, (h, w, 3), dtype=np.uint8)
-        assert (codecs.decode_bmp(codecs.encode_bmp(rgb)) == rgb).all()
-    mono = (rng.standard_normal(500) * 10000).astype(np.int16)
-    got, rate = codecs.decode_wav(codecs.encode_wav(mono, 8000))
-    assert rate == 8000 and (got[:, 0] == mono).all()
-    stereo = (rng.standard_normal((300, 2)) * 10000).astype(np.int16)
-    got2, _ = codecs.decode_wav(codecs.encode_wav(stereo, 44100))
-    assert (got2 == stereo).all()
-    frames = rng.integers(0, 256, (3, 8, 10), dtype=np.uint8)
-    fy, fps = codecs.decode_y4m(codecs.encode_y4m(frames, fps=30))
-    assert fps == 30 and (fy == frames).all()
-
-
-def test_codecs_roundtrip_ppm_au():
-    """r4 codecs: PPM (P6) and Sun AU encode→decode identity, header
-    comment/whitespace handling, unsupported-flavor rejection, and
-    format-preserving resize routing."""
-    from pdf_ocr_api_spark.ops import codecs
-
-    rng = np.random.default_rng(9)
-    rgb = rng.integers(0, 256, (5, 7, 3), dtype=np.uint8)
-    assert (codecs.decode_ppm(codecs.encode_ppm(rgb)) == rgb).all()
-    # Netpbm comment + mixed whitespace in the header
-    commented = b"P6 # a comment\n# another\n 7\t5\n255\n" + rgb.tobytes()
-    assert (codecs.decode_ppm(commented) == rgb).all()
-    with pytest.raises(ValueError):  # 16-bit maxval flavor
-        codecs.decode_ppm(b"P6\n2 2\n65535\n" + b"\x00" * 24)
-
-    mono = (rng.standard_normal(400) * 9000).astype(np.int16)
-    got, rate = codecs.decode_au(codecs.encode_au(mono, 22050))
-    assert rate == 22050 and (got[:, 0] == mono).all()
-    stereo = (rng.standard_normal((150, 2)) * 9000).astype(np.int16)
-    got2, _ = codecs.decode_au(codecs.encode_au(stereo, 8000))
-    assert (got2 == stereo).all()
-    # unknown-size (0xFFFFFFFF) reads to end-of-payload, per the format
-    enc = bytearray(codecs.encode_au(mono, 8000))
-    enc[8:12] = b"\xff\xff\xff\xff"
-    got3, _ = codecs.decode_au(bytes(enc))
-    assert (got3[:, 0] == mono).all()
-
-    assert codecs.sniff_codec(codecs.encode_ppm(rgb)) == "ppm"
-    assert codecs.sniff_codec(codecs.encode_au(mono)) == "au"
-    assert codecs.sniff_codec(b"P6x not ppm") is None  # magic needs whitespace next
-    assert codecs.sniff_codec(b"P6") is None  # bare magic (empty-slice trap)
-    with pytest.raises(ValueError):  # maxval not followed by whitespace
-        codecs.decode_ppm(b"P6\n2 2\n255x" + b"\x00" * 12)
-    # spec-valid sub-255 maxval rescales to the 0..255 basis
-    scaled = codecs.decode_ppm(b"P6\n1 1\n100\n" + bytes([100, 50, 0]))
-    assert scaled.tolist() == [[[255, 128, 0]]]
-
-    # resize re-encodes in the SOURCE format
-    from pdf_ocr_api_spark.ops import multimodal
-
-    small = codecs.decode_ppm(multimodal.resize_image(codecs.encode_ppm(rgb), 3, 2))
-    assert small.shape == (2, 3, 3)
-    # feature router: real image/audio features, not the fake fallback
-    pv = multimodal.media_feature_vector(codecs.encode_ppm(rgb))
-    assert abs(pv[0] - rgb[:, :, 0].mean() / 255.0) < 0.01
-    av = multimodal.media_feature_vector(codecs.encode_au(mono, 8000))
-    rms = float(np.sqrt(np.mean((mono / 32768.0) ** 2)))
-    assert abs(av[0] - rms) < 0.02  # feature[0] IS the RMS, tightly
-
-
-def test_codecs_reject_garbage():
-    from pdf_ocr_api_spark.ops import codecs
-
-    for fn in (codecs.decode_bmp, codecs.decode_wav, codecs.decode_y4m,
-               codecs.decode_ppm, codecs.decode_au):
-        with pytest.raises(ValueError):
-            fn(b"garbage bytes that are no media at all")
-    assert codecs.sniff_codec(b"garbage") is None
-    assert codecs.sniff_codec(None) is None
-
-
-def test_real_decode_resize_and_features(spark):
-    """REAL media paths: BMP resize is an actual nearest-neighbor
-    downsample (checkerboard preserved), WAV features reflect the
-    signal (RMS of a tone), Y4M frame sampling returns features of the
-    ACTUAL decoded frames — all through the distributed mapInPandas
-    path, deterministic across partitionings."""
-    from pdf_ocr_api_spark.ops import codecs
-
-    # image: 2x2 checkerboard blown up to 8x8 then resized back
-    board = np.zeros((2, 2, 3), np.uint8)
-    board[0, 1] = board[1, 0] = 255
-    big = codecs.resize_nearest(board, 8, 8)
-    payload = codecs.encode_bmp(big)
-    back = codecs.decode_bmp(multimodal.resize_image(payload, 2, 2))
-    assert (back == board).all()
-
-    media = multimodal.synthesize_real_media(spark, 12)
-    f1 = multimodal.media_features(media.repartition(1)).orderBy("media_id").toPandas()
-    f2 = multimodal.media_features(media.repartition(5)).orderBy("media_id").toPandas()
-    assert f1.feature.map(tuple).tolist() == f2.feature.map(tuple).tolist()
-
-    rows = {r.media_id: r for r in media.collect()}
-    # audio features are REAL: a pure tone at amplitude 12000/32768 has
-    # RMS ~ 0.37/sqrt(2) ~ 0.26
-    audio_feats = f1[f1.kind == "audio"].iloc[0].feature
-    assert 0.2 < audio_feats[0] < 0.32
-    # image features are REAL: mean of the red gradient channel ~ 0.5
-    img_feats = f1[f1.kind == "image"].iloc[0].feature
-    assert 0.35 < img_feats[0] < 0.65
-
-    # frame sampling decodes the actual Y4M frames
-    vid = media.filter("kind = 'video'")
-    fr = multimodal.frame_sample(vid, n_frames=2).orderBy("media_id", "frame_idx").toPandas()
-    first = next(r for r in rows.values() if r.kind == "video")
-    frames_y, _ = codecs.decode_y4m(bytes(first.payload))
-    want = multimodal.image_features(np.repeat(frames_y[0][:, :, None], 3, axis=2)).tolist()
-    got = fr[(fr.media_id == first.media_id) & (fr.frame_idx == 0)].iloc[0].frame
-    assert np.allclose(got, want, atol=1e-6)
-
-    # resize through the distributed path round-trips for BMP media
-    rs = multimodal.resize_media(media.filter("kind = 'image'"), 4, 4).toPandas()
-    for p in rs.payload:
-        dec = codecs.decode_bmp(bytes(p))
-        assert dec.shape == (4, 4, 3)
-
-
-def test_corrupt_sniffed_payloads_degrade_not_crash(spark):
-    """Payloads whose magic bytes sniff as decodable but fail to parse
-    (corrupt files, text starting 'BM…') must fall back to the fake
-    stand-ins — one bad row must never kill a corpus job."""
-    bad = [
-        (0, "image", bytearray(b"BMW sales figures for the quarter are up")),
-        (1, "image", bytearray(b"BM" + b"\x00" * 60)),           # BM + junk header
-        (2, "audio", bytearray(b"RIFF\x00\x00\x00\x00WAVEjunk")),  # no fmt/data
-        (3, "video", bytearray(b"YUV4MPEG2 W16 H12 F25:1\nFRAME\ntrunc")),
-        (4, "image", None),
-    ]
-    from pyspark.sql import types as T
-    schema = T.StructType([
-        T.StructField("media_id", T.LongType()),
-        T.StructField("kind", T.StringType()),
-        T.StructField("payload", T.BinaryType()),
-    ])
-    media = spark.createDataFrame(bad, schema)
-    feats = multimodal.media_features(media).orderBy("media_id").collect()
-    assert len(feats) == 5 and all(len(r.feature) == 16 for r in feats)
-    # scalar router agrees with the fake stand-in for each corrupt payload
-    for mid, _k, p in bad[:4]:
-        pb = bytes(p)
-        assert (multimodal.media_feature_vector(pb) == multimodal.fake_features(pb)).all()
-    rs = multimodal.resize_media(media, 8, 8).collect()
-    assert len(rs) == 5
-    fr = multimodal.frame_sample(media.filter("media_id = 3"), n_frames=2).collect()
-    assert len(fr) == 2
-
-
 def test_brute_force_topk_batch_matches_per_query(emb):
     """One-scan batched ANN must equal per-query brute force for every
     query (modulo the shared rounded-cosine tie-break)."""
@@ -1220,105 +1031,6 @@ def test_exact_duplicates_truncated_column(spark):
     assert all(not r.truncated for r in unc)
 
 
-def _ref_png_filter(img, ftypes):
-    """Delegates to the shared spec-reference filterer (tests/png_ref.py
-    — one reference implementation, used by both this file and
-    test_properties, so a spec correction cannot leave one stale)."""
-    from .png_ref import ref_png_stream
-
-    return ref_png_stream(img, ftypes, include_ancillary=True)
-
-
-def test_png_roundtrip_and_filters():
-    """r5 codec: PNG encode→decode round-trips RGB and RGBA exactly,
-    and the decoder reverses every spec filter type (0-4) against an
-    independent reference filterer."""
-    from pdf_ocr_api_spark.ops import codecs
-
-    rng = np.random.default_rng(7)
-    for shape in [(12, 16, 3), (5, 3, 4), (1, 1, 3), (33, 7, 4)]:
-        img = rng.integers(0, 256, shape, dtype=np.uint8)
-        b = codecs.encode_png(img)
-        assert codecs.sniff_codec(b) == "png"
-        back = codecs.decode_png(b)
-        assert back.shape == shape and (back == img).all()
-
-    for ch in (3, 4):
-        img = rng.integers(0, 256, (6, 8, ch), dtype=np.uint8)
-        png = _ref_png_filter(img, [0, 1, 2, 3, 4, 4])
-        assert (codecs.decode_png(png) == img).all()
-    # gradient image: smooth data exercises nontrivial filter payoffs
-    grad = np.arange(24 * 24 * 3, dtype=np.int64).reshape(24, 24, 3) % 256
-    png = _ref_png_filter(grad.astype(np.uint8), [1, 2, 3, 4] * 6)
-    assert (codecs.decode_png(png) == grad).all()
-
-
-def test_png_reject_corrupt():
-    """r5 codec: bad magic, truncated stream, CRC corruption, chunk-tag
-    corruption and unsupported flavors all raise ValueError — and the
-    feature router degrades to fake_features instead of raising."""
-    from pdf_ocr_api_spark.ops import codecs
-
-    rng = np.random.default_rng(3)
-    img = rng.integers(0, 256, (6, 8, 3), dtype=np.uint8)
-    png = codecs.encode_png(img)
-    bads = [
-        b"\x89PNG\r\n\x1a\x00" + png[8:],   # wrong magic byte
-        png[: len(png) - 12],               # IEND cut off
-        png[:40],                           # mid-chunk truncation
-        png.replace(b"IDAT", b"IDAt", 1),   # tag corruption → CRC fail
-    ]
-    crc = bytearray(png)
-    crc[-5] ^= 0xFF                          # IEND CRC corruption
-    bads.append(bytes(crc))
-    for bad in bads:
-        with pytest.raises(ValueError):
-            codecs.decode_png(bad)
-    # interlaced / paletted flavors refused loudly
-    import struct as _s
-    import zlib as _z
-
-    def chunk(tag, body):
-        return _s.pack(">I", len(body)) + tag + body + _s.pack(
-            ">I", _z.crc32(tag + body) & 0xFFFFFFFF
-        )
-
-    for ihdr in (
-        _s.pack(">IIBBBBB", 8, 6, 8, 2, 0, 0, 1),   # Adam7
-        _s.pack(">IIBBBBB", 8, 6, 8, 3, 0, 0, 0),   # palette
-        _s.pack(">IIBBBBB", 8, 6, 16, 2, 0, 0, 0),  # 16-bit
-    ):
-        bad = b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr) + chunk(
-            b"IDAT", _z.compress(b"\x00" * 10)
-        ) + chunk(b"IEND", b"")
-        with pytest.raises(ValueError):
-            codecs.decode_png(bad)
-    # router: corrupt PNG bytes degrade to the deterministic stand-in
-    f = multimodal.media_feature_vector(png[:40])
-    assert np.allclose(f, multimodal.fake_features(png[:40]))
-
-
-def test_png_real_feature_path(spark):
-    """r5: PNG payloads flow through the REAL decode path end-to-end —
-    decode_image drops alpha to the (H, W, 3) feature contract, and the
-    distributed media_features output equals local image_features."""
-    from pdf_ocr_api_spark.ops import codecs
-
-    rng = np.random.default_rng(11)
-    rgb = rng.integers(0, 256, (9, 12, 3), dtype=np.uint8)
-    rgba = rng.integers(0, 256, (9, 12, 4), dtype=np.uint8)
-    assert multimodal.decode_image(codecs.encode_png(rgb)).shape == (9, 12, 3)
-    assert (multimodal.decode_image(codecs.encode_png(rgba)) == rgba[:, :, :3]).all()
-
-    rows = [(0, "image", bytearray(codecs.encode_png(rgb))),
-            (1, "image", bytearray(codecs.encode_png(rgba)))]
-    df = spark.createDataFrame(rows, "media_id LONG, kind STRING, payload BINARY")
-    got = {r.media_id: np.array(r.feature, np.float32)
-           for r in multimodal.media_features(df).collect()}
-    assert np.allclose(got[0], multimodal.image_features(rgb), atol=1e-6)
-    assert np.allclose(got[1], multimodal.image_features(rgba[:, :, :3]), atol=1e-6)
-
-
 def test_runner_show_runs(spark, tmp_path, capsys):
     """r5: --show-runs is the operator's one-call alert surface — JSON
     per-mode summary of the persisted runs table, with the
@@ -1363,219 +1075,6 @@ def test_runner_show_runs(spark, tmp_path, capsys):
     modes = {m["mode"]: m for m in out["modes"]}
     assert modes["clean_corpus"]["runs"] == 1
     assert modes["clean_incremental"]["runs"] == 2
-
-
-def test_png_hostile_streams_raise_valueerror():
-    """r5 review: CRC-valid wrong-length IHDR (struct.error bait),
-    implausible dimensions, and a DEFLATE bomb whose inflation exceeds
-    the declared raster must all be ValueError, with the inflate
-    BOUNDED (the bomb must not materialize)."""
-    import struct as _s
-    import zlib as _z
-
-    from pdf_ocr_api_spark.ops import codecs
-
-    def chunk(tag, body):
-        return _s.pack(">I", len(body)) + tag + body + _s.pack(
-            ">I", _z.crc32(tag + body) & 0xFFFFFFFF
-        )
-
-    magic = b"\x89PNG\r\n\x1a\n"
-    # 12-byte IHDR with a valid CRC
-    bad_ihdr = magic + chunk(b"IHDR", b"\x00" * 12) + chunk(b"IEND", b"")
-    with pytest.raises(ValueError):
-        codecs.decode_png(bad_ihdr)
-    # implausible dimensions
-    huge = _s.pack(">IIBBBBB", 1 << 16, 1 << 16, 8, 2, 0, 0, 0)
-    with pytest.raises(ValueError):
-        codecs.decode_png(
-            magic + chunk(b"IHDR", huge) + chunk(b"IDAT", _z.compress(b"\x00" * 64))
-            + chunk(b"IEND", b"")
-        )
-    # DEFLATE bomb: 2x2 image declared, megabytes of zeros compressed
-    ihdr = _s.pack(">IIBBBBB", 2, 2, 8, 2, 0, 0, 0)
-    bomb = magic + chunk(b"IHDR", ihdr) + chunk(
-        b"IDAT", _z.compress(b"\x00" * (8 << 20))
-    ) + chunk(b"IEND", b"")
-    with pytest.raises(ValueError):
-        codecs.decode_png(bomb)
-
-
-def _mk_box(typ, body):
-    import struct as _s
-
-    return _s.pack(">I", len(body) + 8) + typ + body
-
-
-def _mk_mp4(timescale=1000, duration=7500, w=640, h=360, fourcc=b"avc1", v1=False):
-    """Minimal ISO BMFF stream carrying exactly the boxes probe_mp4
-    reads — the crafted ground truth the prober is judged against."""
-    import struct as _s
-
-    if v1:
-        mvhd = b"\x01" + b"\x00" * 3 + b"\x00" * 16 + _s.pack(">IQ", timescale, duration) + b"\x00" * 80
-        tkhd = b"\x01" + b"\x00" * 3 + b"\x00" * 84 + _s.pack(">II", w << 16, h << 16)
-    else:
-        mvhd = b"\x00" * 12 + _s.pack(">II", timescale, duration) + b"\x00" * 80
-        tkhd = b"\x00" * 76 + _s.pack(">II", w << 16, h << 16)
-    stsd = b"\x00" * 8 + _s.pack(">I", 16) + fourcc + b"\x00" * 8
-    stbl = _mk_box(b"stsd", stsd)
-    minf = _mk_box(b"stbl", stbl)
-    mdia = _mk_box(b"minf", minf)
-    trak = _mk_box(b"tkhd", tkhd) + _mk_box(b"mdia", mdia)
-    moov = _mk_box(b"mvhd", mvhd) + _mk_box(b"trak", trak)
-    return (
-        _mk_box(b"ftyp", b"isom\x00\x00\x02\x00isomiso2")
-        + _mk_box(b"moov", moov)
-        + _mk_box(b"mdat", b"\x00" * 32)
-    )
-
-
-def _mk_mp3(n_frames=38, id3=False):
-    """MPEG-1 Layer III 128 kbps 44.1 kHz CBR frames (417/418 bytes with
-    padding alternating off) — 1152 samples each."""
-    frames = bytearray()
-    if id3:
-        frames += b"ID3" + b"\x04\x00\x00" + b"\x00\x00\x00\x0a" + b"\x00" * 10
-    for _ in range(n_frames):
-        hdr = bytes([0xFF, 0xFB, 0x90, 0x00])  # V1 L3 128k 44100 no-pad stereo
-        frames += hdr + b"\x00" * (417 - 4)
-    return bytes(frames)
-
-
-def test_probe_mp4_and_mp3():
-    """r5: container/frame-header metadata probing WITHOUT decode —
-    MP4 box walk (v0 + v1 headers) and MP3 frame walk (exact VBR-safe
-    duration) against crafted ground truth."""
-    from pdf_ocr_api_spark.ops import mediameta
-
-    for v1 in (False, True):
-        p = mediameta.probe_mp4(_mk_mp4(timescale=1000, duration=7500, v1=v1))
-        assert p["duration_ms"] == 7500 and (p["width"], p["height"]) == (640, 360)
-        assert p["n_tracks"] == 1 and p["codecs"] == ["avc1"]
-
-    m = mediameta.probe_mp3(_mk_mp3(38))
-    assert m["sample_rate"] == 44100 and m["layer"] == 3 and m["n_frames"] == 38
-    assert m["duration_ms"] == int(38 * 1152 * 1000 / 44100)
-    assert m["bitrate_kbps"] == 128
-    # ID3v2 prefix skipped
-    m2 = mediameta.probe_mp3(_mk_mp3(10, id3=True))
-    assert m2["n_frames"] == 10
-
-    # malformed: truncated box, lost sync, empty
-    with pytest.raises(ValueError):
-        mediameta.probe_mp4(_mk_mp4()[:40])
-    with pytest.raises(ValueError):
-        mediameta.probe_mp3(_mk_mp3(3)[:-100] + b"\x12\x34")
-    with pytest.raises(ValueError):
-        mediameta.probe_media(b"")
-
-
-def test_media_metadata_distributed(spark):
-    """r5: media_metadata fills the MEDIA_SCHEMA meta fields for every
-    probed format in one shuffle-free mapInPandas pass; unknown bytes
-    degrade to nulls."""
-    from pdf_ocr_api_spark.ops import codecs, mediameta, multimodal
-
-    rng = np.random.default_rng(2)
-    img = rng.integers(0, 256, (12, 16, 3), dtype=np.uint8)
-    pcm = (np.sin(np.linspace(0, 440 * 2 * np.pi, 8000)) * 20000).astype(np.int16)
-    frames = rng.integers(0, 256, (10, 16, 16), dtype=np.uint8)
-    payloads = {
-        0: ("image", codecs.encode_bmp(img)),
-        1: ("image", codecs.encode_ppm(img)),
-        2: ("image", codecs.encode_png(img)),
-        4: ("audio", codecs.encode_wav(pcm, 16000)),
-        5: ("audio", codecs.encode_au(pcm, 8000)),
-        6: ("video", codecs.encode_y4m(frames, fps=5)),
-        7: ("video", _mk_mp4(timescale=600, duration=1800)),
-        8: ("audio", _mk_mp3(19)),
-        9: ("unknown", b"\x00\x01 not media"),
-    }
-    df = spark.createDataFrame(
-        [(i, k, bytearray(p)) for i, (k, p) in payloads.items()],
-        "media_id LONG, kind STRING, payload BINARY",
-    )
-    got = {r.media_id: r for r in multimodal.media_metadata(df).collect()}
-    for i in (0, 1, 2):
-        assert (got[i].width, got[i].height) == (16, 12), i
-        assert got[i].mime.startswith("image/")
-    assert got[4].duration_ms == 500 and got[4].mime == "audio/wav"
-    assert got[5].duration_ms == 1000 and got[5].mime == "audio/basic"
-    assert (got[6].width, got[6].height) == (16, 16) and got[6].duration_ms == 2000
-    assert got[7].duration_ms == 3000 and got[7].mime == "video/mp4"
-    assert got[8].duration_ms == int(19 * 1152 * 1000 / 44100)
-    assert got[9].mime is None and got[9].width is None
-    # local probe agrees with the distributed pass
-    local = mediameta.probe_media(payloads[7][1])
-    assert local["duration_ms"] == got[7].duration_ms
-
-
-def test_probe_hardening_review_fixes(spark):
-    """r5 review batch 2: truncated container bodies are ValueError (not
-    struct.error/IndexError), unknown-duration sentinels are None, ID3v2.4
-    footers are skipped, mixed-samplerate MP3 durations correct, Y4M
-    probed without materializing frames, and out-of-schema header values
-    become nulls instead of killing the UDF."""
-    import struct as _s
-
-    from pdf_ocr_api_spark.ops import codecs, mediameta, multimodal
-
-    # truncated tkhd body inside a valid box structure → ValueError
-    short_tkhd = _mk_box(b"tkhd", b"\x00" * 52)
-    moov = _mk_box(b"mvhd", b"\x00" * 12 + _s.pack(">II", 1000, 5000) + b"\x00" * 80)
-    moov += _mk_box(b"trak", short_tkhd)
-    bad = _mk_box(b"ftyp", b"isom\x00\x00\x02\x00") + _mk_box(b"moov", moov)
-    with pytest.raises(ValueError):
-        mediameta.probe_mp4(bad)
-    with pytest.raises(ValueError):
-        mediameta.probe_media(bad)
-    # empty mvhd body → ValueError, not IndexError
-    with pytest.raises(ValueError):
-        mediameta.probe_mp4(
-            _mk_box(b"ftyp", b"isom\x00\x00\x02\x00")
-            + _mk_box(b"moov", _mk_box(b"mvhd", b""))
-        )
-
-    # mvhd all-ones duration = "unknown" sentinel → None
-    mvhd_unk = b"\x00" * 12 + _s.pack(">II", 600, 0xFFFFFFFF) + b"\x00" * 80
-    p = mediameta.probe_mp4(
-        _mk_box(b"ftyp", b"isom\x00\x00\x02\x00") + _mk_box(b"moov", _mk_box(b"mvhd", mvhd_unk))
-    )
-    assert p["duration_ms"] is None
-
-    # ID3v2.4 footer flag: 10 extra bytes before the first frame
-    frames = _mk_mp3(5)
-    tagged = b"ID3" + b"\x04\x00\x10" + b"\x00\x00\x00\x0a" + b"\x00" * 20 + frames
-    assert mediameta.probe_mp3(tagged)["n_frames"] == 5
-
-    # mixed sample rates: 22.05k MPEG2 frames + 44.1k MPEG1 frames
-    # V2 L3 80kbps 22050Hz: flen = 72*80000//22050 = 261, 576 samples
-    f2 = bytes([0xFF, 0xF3, 0x90, 0x00]) + b"\x00" * (261 - 4)
-    m2 = mediameta.probe_mp3(f2 * 4)
-    mixed = f2 * 4 + _mk_mp3(6)
-    m1 = mediameta.probe_mp3(_mk_mp3(6))
-    got = mediameta.probe_mp3(mixed)
-    # ±1 ms: the parts are floored independently of the whole
-    assert abs(got["duration_ms"] - (m2["duration_ms"] + m1["duration_ms"])) <= 1
-
-    rng = np.random.default_rng(0)
-    img = rng.integers(0, 256, (8, 10, 3), dtype=np.uint8)
-
-    # Y4M walk equals the decoder's frame count without materializing
-    y4m = codecs.encode_y4m(rng.integers(0, 256, (7, 12, 12), dtype=np.uint8), fps=5)
-    w, h, fps, n = mediameta._y4m_meta(y4m)
-    assert (w, h, fps, n) == (12, 12, 5, 7)
-    assert mediameta.probe_media(y4m)["duration_ms"] == int(7 * 1000 / 5)
-
-    # hostile header values become NULLs in the distributed pass
-    hostile_png = bytearray(codecs.encode_png(img))
-    _s.pack_into(">I", hostile_png, 16, 1 << 31)  # width = 2^31 in IHDR
-    df = spark.createDataFrame(
-        [(0, "image", bytes(hostile_png))], "media_id LONG, kind STRING, payload BINARY"
-    )
-    row = multimodal.media_metadata(df).collect()[0]
-    assert row.width is None
 
 
 # ---------------------------------------------------------------------------
@@ -1716,232 +1215,6 @@ def test_text_profile_repetition_signals(spark):
     assert got[1]["dup_word_frac"] == 0.0 and got[1]["dup_2gram_frac"] == 0.0
     assert got[2]["n_tokens"] == 0 and got[2]["dup_word_frac"] == 0.0
     assert got[3]["n_tokens"] == 1 and got[3]["dup_2gram_frac"] == 0.0
-
-
-# ---------------------------------------------------------------------------
-# MP4 sample demux (r5): container-layer frame extraction without a codec
-# ---------------------------------------------------------------------------
-
-
-def _mp4_fixture():
-    from pdf_ocr_api_spark.ops import mediameta
-
-    rng = np.random.default_rng(42)
-    vid = [rng.integers(0, 256, size=20 + 7 * i, dtype=np.uint8).tobytes() for i in range(9)]
-    aud = [rng.integers(0, 256, size=32, dtype=np.uint8).tobytes() for _ in range(6)]
-    tracks = [
-        {
-            "handler": "vide", "codec": "avc1", "timescale": 30,
-            "samples": vid, "deltas": [1] * 9,
-            # varying samples-per-chunk exercises the stsc run expansion
-            "samples_per_chunk": [2, 3, 3, 1],
-            "width": 64, "height": 48,
-        },
-        {
-            "handler": "soun", "codec": "mp4a", "timescale": 8000,
-            "samples": aud, "deltas": [1024] * 6,
-            "samples_per_chunk": [4, 2],
-        },
-    ]
-    return mediameta.mux_mp4(tracks), vid, aud
-
-
-def test_mp4_mux_demux_roundtrip():
-    """Demuxed samples must be byte-identical to what was muxed, with
-    stts decode times and track metadata intact — across multi-chunk
-    stsc runs and both uniform and per-sample stsz forms."""
-    from pdf_ocr_api_spark.ops import mediameta
-
-    payload, vid, aud = _mp4_fixture()
-    tracks = mediameta.demux_mp4(payload)
-    assert [t["handler"] for t in tracks] == ["vide", "soun"]
-    v, a = tracks
-    assert v["codec"] == "avc1" and a["codec"] == "mp4a"
-    assert [s["data"] for s in v["samples"]] == vid
-    assert [s["data"] for s in a["samples"]] == aud
-    assert [s["time"] for s in v["samples"]] == list(range(9))
-    assert [s["time"] for s in a["samples"]] == [1024 * i for i in range(6)]
-    assert v["samples"][3]["time_ms"] == 3 * 1000 // 30
-    # container probe agrees with the mux parameters
-    p = mediameta.probe_mp4(payload)
-    assert (p["width"], p["height"]) == (64, 48)
-    assert p["n_tracks"] == 2 and p["codecs"] == ["avc1", "mp4a"]
-    assert p["duration_ms"] == 6 * 1024 * 1000 // 8000  # audio is the longest track
-
-
-def test_mp4_demux_hostile_streams():
-    """Truncations and byte flips either demux consistently or raise
-    ValueError — never any other exception (the mapInPandas routers
-    catch only ValueError; anything else kills a corpus job)."""
-    from pdf_ocr_api_spark.ops import mediameta
-
-    payload, _, _ = _mp4_fixture()
-    for cut in range(0, len(payload), 37):
-        try:
-            mediameta.demux_mp4(payload[:cut])
-        except ValueError:
-            pass
-    rng = np.random.default_rng(7)
-    buf = bytearray(payload)
-    for _ in range(300):
-        i = int(rng.integers(0, len(buf)))
-        old = buf[i]
-        buf[i] = int(rng.integers(0, 256))
-        try:
-            tracks = mediameta.demux_mp4(bytes(buf))
-            for t in tracks:
-                for s in t["samples"]:
-                    assert len(s["data"]) == s["size"]
-        except ValueError:
-            pass
-        buf[i] = old
-
-
-def test_byte_features_shape_and_determinism():
-    from pdf_ocr_api_spark.ops import multimodal
-
-    f1 = multimodal.byte_features(b"abcabc\x00\xff")
-    f2 = multimodal.byte_features(b"abcabc\x00\xff")
-    assert f1.shape == (16,) and f1.dtype == np.float32
-    assert np.array_equal(f1, f2)
-    assert f1[0] == 8.0  # size
-    e = multimodal.byte_features(b"")
-    assert e.shape == (16,)
-    # constant byte → zero entropy; uniform-ish bytes → high entropy
-    assert multimodal.byte_features(b"\x41" * 100)[3] == 0.0
-    assert multimodal.byte_features(bytes(range(256)))[3] == 1.0
-
-
-def test_frame_sample_mp4_real(spark):
-    """frame_sample on an MP4 row returns byte_features of the ACTUAL
-    demuxed video samples at the evenly-spaced indices — proving the
-    container path is real, not the fake fallback."""
-    from pdf_ocr_api_spark.ops import mediameta, multimodal
-
-    payload, vid, _ = _mp4_fixture()
-    df = spark.createDataFrame(
-        [(1, "video", bytearray(payload))], "media_id LONG, kind STRING, payload BINARY"
-    )
-    rows = multimodal.frame_sample(df, n_frames=4).orderBy("frame_idx").collect()
-    assert len(rows) == 4
-    idx = np.linspace(0, len(vid) - 1, 4).astype(int)
-    for r, j in zip(rows, idx):
-        expect = multimodal.byte_features(vid[j])
-        assert np.allclose(np.array(r["frame"], np.float32), expect)
-    # corrupt MP4 degrades to the deterministic fake path, job survives
-    bad = payload[:40]
-    df2 = spark.createDataFrame(
-        [(2, "video", bytearray(bad))], "media_id LONG, kind STRING, payload BINARY"
-    )
-    rows2 = multimodal.frame_sample(df2, n_frames=3).collect()
-    assert len(rows2) == 3
-
-
-# ---------------------------------------------------------------------------
-# GIF codec (r5): LZW is an algorithm, not a codec library
-# ---------------------------------------------------------------------------
-
-
-def test_gif_roundtrip_lossless():
-    """GIF is lossless for palette-bounded images: encode→decode must be
-    byte-exact — across gradients, few-color logos, single pixels, and
-    an image large enough to overflow the 4096-entry LZW table (forcing
-    the mid-stream CLEAR/reset path)."""
-    from pdf_ocr_api_spark.ops import codecs
-
-    rng = np.random.default_rng(5)
-    cases = []
-    # 2-color checkerboard
-    cb = np.indices((9, 13)).sum(axis=0) % 2
-    cases.append(np.stack([cb * 255] * 3, axis=2).astype(np.uint8))
-    # 256-gray gradient
-    g = np.linspace(0, 255, 64, dtype=np.uint8)[None, :].repeat(48, 0)
-    cases.append(np.repeat(g[:, :, None], 3, axis=2))
-    # random 200-color noise, large enough to overflow the code table
-    pal = rng.integers(0, 256, (200, 3), dtype=np.uint8)
-    idx = rng.integers(0, 200, (120, 160))
-    cases.append(pal[idx])
-    # single pixel
-    cases.append(np.array([[[7, 80, 201]]], np.uint8))
-    for rgb in cases:
-        payload = codecs.encode_gif(rgb)
-        assert codecs.sniff_codec(payload) == "gif"
-        out = codecs.decode_gif(payload)
-        assert out.shape == rgb.shape
-        assert np.array_equal(out, rgb)
-
-
-def test_gif_reject_invalid():
-    from pdf_ocr_api_spark.ops import codecs
-
-    rng = np.random.default_rng(11)
-    # >256 distinct colors cannot be a GIF without quantization
-    many = rng.integers(0, 256, (32, 32, 3), dtype=np.uint8)
-    assert len(np.unique(many.reshape(-1, 3), axis=0)) > 256
-    with pytest.raises(ValueError):
-        codecs.encode_gif(many)
-    with pytest.raises(ValueError):
-        codecs.decode_gif(b"GIF89a")  # truncated header
-    with pytest.raises(ValueError):
-        codecs.decode_gif(b"NOTGIF" + b"\x00" * 20)
-    # interlace flag set → explicit unsupported
-    good = codecs.encode_gif(np.zeros((4, 4, 3), np.uint8))
-    desc = good.index(b"\x2c")
-    bad = bytearray(good)
-    bad[desc + 9] |= 0x40
-    with pytest.raises(ValueError):
-        codecs.decode_gif(bytes(bad))
-
-
-def test_gif_hostile_streams_raise_valueerror():
-    """Truncations and byte flips must decode consistently or raise
-    ValueError — never any other exception and never an allocation
-    bigger than the declared raster (LZW-bomb guard)."""
-    from pdf_ocr_api_spark.ops import codecs
-
-    rng = np.random.default_rng(3)
-    pal = rng.integers(0, 256, (32, 3), dtype=np.uint8)
-    payload = codecs.encode_gif(pal[rng.integers(0, 32, (24, 31))])
-    for cut in range(0, len(payload), 11):
-        try:
-            codecs.decode_gif(payload[:cut])
-        except ValueError:
-            pass
-    buf = bytearray(payload)
-    for _ in range(600):
-        i = int(rng.integers(0, len(buf)))
-        old = buf[i]
-        buf[i] = int(rng.integers(0, 256))
-        try:
-            out = codecs.decode_gif(bytes(buf))
-            assert out.ndim == 3 and out.shape[2] == 3
-        except ValueError:
-            pass
-        buf[i] = old
-
-
-def test_gif_feature_and_probe_paths(spark):
-    """GIF payloads ride the REAL decode path end-to-end: sniff →
-    decode_gif → image_features (not the fake fallback), and the
-    metadata probe reads dimensions from the logical-screen descriptor
-    alone."""
-    from pdf_ocr_api_spark.ops import codecs, mediameta, multimodal
-
-    rng = np.random.default_rng(21)
-    pal = rng.integers(0, 256, (16, 3), dtype=np.uint8)
-    rgb = pal[rng.integers(0, 16, (20, 28))]
-    payload = codecs.encode_gif(rgb)
-    feat = multimodal.media_feature_vector(payload)
-    assert np.allclose(feat, multimodal.image_features(rgb))
-    assert not np.allclose(feat, multimodal.fake_features(payload))
-    meta = mediameta.probe_media(payload)
-    assert meta == {"mime": "image/gif", "width": 28, "height": 20, "duration_ms": None}
-    # distributed: media_metadata fills the GIF row for real
-    df = spark.createDataFrame(
-        [(1, "image", bytearray(payload))], "media_id LONG, kind STRING, payload BINARY"
-    )
-    row = multimodal.media_metadata(df).collect()[0]
-    assert (row["mime"], row["width"], row["height"]) == ("image/gif", 28, 20)
 
 
 # ---------------------------------------------------------------------------
