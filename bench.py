@@ -192,6 +192,7 @@ def headline_queries(spark, transcripts):
         # transcript table; domains derived deterministically from the
         # conversation key
         from pdf_ocr_api_spark.ops import classify, domains
+        from pdf_ocr_api_spark.ops.stage import materialize
         from pdf_ocr_api_spark.ops.training import portable_hash
 
         t = transcripts.select(
@@ -209,12 +210,10 @@ def headline_queries(spark, transcripts):
             "text",
         )
         model = classify.train_nb(seed)
-        # materialize between stages (the clean_corpus _cut pattern):
+        # materialize between stages, as clean_corpus does:
         # classify_filter's gate + join-back would otherwise recompute
         # the cap's window twice
-        capped = domains.cap_per_domain(t, 100, key_col="tid").localCheckpoint(
-            eager=True
-        )
+        capped = materialize(domains.cap_per_domain(t, 100, key_col="tid"))
         return _count(classify.classify_filter(capped, model, "good", id_col="tid"))
 
     return {

@@ -22,7 +22,8 @@ window functions and column predicates only — **no Python in the loop**:
 No stage in the default record plan is conversation-size-bound except
 the output Servicos array itself (inherent to array output — see
 ``conversation_service_rows`` for the row-form record). The monolithic
-window variant remains available (``segmented=False``) and byte-equal.
+window variant (``assemble_services``) stays as the byte-equality
+reference the segmented assembly is tested against.
 """
 
 from __future__ import annotations
@@ -415,7 +416,6 @@ def conversation_records(
     extracted: DataFrame,
     tipo_dim: DataFrame | None = None,
     header_depara: dict | None = None,
-    segmented: bool = True,
     chunk_turns: int = 512,
 ) -> DataFrame:
     """Full per-conversation record (ref :227-236): scalar fields + the
@@ -429,20 +429,17 @@ def conversation_records(
     record matches the reference's de-facto output (GPT error path →
     those fields absent/null, ref gpt/extractHeader.js:123-133).
 
-    ``segmented`` (default True) selects the segmented-scan service
-    assembly — byte-identical to the single-window variant (asserted in
-    tests) with stragglers bounded by ``chunk_turns`` instead of
-    conversation size. The conversation scalars are ALWAYS segmented
+    The services come from the segmented-scan assembly — byte-identical
+    to the single-window ``assemble_services`` (asserted in tests) with
+    stragglers bounded by ``chunk_turns`` instead of conversation size.
+    The conversation scalars are segmented too
     (``conversation_scalars`` — exact, never conversation-size-bound);
     the only remaining conversation-sized object in this plan is the
     final Servicos array itself, inherent to array output — use
     ``conversation_service_rows`` when even that must be avoided.
     """
     scalars = _record_scalars(extracted, tipo_dim, chunk_turns)
-    if segmented:
-        svcs = assemble_services_segmented(explode_services(extracted), chunk_turns=chunk_turns)
-    else:
-        svcs = assemble_services(explode_services(extracted))
+    svcs = assemble_services_segmented(explode_services(extracted), chunk_turns=chunk_turns)
     svc_arr = svcs.groupBy("conv_id").agg(
         F.transform(
             F.array_sort(

@@ -92,17 +92,10 @@ def run(
     with_styling: bool = False,
     with_tables: bool = False,
     with_metadata: bool = False,
-    compact_write: bool = True,
 ) -> dict:
     """Execute one checkpointed extraction run; returns summary stats.
 
     Only buckets without a ``done`` row in the commit table are processed.
-
-    ``compact_write``: repartition by bucket before the partitioned
-    write — one shuffle, but the file count is O(n_buckets) instead of
-    O(tasks × buckets) (a 10^12-turn run with 10k buckets would
-    otherwise shatter into millions of small files). Disable only for
-    small local runs where the shuffle outweighs the file tax.
     """
     p = _paths(out_root)
     commits = _commits(spark, out_root)
@@ -165,8 +158,11 @@ def run(
         with_tables=with_tables,
         with_metadata=with_metadata,
     ).withColumn("bucket", bucket_expr(n_buckets))
-    if compact_write:
-        extracted = extracted.repartition(n_buckets, F.col("bucket"))
+    # repartition by bucket before the partitioned write — one shuffle,
+    # but the file count is O(n_buckets) instead of O(tasks × buckets) (a
+    # 10^12-turn run with 10k buckets would otherwise shatter into
+    # millions of small files)
+    extracted = extracted.repartition(n_buckets, F.col("bucket"))
 
     write_table(extracted, p["data"], mode="overwrite_partitions", partition_by=["bucket"])
     wall_ms = int((time.monotonic() - t0) * 1000)

@@ -50,6 +50,8 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .stage import materialize
+
 __all__ = ["train_nb", "score_nb", "classify_filter"]
 
 
@@ -83,14 +85,12 @@ def train_nb(
     text_col: str = "text",
     label_col: str = "label",
     min_count: int = 1,
-    reliable_checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Train the NB model: ``(kind, tok, label, cnt)`` (layout above).
 
     One corpus scan (explode) + one ``(tok, label)`` groupBy with
-    map-side partial aggregation, MATERIALIZED once (localCheckpoint,
-    or reliable checkpoint under ``reliable_checkpoint_dir`` — the
-    dedup-family option): the total/vocab rows and the returned model
+    map-side partial aggregation, MATERIALIZED once
+    (``stage.materialize``): the total/vocab rows and the returned model
     all consume the count table, and without the cut each consumer
     re-executes the corpus explode+shuffle (the same multi-consumption
     trap ops/lm.py documents for its N row; measured 4× lineage here).
@@ -98,8 +98,6 @@ def train_nb(
     ``docs`` priors are a separate NARROW pass (no explode).  Rows with
     a NULL label are rejected loudly — a silently dropped label would
     skew the priors."""
-    from .dedup import _materialize
-
     if min_count < 1:
         raise ValueError("min_count must be ≥ 1")
     # NULL labels fail INLINE (raise_error inside the projection — no
@@ -115,7 +113,7 @@ def train_nb(
     )
     if min_count > 1:
         counts = counts.filter(F.col("cnt") >= min_count)
-    counts = _materialize(counts, reliable_checkpoint_dir)
+    counts = materialize(counts)
     docs = base.select("label").groupBy("label").agg(F.count("*").alias("cnt"))
     totals = counts.groupBy("label").agg(F.sum("cnt").alias("cnt"))
     vocab = counts.select("tok").distinct().agg(F.count("*").alias("cnt"))

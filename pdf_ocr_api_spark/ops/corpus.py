@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from ..pipeline import extract_transcripts
 from . import dedup, textstats
+from .stage import materialize
 
 
 def turn_id(conv_col="conv_id", turn_col="turn_idx"):
@@ -45,7 +46,6 @@ def _gated_turns(
     langs,
     min_tokens,
     depara,
-    _cut,
     scrub_pii=False,
     decontam_probes=None,
     decontam_n=8,
@@ -92,13 +92,13 @@ def _gated_turns(
             "clean_text",
             repetition.dedup_lines(F.col("clean_text"), scope=strip_line_repeats),
         )
-    # materialize the extraction output ONCE (localCheckpoint — at real
-    # scale this is the stored extraction table, see lineage.run): the
-    # pipeline fans out into quality join, exact-dedup join, LSH build
-    # and the final anti-join, and WITHOUT materialization every branch
+    # materialize the extraction output ONCE (at real scale this is the
+    # stored extraction table, see lineage.run): the pipeline fans out
+    # into quality join, exact-dedup join, LSH build and the final
+    # anti-join, and WITHOUT materialization every branch
     # re-executes the mapInPandas UDF (measured: 570 s vs ~230 s for the
     # same 1M-turn run)
-    base = _cut(
+    base = materialize(
         ext.select(
             "conv_id",
             "turn_idx",
@@ -181,7 +181,6 @@ def clean_corpus(
     num_hashes: int = 32,
     parallelism: int | None = None,
     max_bucket_size: int | None = 256,
-    reliable_checkpoint_dir: str | None = None,
     scrub_pii: bool = False,
     decontam_probes: DataFrame | None = None,
     decontam_n: int = 8,
@@ -214,16 +213,9 @@ def clean_corpus(
     family whose candidate pairs are dropped, costing recall). Buckets
     that exceed it are counted and logged by ``minhash_lsh_pairs`` so
     the loss is observable; pass ``None`` to disable the cap.
-    ``reliable_checkpoint_dir`` switches all lineage cuts (here and in
-    the dedup stages) to reliable storage checkpoints for preemptible
-    clusters.
     """
-
-    def _cut(df: DataFrame) -> DataFrame:
-        return dedup._materialize(df, reliable_checkpoint_dir)
-
     gated = _gated_turns(
-        transcripts, min_quality, langs, min_tokens, depara, _cut,
+        transcripts, min_quality, langs, min_tokens, depara,
         scrub_pii=scrub_pii, decontam_probes=decontam_probes,
         decontam_n=decontam_n, decontam_max_ratio=decontam_max_ratio,
         strip_line_repeats=strip_line_repeats, repetition_gate=repetition_gate,
@@ -238,7 +230,7 @@ def clean_corpus(
     hashed = gated.withColumn("_h", F.md5(dedup.normalized_text(F.col("clean_text"))))
     reps = hashed.groupBy("_h").agg(F.min("_tid").alias("_tid"))
     # reused by the LSH build AND the final anti-join — materialize
-    exact_kept = _cut(hashed.join(reps, ["_h", "_tid"]).drop("_h"))
+    exact_kept = materialize(hashed.join(reps, ["_h", "_tid"]).drop("_h"))
 
     # stage 2: near-dup over the distinct representatives only, with a
     # bucket-size cap as the skew backstop. The final keeper equals the
@@ -251,7 +243,6 @@ def clean_corpus(
         bands=lsh_bands,
         parallelism=parallelism,
         max_bucket_size=max_bucket_size,
-        reliable_checkpoint_dir=reliable_checkpoint_dir,
     )
     losers = groups.filter(F.col("id") != F.col("comp")).select(F.col("id").alias("_tid"))
     out = exact_kept.join(losers, "_tid", "left_anti")
@@ -294,7 +285,6 @@ def clean_corpus_incremental(
     parallelism: int | None = None,
     max_bucket_size: int | None = 256,
     kept_sigs: DataFrame | None = None,
-    reliable_checkpoint_dir: str | None = None,
     scrub_pii: bool = False,
     decontam_probes: DataFrame | None = None,
     decontam_n: int = 8,
@@ -339,12 +329,8 @@ def clean_corpus_incremental(
     verify, and component rounds; BENCH.md r4). When omitted the
     signatures are recomputed from ``kept`` (one narrow scan — still far
     cheaper than re-extracting raw history)."""
-
-    def _cut(df: DataFrame) -> DataFrame:
-        return dedup._materialize(df, reliable_checkpoint_dir)
-
     gated = _gated_turns(
-        transcripts, min_quality, langs, min_tokens, depara, _cut,
+        transcripts, min_quality, langs, min_tokens, depara,
         scrub_pii=scrub_pii, decontam_probes=decontam_probes,
         decontam_n=decontam_n, decontam_max_ratio=decontam_max_ratio,
         strip_line_repeats=strip_line_repeats, repetition_gate=repetition_gate,
@@ -360,7 +346,7 @@ def clean_corpus_incremental(
         F.col("clean_text"),
         F.md5(dedup.normalized_text(F.col("clean_text"))).alias("_h"),
     )
-    exact_new = _cut(
+    exact_new = materialize(
         batch_reps.join(kept_t.select("_h"), "_h", "left_anti").drop("_h")
     )
 
@@ -373,7 +359,6 @@ def clean_corpus_incremental(
         parallelism=parallelism,
         kept_sigs=kept_sigs,
         max_bucket_size=max_bucket_size,
-        reliable_checkpoint_dir=reliable_checkpoint_dir,
     )
     survivors = kept_rows.select(F.col("doc_id").alias("_tid"))
     out = exact_new.join(survivors, "_tid", "left_semi")

@@ -23,42 +23,14 @@ import logging
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+from .stage import materialize, one_wave
+
 _log = logging.getLogger(__name__)
 
 
 def normalized_text(col):
     """Dedup normalization: lower, collapse whitespace, trim."""
     return F.trim(F.regexp_replace(F.lower(col), r"\s+", " "))
-
-
-def _materialize(df: DataFrame, reliable_dir: str | None = None) -> DataFrame:
-    """Cut lineage and persist an intermediate frame.
-
-    Default: ``localCheckpoint`` — executor-block-backed, fast, the right
-    choice on a stable cluster or in local mode. Its blocks are LOST on
-    executor failure, so on a preemptible 1000-executor cluster pass
-    ``reliable_dir`` (an HDFS/S3 path): the frame is then written through
-    a reliable ``checkpoint()`` and every iteration/fan-out survives
-    executor loss at the cost of one storage round-trip per cut."""
-    if reliable_dir is None:
-        return df.localCheckpoint(eager=True)
-    sc = df.sparkSession.sparkContext
-    # the checkpoint dir is SESSION-GLOBAL state: set it only for the
-    # duration of this (eager, so completed-on-return) checkpoint and
-    # restore any caller-configured dir afterwards. Caveat: when NO dir
-    # was configured before, reliable_dir STAYS set on return — the
-    # public API has no way to unset a checkpoint dir — so a later bare
-    # df.checkpoint() will land there. Harmless (the dir is valid
-    # reliable storage by contract) but worth knowing; a pre-set caller
-    # dir IS restored.
-    prev = sc.getCheckpointDir()
-    if prev != reliable_dir:
-        sc.setCheckpointDir(reliable_dir)
-    try:
-        return df.checkpoint(eager=True)
-    finally:
-        if prev is not None and prev != reliable_dir:
-            sc.setCheckpointDir(prev)
 
 
 def exact_duplicates(
@@ -387,7 +359,6 @@ def connected_components(
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_iter: int = 25,
-    reliable_checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Near-dup GROUP formation: connected components over candidate
     pairs — (id, comp) for every id appearing in ``pairs``, where comp
@@ -405,18 +376,15 @@ def connected_components(
     Raises if ``max_iter`` rounds exhaust without convergence — a split
     group silently returned would be a wrong answer; with pointer
     jumping 25 rounds cover diameters up to ~2^25, so hitting this means
-    something is broken, not slow. ``reliable_checkpoint_dir`` switches
-    the per-round lineage cuts from executor-local blocks to a reliable
-    storage checkpoint (preemptible-cluster safe); see ``_materialize``.
+    something is broken, not slow.
     """
     e = pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
     # materialize the edge list ONCE: the loop references it every
     # iteration, and without this the whole upstream pipeline that
     # produced the pairs (LSH + verify at corpus scale) would re-execute
     # per iteration — measured as a 25x blowup on a 1M-turn run
-    edges = _materialize(
-        e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b"))).distinct(),
-        reliable_checkpoint_dir,
+    edges = materialize(
+        e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b"))).distinct()
     )
     lab = edges.select(F.col("a").alias("id")).distinct().select(
         "id", F.col("id").alias("comp")
@@ -437,14 +405,13 @@ def connected_components(
         # pointer jump: comp ← comp's comp (labels are ids, so the
         # mapping is lab itself)
         m = new.select(F.col("id").alias("_cid"), F.col("comp").alias("_ccomp"))
-        # localCheckpoint truncates the logical plan — without it the
-        # iterative self-reference grows the plan tree exponentially and
-        # the DRIVER (analysis), not the data, runs out of heap
-        new = _materialize(
+        # the cut truncates the logical plan — without it the iterative
+        # self-reference grows the plan tree exponentially and the
+        # DRIVER (analysis), not the data, runs out of heap
+        new = materialize(
             new.join(m, new["comp"] == m["_cid"], "left").select(
                 "id", F.coalesce("_ccomp", "comp").alias("comp")
-            ),
-            reliable_checkpoint_dir,
+            )
         )
         changed = (
             new.alias("n")
@@ -474,7 +441,6 @@ def near_dup_groups(
     k: int = 3,
     parallelism: int | None = None,
     max_bucket_size: int | None = None,
-    reliable_checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """The full near-dup dedup pipeline in one call:
     MinHash+LSH candidates → exact n-gram Jaccard verify (≥ threshold)
@@ -490,24 +456,19 @@ def near_dup_groups(
     ``max_bucket_size`` (template families otherwise explode one bucket
     quadratically — see minhash_lsh_pairs).
 
-    Both intermediate frames are materialized (localCheckpoint): the
+    Both intermediate frames are materialized (``stage.materialize``): the
     candidate set fans out three ways into the verify stage (two id
     projections + the pair join) and the verified pairs fan out into the
     undirected edge union — without materialization the MinHash build
-    re-executes per consumer (measured: 662 s vs ~285 s at 1M turns).
-    The cuts default to localCheckpoint (executor-block-backed); pass
-    ``reliable_checkpoint_dir`` on preemptible clusters to spill them to
-    reliable storage instead (see ``_materialize``)."""
+    re-executes per consumer (measured: 662 s vs ~285 s at 1M turns)."""
     raw = minhash_lsh_pairs(
         df, text_col, id_col, num_hashes, bands, k, parallelism, max_bucket_size
     )
-    cand = _materialize(raw.select("id_a", "id_b"), reliable_checkpoint_dir)
+    cand = materialize(raw.select("id_a", "id_b"))
     metrics = bucket_cap_metrics(raw)  # materialization above ran the action
     _warn_bucket_metrics(metrics)
-    verified = _materialize(
-        jaccard_verify(df, cand, text_col, id_col, k, threshold), reliable_checkpoint_dir
-    )
-    out = connected_components(verified, reliable_checkpoint_dir=reliable_checkpoint_dir)
+    verified = materialize(jaccard_verify(df, cand, text_col, id_col, k, threshold))
+    out = connected_components(verified)
     # recall-loss accounting rides the result so composing operators
     # (clean_corpus) can surface it without re-running anything
     out._dedup_metrics = metrics
@@ -589,7 +550,6 @@ def incremental_keep(
     parallelism: int | None = None,
     kept_sigs: DataFrame | None = None,
     max_bucket_size: int | None = None,
-    reliable_checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Incremental near-dup dedup — the operational 100 TB shape: a
     production corpus GROWS, and re-running the full pipeline over
@@ -657,8 +617,8 @@ def incremental_keep(
             # kept_sigs is a stored table — band_rows over it is a cheap
             # narrow projection, and materializing the (index-sized) band
             # rows per batch would cost more than recomputing them.
-            kept_sigs = _materialize(kept_sigs, reliable_checkpoint_dir)
-    bn = _materialize(band_rows(sig_new, num_hashes, bands), reliable_checkpoint_dir)
+            kept_sigs = materialize(kept_sigs)
+    bn = materialize(band_rows(sig_new, num_hashes, bands))
     bk = band_rows(kept_sigs, num_hashes, bands)
 
     metrics = {"dropped_buckets": 0, "max_bucket": None}
@@ -714,16 +674,12 @@ def incremental_keep(
     texts = kept.select(F.col(id_col), F.col(text_col)).unionByName(
         batch.select(F.col(id_col), F.col(text_col))
     )
-    ver_intra = _materialize(
-        jaccard_verify(texts, _materialize(cand_intra, reliable_checkpoint_dir),
-                       text_col, id_col, k, threshold),
-        reliable_checkpoint_dir,
+    ver_intra = materialize(
+        jaccard_verify(texts, materialize(cand_intra), text_col, id_col, k, threshold)
     )
-    ver_cross = jaccard_verify(
-        texts, _materialize(cand_cross, reliable_checkpoint_dir), text_col, id_col, k, threshold
-    )
+    ver_cross = jaccard_verify(texts, materialize(cand_cross), text_col, id_col, k, threshold)
 
-    comps = connected_components(ver_intra, reliable_checkpoint_dir=reliable_checkpoint_dir)
+    comps = connected_components(ver_intra)
     labels = (
         batch.select(F.col(id_col).alias("id"))
         .join(comps, "id", "left")
@@ -783,8 +739,6 @@ def simhash64(
         # over-split input now COALESCES (no shuffle of the text) and
         # an under-split small file still repartitions to a full wave;
         # signatures are per-row, so output is partitioning-invariant
-        from .stage import one_wave
-
         df = one_wave(df)
     th = df.select(
         F.col(id_col).alias("id"),

@@ -56,6 +56,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .stage import materialize, one_wave
+
 # Python twin of the JVM tokenizer (Java \s = ASCII whitespace class):
 # the rebuild MUST tokenize exactly like window_fingerprints did, or
 # cut positions drift
@@ -233,8 +235,6 @@ def window_fingerprints(
         F.col(id_col).alias("id"),
         F.coalesce(F.col(text_col), F.lit("")).alias("_t"),
     )
-    from .stage import one_wave
-
     toks = one_wave(toks)
 
     def _fp(batches):
@@ -317,7 +317,6 @@ def dedup_substrings(
     id_col: str = "doc_id",
     width: int = 50,
     min_count: int = 2,
-    reliable_checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Remove all-but-one occurrence of every duplicated ≥``width``-token
     span, corpus-wide.  Returns the input schema with ``text_col``
@@ -346,9 +345,6 @@ def dedup_substrings(
     collect_list+explode re-expression was bench-marked against this
     window form and lost — 2.7 s vs 2.4 s warm — the hash-aggregate's
     per-group buffers cost more than the long-key sort.)
-    ``reliable_checkpoint_dir`` backs the cut-table materialization in
-    ``_apply_cuts`` (default localCheckpoint — the dedup-family
-    convention).
 
     Boundary slack: removal is the union of duplicated windows, so a
     duplicated span's first/last partial-window tokens (< ``width``)
@@ -357,9 +353,7 @@ def dedup_substrings(
     """
     wins = window_fingerprints(df, text_col, id_col, width)
     remove = _remove_table(wins, min_count)
-    return _apply_cuts(
-        df, remove, text_col, id_col, width, reliable_checkpoint_dir
-    )
+    return _apply_cuts(df, remove, text_col, id_col, width)
 
 
 def _remove_table(wins: DataFrame, min_count: int) -> DataFrame:
@@ -391,7 +385,6 @@ def _apply_cuts(
     text_col: str,
     id_col: str,
     width: int,
-    reliable_dir: str | None = None,
 ) -> DataFrame:
     """Join per-doc sorted cut positions (``remove``: (id, _cut_pos))
     back to the corpus and rebuild affected documents: numpy interval
@@ -405,15 +398,12 @@ def _apply_cuts(
     largest cost of the operator (measured: 3.3 s → 1.2 s warm on the
     58k-doc bench table; guide §4.1 — the Python boundary is paid per
     byte crossing it).  Untouched rows now take a pure-JVM anti-join
-    branch.  The cut table is materialized once (``_materialize`` —
-    localCheckpoint, or a reliable checkpoint under ``reliable_dir``)
+    branch.  The cut table is materialized once (``stage.materialize``)
     because both branches consume it and Catalyst has no cross-branch
     subplan sharing: without the cut the token-scale fingerprint
     pipeline would execute twice.  The cut table is affected-doc-scale
     (only true repeats) — cheap to pin by construction."""
-    from .dedup import _materialize
-
-    remove = _materialize(remove.withColumnRenamed("id", id_col), reliable_dir)
+    remove = materialize(remove.withColumnRenamed("id", id_col))
     # the cut table is already materialized, so sizing it costs one
     # metadata-cheap job — broadcast both branch joins when it fits
     # (neither branch then shuffles the CORPUS by id; with a giant cut

@@ -231,7 +231,6 @@ def make_extractor(
     depara: dict,
     with_services: bool = True,
     with_styling: bool = False,
-    all_segments: bool = False,
     with_tables: bool = False,
     with_metadata: bool = False,
 ):
@@ -248,9 +247,7 @@ def make_extractor(
     ``with_styling=True`` widens the span struct with the reference's
     styling-info fields (Font family/weight/italic, TextSize, Lang —
     populated for pdf_layout turns, null elsewhere); pair it with
-    ``extract_schema(with_styling=True)``. ``all_segments=True`` emits
-    one cell span per textSegment instead of the reference's
-    first-segment resolution.
+    ``extract_schema(with_styling=True)``.
     """
 
     def extract(batches):
@@ -259,7 +256,7 @@ def make_extractor(
         for pdf in batches:
             t0 = time.monotonic()
             out = _extract_frame(
-                pdf, depara, with_services, with_styling, all_segments, with_tables, with_metadata
+                pdf, depara, with_services, with_styling, with_tables, with_metadata
             )
             # per-row share of the batch's Python wall time — summing the
             # column over any grouping gives that group's processing cost
@@ -276,7 +273,6 @@ def _extract_frame(
     depara: dict,
     with_services: bool = True,
     with_styling: bool = False,
-    all_segments: bool = False,
     with_tables: bool = False,
     with_metadata: bool = False,
 ) -> pd.DataFrame:
@@ -417,7 +413,7 @@ def _extract_frame(
             else:
                 kind[p] = "pdf_table" if '"textAnchor"' in raw else "pdf_text"
             clean[p] = doc.get("text") or ""
-            spans[p] = _cells_spans(doc, all_segments=all_segments)
+            spans[p] = _cells_spans(doc)
             doc_text[p] = doc.get("text") or ""
             if with_tables:
                 from .extract.services import extract_tables_structured
@@ -478,7 +474,6 @@ def extract_transcripts(
     num_partitions: int | None = None,
     with_services: bool = True,
     with_styling: bool = False,
-    all_segments: bool = False,
     with_tables: bool = False,
     with_metadata: bool = False,
 ):
@@ -508,7 +503,7 @@ def extract_transcripts(
         df = df.repartition(num_partitions, key) if num_partitions else df.repartition(key)
 
     return df.mapInPandas(
-        make_extractor(depara, with_services, with_styling, all_segments, with_tables, with_metadata),
+        make_extractor(depara, with_services, with_styling, with_tables, with_metadata),
         schema=extract_schema(with_styling, with_tables, with_metadata),
     )
 

@@ -12,6 +12,12 @@ ref server.cjs:53); job state lives in the lineage commit table (the
 reference's Xano store, ref server.cjs:11-30); resume is automatic (only
 buckets without a ``done`` row run).
 
+The corpus jobs cut lineage through ``ops.stage.materialize``: executor-
+local checkpoints by default, reliable ones once the session has a
+checkpoint directory.  On a preemptible cluster turn that on at submit
+time with ``--conf spark.checkpoint.dir=hdfs:///path/to/checkpoints``;
+the sessions built here set none.
+
 ``python -m pdf_ocr_api_spark.runner --selftest`` runs a small
 generate→extract→resume cycle on local[*] for smoke checking a deploy.
 """
@@ -263,6 +269,7 @@ def _clean_corpus_job(args) -> int:
     from pyspark.sql import functions as F  # noqa: N812
 
     from .ops import corpus as corpus_ops
+    from .ops.stage import materialize
     from .sources.io import read_table, sub_target, table_exists, write_table
 
     spark = build_session(
@@ -336,7 +343,7 @@ def _clean_corpus_job(args) -> int:
             cleaned = _ss.dedup_substrings(
                 staged, text_col="clean_text", id_col="_sid", width=width
             )
-        cleaned = cleaned.localCheckpoint(eager=True)
+        cleaned = materialize(cleaned)
         removed = cleaned.agg(F.sum("n_tokens_removed")).collect()[0][0] or 0
         delta = (
             _ss.substring_index(
@@ -439,7 +446,7 @@ def _clean_corpus_job(args) -> int:
         new_rows, ss_removed = _substring_stage(new_rows, incremental=True)
     new_rows = _with_splits(new_rows)
     # one computation, two appends: materialize the (batch-sized) result
-    new_rows = new_rows.localCheckpoint(eager=True)
+    new_rows = materialize(new_rows)
     write_table(new_rows, corpus_target, mode="append")
     write_table(
         corpus_ops.corpus_signatures(new_rows, parallelism=args.buckets),
@@ -468,14 +475,17 @@ def _write_report(spark, args, corpus_target) -> dict:
     scan, see ops/report plan notes).  Returns the global section for
     the job's JSON summary."""
     from .ops import report as report_ops
+    from .ops.stage import materialize
     from .sources.io import read_table, sub_target, write_table
 
-    rep = report_ops.corpus_report(
-        # the stored corpus already carries an exact n_tokens column —
-        # reuse it instead of re-tokenizing every document
-        read_table(spark, corpus_target),
-        tokens_col="n_tokens",
-    ).localCheckpoint(eager=True)
+    rep = materialize(
+        report_ops.corpus_report(
+            # the stored corpus already carries an exact n_tokens column —
+            # reuse it instead of re-tokenizing every document
+            read_table(spark, corpus_target),
+            tokens_col="n_tokens",
+        )
+    )
     write_table(rep, sub_target(args.output, "report"), mode="create")
     return {
         r["metric"]: r["value"]

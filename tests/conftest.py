@@ -26,6 +26,22 @@ def spark():
     spark.stop()
 
 
+@pytest.fixture
+def checkpoint_dir(spark, tmp_path):
+    """Give the shared session a checkpoint directory for one test, so
+    ``stage.materialize`` takes its reliable path; clear it afterwards —
+    a directory left set would turn every later cut in the suite
+    reliable.  PySpark has no public way to unset the directory, hence
+    the private setter: if a PySpark upgrade removes it, this fixture
+    errors instead of leaking."""
+    sc = spark.sparkContext
+    path = tmp_path / "checkpoints"
+    sc.setCheckpointDir(str(path))
+    yield path
+    getattr(sc._jsc.sc(), "checkpointDir_$eq")(sc._jvm.scala.Option.empty())
+    assert sc.getCheckpointDir() is None
+
+
 @pytest.fixture(scope="session")
 def depara():
     from pdf_ocr_api_spark import fixtures

@@ -3,8 +3,6 @@
 import json
 import zipfile
 
-import pytest
-
 from pdf_ocr_api_spark import fixtures
 from pdf_ocr_api_spark.extract.html_extract import extract_html
 from pdf_ocr_api_spark.extract.pdf_layout import extract_pdf_layout

@@ -1,8 +1,10 @@
 """The driver-gate registry (__spark_entry__.py): its size, its oracle
 keys, the hash equality of the domain entries with their DuckDB twins,
 that every library import named in the gate file or in a library
-module (function-level ones included) resolves, and that every
-top-level library definition is referenced somewhere."""
+module (function-level ones included) resolves, that every
+top-level library definition is referenced somewhere, that only
+``ops/stage.py`` checkpoints, and that no module-level import is
+unused."""
 
 from __future__ import annotations
 
@@ -123,6 +125,45 @@ def test_library_definitions_are_referenced():
         if words[name] <= 1
     ]
     assert not dead, dead
+
+
+def test_one_materialization_site():
+    """Lineage cuts go through ``ops.stage.materialize`` only — the one
+    place that chooses between a local and a reliable checkpoint."""
+    owner = ROOT / "pdf_ocr_api_spark" / "ops" / "stage.py"
+    direct = [
+        f"{path.relative_to(ROOT)}:{node.func.end_lineno}"
+        for path in LIBRARY
+        if path != owner
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr in ("localCheckpoint", "checkpoint")
+    ]
+    assert not direct, direct
+
+
+def _unused_imports(path: Path) -> list[str]:
+    """``file:line name`` for each module-level import binding that no
+    ``Name`` in the file reads."""
+    tree = ast.parse(path.read_text())
+    used = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+    out = []
+    for node in tree.body:
+        if isinstance(node, ast.ImportFrom) and node.module == "__future__":
+            continue
+        if isinstance(node, (ast.Import, ast.ImportFrom)):
+            for a in node.names:
+                bound = a.asname or a.name.split(".")[0]
+                if bound not in used:
+                    out.append(f"{path.relative_to(ROOT)}:{node.lineno} {bound}")
+    return out
+
+
+def test_no_unused_imports():
+    files = [p for p in LIBRARY + sorted((ROOT / "tests").glob("*.py")) if p.name != "__init__.py"]
+    unused = [u for p in files for u in _unused_imports(p)]
+    assert not unused, unused
 
 
 @pytest.mark.parametrize("name", ["domain_cap", "domain_stats"])

@@ -731,35 +731,30 @@ def test_incremental_keep_bucket_cap_and_metrics(spark):
     assert corpus.dedup_metrics(out2) == {"dropped_buckets": 0, "max_bucket": None}
 
 
-def test_connected_components_reliable_checkpoint(spark, tmp_path):
-    """The reliable-checkpoint path (storage-backed checkpoint() instead
-    of executor-local blocks) must produce identical components and must
-    actually write checkpoint data under the given dir."""
+def test_connected_components_reliable_checkpoint(spark, request):
+    """With a session checkpoint directory the cuts take the reliable
+    path (storage-backed checkpoint() instead of executor-local blocks):
+    identical components, and checkpoint data actually written under the
+    directory."""
     edges = [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22), (22, 23)]
     pairs = spark.createDataFrame(edges, "id_a LONG, id_b LONG")
-    ckpt = str(tmp_path / "reliable_ckpt")
     got_local = {r.id: r.comp for r in dedup.connected_components(pairs).collect()}
-    got_rel = {
-        r.id: r.comp
-        for r in dedup.connected_components(
-            pairs, reliable_checkpoint_dir=ckpt
-        ).collect()
-    }
+    # requested only now: the local run above must not see the directory
+    ckpt = request.getfixturevalue("checkpoint_dir")
+    got_rel = {r.id: r.comp for r in dedup.connected_components(pairs).collect()}
     assert got_rel == got_local
-    import pathlib
-
-    written = list(pathlib.Path(ckpt).rglob("*"))
+    written = list(ckpt.rglob("*"))
     assert written, "reliable checkpoint dir is empty — checkpoint() never wrote"
 
 
-def test_near_dup_groups_reliable_checkpoint(docs, tmp_path):
-    """near_dup_groups must thread the reliable knob through all three
-    cuts and return the same groups."""
+def test_near_dup_groups_reliable_checkpoint(docs, request):
+    """near_dup_groups' cuts take the reliable path under a session
+    checkpoint directory and return the same groups."""
     a = dedup.near_dup_groups(docs, threshold=0.5).collect()
-    b = dedup.near_dup_groups(
-        docs, threshold=0.5, reliable_checkpoint_dir=str(tmp_path / "ck2")
-    ).collect()
+    ckpt = request.getfixturevalue("checkpoint_dir")
+    b = dedup.near_dup_groups(docs, threshold=0.5).collect()
     assert sorted((r.id, r.comp) for r in a) == sorted((r.id, r.comp) for r in b)
+    assert list(ckpt.rglob("*")), "reliable checkpoint dir is empty — checkpoint() never wrote"
 
 
 def test_connected_components_nonconvergence_raises(spark):

@@ -3,7 +3,6 @@
 import json
 
 import pytest
-from pyspark.sql import functions as F
 
 from pdf_ocr_api_spark import fixtures, pipeline
 

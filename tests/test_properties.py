@@ -9,7 +9,7 @@ from hypothesis import strategies as st
 from pdf_ocr_api_spark import fixtures
 from pdf_ocr_api_spark.extract.document import parse_document_py
 from pdf_ocr_api_spark.extract.services import parse_services
-from pdf_ocr_api_spark.extract.units import detect_unidade, normalize_unidade
+from pdf_ocr_api_spark.extract.units import detect_unidade
 from pdf_ocr_api_spark.functions import normalize as N
 from pdf_ocr_api_spark.functions import patterns as P
 

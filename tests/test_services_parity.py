@@ -7,8 +7,6 @@ these tests assert exact equality of the structured output.
 
 import json
 
-import pytest
-
 from pdf_ocr_api_spark import fixtures
 from pdf_ocr_api_spark.extract.services import parse_services
 from pdf_ocr_api_spark.extract.tipo import detect_tipo_certidao, map_by_sigla

@@ -2,7 +2,6 @@
 across tasks (SURVEY §4 — the distributed answer to the reference's
 single-process pin, ref worker/processJob.js:74-87)."""
 
-import pytest
 from pyspark.sql import functions as F
 
 from pdf_ocr_api_spark import fixtures, pipeline
