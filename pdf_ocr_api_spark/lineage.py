@@ -18,6 +18,9 @@ tracking is the **bucket**: a deterministic hash partition of conversations
 Writes are bucket-wise dynamic-partition overwrites, so a crashed run that
 re-processes a bucket converges to the same bytes (extraction is a pure
 per-turn function — see tests/test_pipeline.py::test_partition_invariance).
+``n_buckets`` is the resume unit and the initial width of the write's
+shuffle on ``bucket``; AQE sizes the writer tasks from the shuffle sizes,
+and a bucket above the advisory partition size may become several files.
 The commit rows go in ONE append after the data write: a crash before it
 leaves no row, and the resume reprocesses exactly those buckets.
 """
@@ -32,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .pipeline import extract_transcripts
-from .sources.io import local_frame, read_table, table_exists, write_table
+from .sources.io import local_frame, read_table, sub_target, table_exists, write_table
 
 DEFAULT_BUCKETS = 64
 
@@ -49,9 +52,15 @@ def bucket_expr(n_buckets: int):
 
 
 def _paths(out_root: str) -> dict:
-    if "/" in out_root:
-        return {k: f"{out_root}/{k}" for k in ("data", "lineage")}
-    return {k: f"{out_root}_{k}" for k in ("data", "lineage")}
+    return {k: sub_target(out_root, k) for k in ("data", "lineage")}
+
+
+def bucket_shuffle(df: DataFrame, n_buckets: int) -> DataFrame:
+    """Hash on ``bucket`` for the write: a REBALANCE whose tasks AQE sizes, or,
+    without AQE (its analyzer drops that hint), a fixed-width repartition."""
+    if df.sparkSession.conf.get("spark.sql.adaptive.enabled").lower() == "true":
+        return df.hint("rebalance", n_buckets, "bucket")
+    return df.repartition(n_buckets, F.col("bucket"))
 
 
 def _commits(spark: SparkSession, out_root: str) -> list:
@@ -158,11 +167,11 @@ def run(
         with_tables=with_tables,
         with_metadata=with_metadata,
     ).withColumn("bucket", bucket_expr(n_buckets))
-    # repartition by bucket before the partitioned write — one shuffle,
-    # but the file count is O(n_buckets) instead of O(tasks × buckets) (a
-    # 10^12-turn run with 10k buckets would otherwise shatter into
-    # millions of small files)
-    extracted = extracted.repartition(n_buckets, F.col("bucket"))
+    # shuffle by bucket before the partitioned write — the file count is
+    # O(n_buckets) instead of O(tasks × buckets) (a 10^12-turn run with 10k
+    # buckets would otherwise shatter into millions of small files), and
+    # AQE, not n_buckets, decides how many tasks write them
+    extracted = bucket_shuffle(extracted, n_buckets)
 
     write_table(extracted, p["data"], mode="overwrite_partitions", partition_by=["bucket"])
     wall_ms = int((time.monotonic() - t0) * 1000)

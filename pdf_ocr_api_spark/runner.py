@@ -74,7 +74,10 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--output", help="output root: <output>/data holds the turns by bucket, <output>/lineage "
                                      "one commit row per bucket per run (metrics, resume guard, status)")
     ap.add_argument("--run-id", default=None)
-    ap.add_argument("--buckets", type=int, default=64)
+    ap.add_argument("--buckets", type=int, default=64,
+                    help="extraction: the resume unit and the initial width of the bucket write's shuffle (AQE "
+                         "sizes the writer tasks; a bucket above the advisory partition size may be written as "
+                         "several files); corpus jobs: the MinHash parallelism")
     ap.add_argument("--salt", type=int, default=None, help="salted repartition for skewed inputs")
     ap.add_argument("--text-only", action="store_true",
                     help="skip the service cascade: clean_text+spans only (~2x faster, ~45%% fewer output bytes)")
@@ -194,7 +197,7 @@ def main(argv: list[str] | None = None) -> int:
     from pyspark.sql import SparkSession
 
     from . import conversation, fixtures, lineage
-    from .sources.io import read_table, write_table
+    from .sources.io import read_table, sub_target, write_table
 
     spark = build_session(
         "pdf-ocr-api-spark-extract", args.master, args.shuffle_partitions, args.driver_memory
@@ -223,8 +226,6 @@ def main(argv: list[str] | None = None) -> int:
             recs = conversation.conversation_service_rows(ext, tipo_dim)
         else:
             recs = conversation.conversation_records(ext, tipo_dim)
-        from .sources.io import sub_target
-
         write_table(recs, sub_target(args.output, "records"), mode="create")
     return 0
 

@@ -1,5 +1,7 @@
 """Checkpoint manifest + idempotent resume (FIXTURES.md §4)."""
 
+from contextlib import contextmanager
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -174,3 +176,67 @@ def test_fresh_run_spark_job_budget(spark, transcripts, tmp_path):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 6
+
+
+@contextmanager
+def _aqe(spark, enabled: bool):
+    """``spark.sql.adaptive.enabled`` set for the block, restored after."""
+    old = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", str(enabled).lower())
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", old)
+
+
+def test_bucket_shuffle_plan_follows_aqe(spark):
+    """Under AQE the write shuffle is a REBALANCE (AQE may coalesce or
+    split its tasks); without AQE the analyzer would drop that hint, so
+    the helper falls back to the fixed-width repartition."""
+    from pdf_ocr_api_spark.plans.inspect import executed_plan
+
+    df = spark.range(100).withColumn("bucket", (F.col("id") % 8).cast("int"))
+    with _aqe(spark, True):
+        assert "REBALANCE_PARTITIONS_BY_COL" in executed_plan(lineage.bucket_shuffle(df, 8))
+    with _aqe(spark, False):
+        plan = executed_plan(lineage.bucket_shuffle(df, 8))
+    assert "REPARTITION_BY_NUM" in plan and "REBALANCE" not in plan
+
+
+def test_one_file_per_bucket_with_and_without_aqe(spark, tmp_path):
+    """The bucket write leaves exactly one parquet file per bucket
+    directory with AQE on and off, and both write the same rows."""
+    transcripts = spark.createDataFrame(fixtures.fixture_frame(60))
+    rows = []
+    for aqe in (True, False):
+        out = tmp_path / f"aqe_{aqe}"
+        with _aqe(spark, aqe):
+            lineage.run(spark, transcripts, str(out), run_id="r", n_buckets=8)
+        dirs = sorted((out / "data").glob("bucket=*"))
+        assert len(dirs) == 8
+        assert {d.name: len(list(d.glob("*.parquet"))) for d in dirs} == {d.name: 1 for d in dirs}
+        data = lineage.read_output(spark, str(out)).select("conv_id", "turn_idx", "clean_text")
+        rows.append(data.orderBy("conv_id", "turn_idx").toPandas())
+    assert rows[0].equals(rows[1])
+
+def test_bare_output_root_keeps_tables_together(spark, tmp_path, monkeypatch):
+    """``runner --output results --records`` puts data, lineage and
+    records under one ``results/`` directory. A bare root is relative to
+    the working directory of both processes: the Python side's (resume
+    checks) and the JVM's local filesystem (Spark's reads and writes), so
+    the test moves both to ``tmp_path`` and restores the JVM's after."""
+    from pdf_ocr_api_spark import runner
+
+    inp = str(tmp_path / "in")
+    spark.createDataFrame(fixtures.fixture_frame(12)).write.parquet(inp)
+    monkeypatch.chdir(tmp_path)
+    jvm = spark._jvm
+    fs = jvm.org.apache.hadoop.fs.FileSystem.getLocal(spark._jsc.hadoopConfiguration())
+    old_wd = fs.getWorkingDirectory()
+    fs.setWorkingDirectory(jvm.org.apache.hadoop.fs.Path(tmp_path.as_uri()))
+    try:
+        assert runner.main(["--input", inp, "--output", "results", "--records", "--buckets", "4"]) == 0
+    finally:
+        fs.setWorkingDirectory(old_wd)
+    assert sorted(p.name for p in tmp_path.iterdir()) == ["in", "results"]
+    assert sorted(p.name for p in (tmp_path / "results").iterdir()) == ["data", "lineage", "records"]
