@@ -18,9 +18,9 @@ tracking is the **bucket**: a deterministic hash partition of conversations
 Writes are bucket-wise dynamic-partition overwrites, so a crashed run that
 re-processes a bucket converges to the same bytes (extraction is a pure
 per-turn function — see tests/test_pipeline.py::test_partition_invariance).
-``n_buckets`` is the resume unit and the initial width of the write's
-shuffle on ``bucket``; AQE sizes the writer tasks from the shuffle sizes,
-and a bucket above the advisory partition size may become several files.
+``n_buckets`` is the resume unit. The write's shuffle hashes on ``bucket``
+at the session's ``spark.sql.shuffle.partitions`` width and AQE coalesces
+its writer tasks from the shuffle sizes; each bucket stays ONE file.
 The commit rows go in ONE append after the data write: a crash before it
 leaves no row, and the resume reprocesses exactly those buckets.
 """
@@ -55,18 +55,19 @@ def _paths(out_root: str) -> dict:
     return {k: sub_target(out_root, k) for k in ("data", "lineage")}
 
 
-def bucket_shuffle(df: DataFrame, n_buckets: int) -> DataFrame:
-    """Hash on ``bucket`` for the write: a REBALANCE whose tasks AQE sizes, or,
-    without AQE (its analyzer drops that hint), a fixed-width repartition."""
-    if df.sparkSession.conf.get("spark.sql.adaptive.enabled").lower() == "true":
-        return df.hint("rebalance", n_buckets, "bucket")
-    return df.repartition(n_buckets, F.col("bucket"))
-
-
 def _commits(spark: SparkSession, out_root: str) -> list:
     """The root's committed (bucket, mode, n_buckets, depara_digest) rows, in one read."""
     p = _paths(out_root)
     if not table_exists(spark, p["lineage"]):
+        # a bare path root ("results") once kept its tables beside it
+        # (results_data, results_lineage): refuse it rather than re-extract
+        # every bucket into a second copy
+        sibling = f"{out_root}_lineage"
+        if "/" not in out_root and p["lineage"] != sibling and table_exists(spark, sibling):
+            raise ValueError(
+                f"output root {out_root!r} uses the old sibling layout ({out_root}_data, "
+                f"{out_root}_lineage); move them to {out_root}/data and {out_root}/lineage to resume"
+            )
         return []
     lin = read_table(spark, p["lineage"])
     if "status" not in lin.columns:
@@ -169,9 +170,10 @@ def run(
     ).withColumn("bucket", bucket_expr(n_buckets))
     # shuffle by bucket before the partitioned write — the file count is
     # O(n_buckets) instead of O(tasks × buckets) (a 10^12-turn run with 10k
-    # buckets would otherwise shatter into millions of small files), and
-    # AQE, not n_buckets, decides how many tasks write them
-    extracted = bucket_shuffle(extracted, n_buckets)
+    # buckets would otherwise shatter into millions of small files). No
+    # fixed width: a REPARTITION_BY_COL exchange is one AQE coalesces, so
+    # the shuffle sizes, not n_buckets, decide how many tasks write
+    extracted = extracted.repartition(F.col("bucket"))
 
     write_table(extracted, p["data"], mode="overwrite_partitions", partition_by=["bucket"])
     wall_ms = int((time.monotonic() - t0) * 1000)

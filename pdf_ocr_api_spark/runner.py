@@ -75,9 +75,8 @@ def main(argv: list[str] | None = None) -> int:
                                      "one commit row per bucket per run (metrics, resume guard, status)")
     ap.add_argument("--run-id", default=None)
     ap.add_argument("--buckets", type=int, default=64,
-                    help="extraction: the resume unit and the initial width of the bucket write's shuffle (AQE "
-                         "sizes the writer tasks; a bucket above the advisory partition size may be written as "
-                         "several files); corpus jobs: the MinHash parallelism")
+                    help="extraction: the resume unit, one file per bucket (AQE sizes the write tasks from "
+                         "the shuffle); corpus jobs: the MinHash parallelism")
     ap.add_argument("--salt", type=int, default=None, help="salted repartition for skewed inputs")
     ap.add_argument("--text-only", action="store_true",
                     help="skip the service cascade: clean_text+spans only (~2x faster, ~45%% fewer output bytes)")

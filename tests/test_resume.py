@@ -189,18 +189,43 @@ def _aqe(spark, enabled: bool):
         spark.conf.set("spark.sql.adaptive.enabled", old)
 
 
-def test_bucket_shuffle_plan_follows_aqe(spark):
-    """Under AQE the write shuffle is a REBALANCE (AQE may coalesce or
-    split its tasks); without AQE the analyzer would drop that hint, so
-    the helper falls back to the fixed-width repartition."""
-    from pdf_ocr_api_spark.plans.inspect import executed_plan
+def _write_task_counts(spark, transcripts, out, monkeypatch):
+    """Task count of every stage of the bucket write when ``lineage.run``
+    extracts into ``out``; the write runs in its own job group."""
+    from pdf_ocr_api_spark.sources.io import write_table as real
 
-    df = spark.range(100).withColumn("bucket", (F.col("id") % 8).cast("int"))
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = f"bucket-write-{out.name}"
+
+    def write(df, target, **kw):
+        if target.endswith("/data"):
+            sc.setJobGroup(group, "bucket write")
+        try:
+            return real(df, target, **kw)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+
+    monkeypatch.setattr(lineage, "write_table", write)
+    lineage.run(spark, transcripts, str(out), run_id="r", n_buckets=16)
+    stages = {s for j in tracker.getJobIdsForGroup(group) for s in tracker.getJobInfo(j).stageIds}
+    return [tracker.getStageInfo(s).numTasks for s in stages]
+
+
+def test_bucket_write_is_coalesced_under_aqe(spark, transcripts, tmp_path, monkeypatch):
+    """The write's shuffle has no fixed width, so AQE coalesces it: with 16
+    buckets and 32 shuffle partitions the write needs no more tasks than
+    there are cores (a ``repartition(n_buckets, bucket)`` would keep 16).
+    Without AQE the write runs at the full ``spark.sql.shuffle.partitions``
+    width."""
+    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    cores = spark.sparkContext.defaultParallelism
+    assert width > 16 > cores
     with _aqe(spark, True):
-        assert "REBALANCE_PARTITIONS_BY_COL" in executed_plan(lineage.bucket_shuffle(df, 8))
+        assert max(_write_task_counts(spark, transcripts, tmp_path / "on", monkeypatch)) <= cores
     with _aqe(spark, False):
-        plan = executed_plan(lineage.bucket_shuffle(df, 8))
-    assert "REPARTITION_BY_NUM" in plan and "REBALANCE" not in plan
+        assert max(_write_task_counts(spark, transcripts, tmp_path / "off", monkeypatch)) == width
 
 
 def test_one_file_per_bucket_with_and_without_aqe(spark, tmp_path):
@@ -218,6 +243,7 @@ def test_one_file_per_bucket_with_and_without_aqe(spark, tmp_path):
         data = lineage.read_output(spark, str(out)).select("conv_id", "turn_idx", "clean_text")
         rows.append(data.orderBy("conv_id", "turn_idx").toPandas())
     assert rows[0].equals(rows[1])
+
 
 def test_bare_output_root_keeps_tables_together(spark, tmp_path, monkeypatch):
     """``runner --output results --records`` puts data, lineage and
@@ -240,3 +266,15 @@ def test_bare_output_root_keeps_tables_together(spark, tmp_path, monkeypatch):
         fs.setWorkingDirectory(old_wd)
     assert sorted(p.name for p in tmp_path.iterdir()) == ["in", "results"]
     assert sorted(p.name for p in (tmp_path / "results").iterdir()) == ["data", "lineage", "records"]
+
+
+def test_old_sibling_layout_refused(spark, transcripts, tmp_path, monkeypatch):
+    """A bare root written with the earlier sibling layout
+    (``<root>_data``, ``<root>_lineage``) is refused with the move to
+    make, not silently re-extracted into ``<root>/data``."""
+    monkeypatch.chdir(tmp_path)
+    lineage.run(spark, transcripts, str(tmp_path / "results_x"), run_id="a", n_buckets=8)
+    (tmp_path / "results_x" / "lineage").rename(tmp_path / "results_lineage")
+    with pytest.raises(ValueError, match="old sibling layout"):
+        lineage.done_buckets(spark, "results")
+    assert not (tmp_path / "results").exists()
