@@ -397,9 +397,7 @@ def q_training_split(spark, sf_dir):
     60-bit hash, so the DuckDB oracle reproduces the assignment
     value-for-value — a FULL hash-match for sampling, which rand()-based
     sampling can never give. zh is upsampled 2.5× (2 whole copies + a
-    hash-remainder third), fr downsampled to 0.4, the rest pass through
-    (the r5 registry slot freed by rotate_turns, whose operator remains
-    pytest-covered in test_turnops)."""
+    hash-remainder third), fr downsampled to 0.4, the rest pass through."""
     from pdf_ocr_api_spark.ops import training
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -777,8 +775,8 @@ def q_ann_batch_cosine(spark, sf_dir):
 
 
 def q_dedup_embedding(spark, sf_dir):
-    """Embedding-cosine near-dup pairs — exact variant (DuckDB-oracled);
-    the SRP-blocked scale variant is exercised in tests."""
+    """Embedding-cosine near-dup pairs — exact O(n²) variant
+    (DuckDB-oracled)."""
     from pdf_ocr_api_spark.ops import similarity
 
     e = _t(spark, sf_dir, "embeddings")

@@ -9,7 +9,9 @@ Layout:
     functions/   scalar + vectorized normalization / pattern layer (SURVEY §2.7)
     extract/     per-payload extractors + parser cascade (SURVEY §2.8)
     sources/     Iceberg-first readers/writers with parquet fallback (SURVEY §2.1)
-    ops/         training-data pipeline operators (dedup, similarity, text stats)
+    ops/         corpus operators: quality gates, dedup, substring/repetition
+                 removal, domains, LM/NB scoring, splits/packing, similarity
+    operators/   turn-axis page operations (select/delete/insert/replace/split)
     pipeline.py  the mapInPandas extraction UDF (per-turn)
     conversation.py  conversation-level assembly (windows A1-A6, filters F2-F12)
     lineage.py   bucket-checkpointed runs: one commit table + idempotent resume

@@ -1,7 +1,6 @@
 """Dimension lookups J2/J3/J6 (SURVEY.md §2.3) + deterministic header rules.
 
 * ``map_by_sigla``        — ref parser/mapBySigla.js:9-27 (J2)
-* ``map_by_texto``        — ref parser/normalizeDepara.js:17-25 (J3)
 * ``normalize_depara``    — ref parser/normalizeDepara.js:10-15
 * ``detect_tipo_certidao``— ref parser/detectTipoCertidao.js:9-45 (J6)
 * ``deterministic_header``— replaces the reference's GPT call (S7,
@@ -18,17 +17,6 @@ from ..functions.normalize import normaliza_depara, normaliza_sigla, normalize_t
 def normalize_depara(lista, campo: str):
     """Normalize a de/para list to ``[{id, valor}]`` (T2 applied to campo)."""
     return [{"id": item["id"], "valor": normaliza_depara(item.get(campo))} for item in (lista or [])]
-
-
-def map_by_texto(texto: str | None, lista) -> str | None:
-    """J3 — first list value contained in the normalized text."""
-    t = normaliza_depara(texto)
-    if t is None:
-        return None
-    for item in lista or []:
-        if item["valor"] is not None and item["valor"] in t:
-            return item["valor"]
-    return None
 
 
 def map_by_sigla(valor: str | None, lista) -> int | None:

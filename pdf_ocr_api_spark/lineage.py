@@ -86,10 +86,6 @@ def _commits(spark: SparkSession, out_root: str) -> list:
     )
 
 
-def done_buckets(spark: SparkSession, out_root: str) -> list[int]:
-    return sorted({r.bucket for r in _commits(spark, out_root)})
-
-
 def run(
     spark: SparkSession,
     transcripts: DataFrame,

@@ -52,18 +52,6 @@ def delete_turns(df: DataFrame, start: int, end: int) -> DataFrame:
     )
 
 
-def rotate_turns(df: DataFrame, k: int) -> DataFrame:
-    """Rotate analogue: cyclic shift of the turn order by k positions
-    within each conversation (the relational twin of page rotation —
-    a pure order transform)."""
-    w = Window.partitionBy("conv_id")
-    n = F.count("*").over(w)
-    # pmod, not %: Spark's % is Java remainder, so a negative k would
-    # yield negative positions instead of wrapping cyclically
-    new_pos = F.pmod(F.col("turn_idx") + F.lit(k), n)
-    return _renumber(df.withColumn("_ord", new_pos), [F.col("_ord")])
-
-
 def insert_turns(base: DataFrame, insert: DataFrame, at: int, into_conv: str | None = None) -> DataFrame:
     """U4 — insert another conversation's turns at position ``at``:
     union + composite re-sort (ref insert-pdf-pages.js:111-116).
@@ -96,20 +84,6 @@ def replace_turns(
     ).withColumn("_src", F.lit(0))
     rep = replacement.withColumn("_ord", F.lit(start)).withColumn("_src", F.lit(1))
     return _renumber(kept.unionByName(rep), [F.col("_ord"), F.col("_src"), F.col("turn_idx")])
-
-
-def combine_conversations(dfs: list[DataFrame], new_conv_id: str) -> DataFrame:
-    """U1 — combine: concatenate several conversations into one, in list
-    order (ref combine-pdf.js); order restored by explicit keys, never
-    by arrival."""
-    parts = [
-        df.withColumn("_src", F.lit(i)).withColumn("conv_id", F.lit(new_conv_id))
-        for i, df in enumerate(dfs)
-    ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return _renumber(out, [F.col("_src"), F.col("turn_idx")])
 
 
 def _renumber_within_chunk(df: DataFrame, tie: list[str] | None = None) -> DataFrame:

@@ -249,7 +249,7 @@ def minhash_lsh_pairs(
     )
     pairs._bucket_cap_observation = obs
     if max_bucket_size is not None:
-        # fallback for warn_dropped_buckets when AQE prunes the observed
+        # fallback for bucket_cap_metrics when AQE prunes the observed
         # stage (it rebuilds the final plan without the CollectMetrics
         # node whenever a downstream stage turns out empty): the
         # unfiltered sizes frame + the cap, to recompute the two scalars
@@ -304,12 +304,6 @@ def _warn_bucket_metrics(metrics: dict) -> int:
             metrics.get("max_bucket"),
         )
     return dropped
-
-
-def warn_dropped_buckets(pairs: DataFrame) -> int:
-    """``bucket_cap_metrics`` + a WARNING log when anything was dropped;
-    returns the dropped-bucket count."""
-    return _warn_bucket_metrics(bucket_cap_metrics(pairs))
 
 
 def jaccard_verify(

@@ -13,8 +13,7 @@ two standard pipeline stages act on that axis:
   ``cap_per_domain`` keeps a deterministic, layout-independent sample
   of ``n`` documents per domain.
 
-``registered_domain`` is the supporting expression: URL → the
-registrable domain (the unit both stages key on).
+Both stages key on a domain column the caller supplies.
 
 Reference provenance: the reference engine has no domain stage (its
 corpus is per-invoice PDFs); this module belongs to the LLM-training-
@@ -48,111 +47,24 @@ from pyspark.sql import functions as F
 from .training import portable_hash
 
 __all__ = [
-    "MULTI_LABEL_SUFFIXES",
-    "registered_domain",
     "domain_stats",
     "filter_domains",
     "cap_per_domain",
-    "cap_per_domain_incremental",
 ]
 
-#: Common multi-label public suffixes ("co.uk" is a suffix, so
-#: "bbc.co.uk" is the registrable domain).  A deliberately small,
-#: documented subset of the Mozilla Public Suffix List — the full PSL
-#: is thousands of rules and belongs in a broadcast TABLE for operators
-#: that need exactness (pass ``suffixes`` to extend); this subset
-#: covers the high-traffic ccTLD families.
-MULTI_LABEL_SUFFIXES: tuple[str, ...] = (
-    "co.uk", "org.uk", "ac.uk", "gov.uk", "me.uk", "net.uk",
-    "com.au", "net.au", "org.au", "edu.au", "gov.au",
-    "co.jp", "ne.jp", "or.jp", "ac.jp", "go.jp",
-    "com.br", "net.br", "org.br", "gov.br",
-    "com.cn", "net.cn", "org.cn", "gov.cn",
-    "com.mx", "com.ar", "com.tr", "com.tw", "com.hk", "com.sg",
-    "co.in", "co.kr", "co.za", "co.nz", "co.id", "co.th",
-)
 
-
-def registered_domain(col, suffixes: tuple[str, ...] = MULTI_LABEL_SUFFIXES):
-    """Expression: URL (or bare host) → lowercased registrable domain.
-
-    Pure built-in expressions (no UDF — this runs on every row of a
-    web-scale corpus): strip scheme, userinfo, port, path/query/
-    fragment and any trailing dot, lowercase, then keep the last two
-    labels — or three when the last two form a known multi-label
-    public suffix.  Hosts with no dots (``localhost``) and IPv4
-    literals come back whole; NULL stays NULL.
-
-    This is a heuristic by design: the true registrable boundary needs
-    the full Public Suffix List (see ``MULTI_LABEL_SUFFIXES``).  For
-    exact-PSL pipelines, compute the host with this expression's steps
-    and join a PSL broadcast table instead.
-    """
-    host = F.lower(
-        F.regexp_extract(
-            F.regexp_replace(
-                # optional-scheme form also strips protocol-relative
-                # '//host/...' hrefs (ubiquitous in crawl data — the
-                # anchored host extract would otherwise return '' and
-                # every such URL would evade blocklists in one giant
-                # pseudo-domain, r5 review finding)
-                F.regexp_replace(col, r"^([a-zA-Z][a-zA-Z0-9+.\-]*:)?//", ""),
-                r"^[^/@?#]*@",
-                "",
-            ),
-            r"^([^/:?#]+)",
-            1,
-        )
-    )
-    host = F.regexp_replace(host, r"\.$", "")
-    labels = F.split(host, r"\.")
-    n = F.size(labels)
-    is_ip = host.rlike(r"^\d{1,3}(\.\d{1,3}){3}$")
-    last2 = F.when(
-        n >= 2, F.concat_ws(".", F.element_at(labels, -2), F.element_at(labels, -1))
-    )
-    last3 = F.when(
-        n >= 3,
-        F.concat_ws(
-            ".",
-            F.element_at(labels, -3),
-            F.element_at(labels, -2),
-            F.element_at(labels, -1),
-        ),
-    )
-    multi = last2.isin(*suffixes)
-    return (
-        F.when(col.isNull(), F.lit(None).cast("string"))
-        # no extractable host (path-only '/about', bare 'https://',
-        # 'file:///x') → NULL, so such rows follow the module's NULL
-        # conventions instead of pooling into one '' pseudo-domain
-        # that evades blocklists and shares a single cap budget
-        # (r5 review finding — same class as the protocol-relative fix)
-        .when(host == "", F.lit(None).cast("string"))
-        .when(is_ip | (n <= 1), host)
-        .when(multi & (n >= 3), last3)
-        .when(multi, host)  # the suffix itself ("co.uk") — nothing above it
-        .otherwise(last2)
-    )
-
-
-def domain_stats(
-    df: DataFrame, domain_col: str = "source", text_col: str | None = "text"
-) -> DataFrame:
+def domain_stats(df: DataFrame, domain_col: str = "source", text_col: str = "text") -> DataFrame:
     """Per-domain corpus profile: ``(domain, n_docs, n_chars,
     n_tokens)`` — the frame an operator ranks to find cap candidates
     and blocklist suspects.  One partial-aggregated shuffle on the
-    domain key; with ``text_col=None`` only ``n_docs`` is computed."""
-    aggs = [F.count("*").alias("n_docs")]
-    if text_col is not None:
-        from .textstats import ws_tokens
+    domain key."""
+    from .textstats import ws_tokens
 
-        toks = F.size(ws_tokens(F.col(text_col), lower=False))
-        aggs += [
-            F.sum(F.length(F.coalesce(F.col(text_col), F.lit("")))).alias("n_chars"),
-            F.sum(toks).alias("n_tokens"),
-        ]
-    return df.groupBy(F.col(domain_col).alias("domain")).agg(*aggs)
+    return df.groupBy(F.col(domain_col).alias("domain")).agg(
+        F.count("*").alias("n_docs"),
+        F.sum(F.length(F.coalesce(F.col(text_col), F.lit("")))).alias("n_chars"),
+        F.sum(F.size(ws_tokens(F.col(text_col), lower=False))).alias("n_tokens"),
+    )
 
 
 def filter_domains(
@@ -167,13 +79,13 @@ def filter_domains(
     ``mode='allow'`` keeps only them.
 
     ``match='exact'`` (default) compares the column verbatim — right
-    when the column already holds the registered domain
-    (``registered_domain``'s output).  ``match='suffix'`` additionally
+    when the column already holds the registered domain.
+    ``match='suffix'`` additionally
     matches any SUBDOMAIN of a listed entry (``bad.com`` also hits
     ``cdn.bad.com`` — the C4 blocklist convention for raw-host
     columns) via exact-or-``.``-suffix predicates, so ``notbad.com``
     and ``bad.com.evil.org`` never false-positive.  Entries are
-    expected lowercase (hosts from ``registered_domain`` are).
+    expected lowercase.
 
     A sequence becomes a literal predicate in the plan (isin /
     endswith-chain — pushes toward the scan); a DataFrame becomes a
@@ -323,57 +235,3 @@ def _partial_topn(
         _partial,
         f"_d {df.schema[domain_col].dataType.simpleString()}, _k {key_t}, _h long",
     )
-
-
-def cap_per_domain_incremental(
-    index: DataFrame,
-    batch: DataFrame,
-    n: int,
-    domain_col: str = "source",
-    key_col: str = "doc_id",
-    salt: str = "domain-cap-v1",
-    parallelism: int | None = None,
-) -> DataFrame:
-    """Incremental ``cap_per_domain`` for a corpus that GROWS: admit
-    from the NEW batch only as many documents per domain as the stored
-    corpus has quota left, without re-reading history — the same
-    "history is immutable" append contract as
-    ``corpus.clean_corpus_incremental`` and the substring index.
-
-    ``index`` is the per-domain stored count, ``(domain, n_docs)`` —
-    exactly ``domain_stats(kept, text_col=None)``'s shape (persist it;
-    update after each append with the admitted batch's own
-    ``domain_stats``).  Domains absent from the index have full quota.
-
-    Documented divergence from the full recompute (standard for
-    incremental caps): a recompute over history ∪ batch re-draws the n
-    smallest hashes OVERALL and could evict stored docs in favor of
-    smaller-hash batch docs; the incremental form never evicts — it
-    fills remaining slots with the batch's smallest hashes.  Both are
-    deterministic; under the append contract the stored corpus never
-    exceeds n per domain either way.
-
-    Plan: the same partial-top-n shape as ``cap_per_domain`` (``n`` is
-    a valid upper bound for every domain's remaining quota), then the
-    global rank joins the (domain-cardinality-scale) index to apply
-    each domain's actual remainder.
-
-    NULL-domain rows always see full quota here (an equi-join cannot
-    match a NULL index row) — attribute unattributable docs to a
-    sentinel domain string before capping if they must share one
-    budget across batches.  ``parallelism``: see ``cap_per_domain``."""
-    from pyspark.sql import Window
-
-    survivors = _partial_topn(batch, n, domain_col, key_col, salt, parallelism)
-    quota = index.select(
-        F.col("domain").alias("_d"),
-        (F.lit(n) - F.col("n_docs")).alias("_left"),
-    )
-    w = Window.partitionBy("_d").orderBy("_h", "_k")
-    kept = (
-        survivors.withColumn("_rn", F.row_number().over(w))
-        .join(quota, "_d", "left")
-        .filter(F.col("_rn") <= F.greatest(F.coalesce("_left", F.lit(n)), F.lit(0)))
-        .select(F.col("_k").alias(key_col))
-    )
-    return batch.join(kept, key_col, "left_semi")

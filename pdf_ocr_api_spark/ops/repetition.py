@@ -44,7 +44,6 @@ from pyspark.sql import functions as F
 __all__ = [
     "dedup_lines",
     "repetition_profile",
-    "with_repetition",
     "repetition_filter",
     "strip_boilerplate_lines",
     "GOPHER_REPETITION_THRESHOLDS",
@@ -350,20 +349,6 @@ def repetition_profile(
             "top_4gram_char_frac"
         ),
     )
-
-
-def with_repetition(
-    df: DataFrame, text_col: str, id_col: str = "doc_id", engine: str = "pandas"
-) -> DataFrame:
-    """``df`` + the repetition signal columns (LEFT equi-join on the
-    id, so no input row is ever dropped — a NULL-id row keeps its data
-    with NULL signals; ``id_col`` must be unique per row or the join
-    multiplies rows).  Prefer ``repetition_filter`` which gates
-    without a join."""
-    prof = repetition_profile(df, text_col, id_col, engine=engine).withColumnRenamed(
-        "id", id_col
-    )
-    return df.join(prof, id_col, "left")
 
 
 def repetition_filter(

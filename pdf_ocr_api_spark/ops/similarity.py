@@ -2,14 +2,12 @@
 
 * brute-force cosine top-k — the exactness baseline: dot product via
   ``aggregate(zip_with(...))`` (pure JVM expression, codegen'd), one
-  orderBy+limit (Spark plans TakeOrderedAndProject — no full sort);
-  ``brute_force_topk_batch`` answers many queries in one corpus scan.
+  orderBy+limit (Spark plans TakeOrderedAndProject — no full sort).
 * LSH-bucketed ANN — signed-random-projection signatures computed from
   driver-seeded hyperplanes (literal arrays in the plan), bucket
   equality prunes the candidate set before the exact cosine rerank;
   multiprobe = flip each signature bit once.
-* embedding near-duplicate pairs — an exact O(n²) self-join and the
-  banded-SRP blocked variant that verifies only candidate pairs.
+* embedding near-duplicate pairs — an exact O(n²) self-join.
 
 The brute force is a full scan per query (fine for batch scoring of a
 handful of queries); the LSH variant turns it into a filter on
@@ -55,45 +53,6 @@ def brute_force_topk(
         )
         .orderBy(F.desc("cosine"), F.asc("id"))
         .limit(k)
-    )
-
-
-def brute_force_topk_batch(
-    emb: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    qid_col: str = "query_id",
-    qvec_col: str = "query_vec",
-) -> DataFrame:
-    """Exact cosine top-k for MANY queries in ONE corpus scan: broadcast
-    the (small) query table, score every (vector, query) pair with the
-    JVM cosine expression, keep each query's top k via a per-query
-    window. Returns (query_id, id, cosine) with (cosine desc, id asc)
-    rank order; cosine rounded to 6 decimals BEFORE ranking so ties
-    break identically everywhere.
-
-    This is the batch-scoring shape a training pipeline needs (dedupe a
-    corpus against N seed/blocklist vectors, score against N probes):
-    per-query ``brute_force_topk`` would scan the corpus N times; this
-    scans once, and the only shuffle is the per-query top-k aggregation
-    on uniform query-id keys. For the tens-of-queries regime the
-    broadcast product is the right plan."""
-    from pyspark.sql import Window
-
-    scored = emb.crossJoin(F.broadcast(queries)).select(
-        F.col(qid_col).alias("query_id"),
-        F.col(id_col).alias("id"),
-        F.round(
-            cosine_to_query_expr(F.col(vec_col), F.col(qvec_col)), 6
-        ).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("id"))
-    return (
-        scored.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= k)
-        .drop("_rk")
     )
 
 
@@ -153,19 +112,6 @@ def lsh_topk(
     return brute_force_topk(cand, query_vec, k, id_col=id_col, vec_col=vec_col)
 
 
-def cosine_to_query_expr(vec_col, qvec_col):
-    """cosine(vec, query) between two array columns WITH the zero-query-
-    norm guard ``cosine_to`` applies driver-side (``or 1.0``): an
-    all-zero query vector scores 0.0 against every row instead of
-    NULL-ing the whole column — without this, a batch path would rank
-    all-NULL ties by id while the single-query path returns 0.0 rows,
-    breaking the per-query equality contract."""
-    vd = vec_col.cast("array<double>")
-    qd = qvec_col.cast("array<double>")
-    qn = _norm(qd)
-    return _dot(vd, qd) / (_norm(vd) * F.when(qn == 0.0, F.lit(1.0)).otherwise(qn))
-
-
 def cosine_pair_expr(a, b):
     """Cosine similarity between two array<float> columns (double math)."""
     ad = a.cast("array<double>")
@@ -179,74 +125,11 @@ def embedding_near_pairs_exact(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs, exact O(n²) self-join —
-    the verification baseline (use the blocked variant at scale)."""
+    """Embedding-cosine near-duplicate pairs, exact O(n²) self-join."""
     a = emb.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"))
     b = emb.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"))
     return (
         a.join(b, F.col("id_a") < F.col("id_b"))
-        .withColumn("cosine", F.round(cosine_pair_expr(F.col("va"), F.col("vb")), 4))
-        .filter(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", "cosine")
-    )
-
-
-def embedding_near_pairs(
-    emb: DataFrame,
-    threshold: float = 0.9,
-    n_bands: int = 8,
-    planes_per_band: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-    dim: int | None = None,
-) -> DataFrame:
-    """Scale path: **banded** SRP blocking (AND within a band, OR across
-    bands) + exact cosine verify on the candidates.
-
-    A single r-plane signature collides with probability
-    p^r where p = 1 − θ/π — at cosine 0.9 (θ ≈ 0.451 rad, p ≈ 0.857)
-    a 12-plane signature keeps only ~16 % of true pairs. With b bands of
-    r planes the collision probability is 1 − (1 − p^r)^b: the default
-    b=8, r=4 gives ≈ 0.998 at cosine 0.9 (and ≥ 0.96 down to cosine
-    0.8) — asserted against the exact twin in tests.
-
-    Plan shape: signatures explode to (band_idx, band_sig) rows WITHOUT
-    the vector payload (ids only — b× id rows, not b× vectors), the
-    self-join on uniform hash keys yields candidate id pairs, and the
-    vectors join back only for the exact verify. No all-pairs stage
-    anywhere; skew-free keys by construction."""
-    if dim is None:
-        head = emb.select(vec_col).head(1)
-        if not head:  # empty input → empty pairs, correct schema
-            return emb.limit(0).select(
-                F.col(id_col).alias("id_a"), F.col(id_col).alias("id_b"), F.lit(0.0).alias("cosine")
-            )
-        dim = len(head[0][0])
-    planes = random_hyperplanes(dim, n_bands * planes_per_band, seed)
-    band_sigs = F.array(
-        *[
-            srp_signature(F.col(vec_col), planes[j * planes_per_band : (j + 1) * planes_per_band])
-            for j in range(n_bands)
-        ]
-    )
-    sig = emb.select(F.col(id_col).alias("id"), F.posexplode(band_sigs).alias("band", "bsig"))
-    cand = (
-        sig.alias("a")
-        .join(
-            sig.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bsig") == F.col("b.bsig"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    va = emb.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"))
-    vb = emb.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"))
-    return (
-        cand.join(va, "id_a")
-        .join(vb, "id_b")
         .withColumn("cosine", F.round(cosine_pair_expr(F.col("va"), F.col("vb")), 4))
         .filter(F.col("cosine") >= threshold)
         .select("id_a", "id_b", "cosine")

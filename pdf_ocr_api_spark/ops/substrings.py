@@ -66,10 +66,10 @@ _WS_SPLIT = re.compile(r"[ \t\n\x0b\f\r]+")
 __all__ = [
     "window_fingerprints",
     "dedup_substrings",
-    "substring_dup_stats",
     "substring_index",
+    "stamped_index",
+    "merged_index",
     "dedup_substrings_incremental",
-    "update_substring_index",
 ]
 
 # two independent odd multipliers (random 64-bit, fixed for
@@ -288,29 +288,6 @@ def window_fingerprints(
     )
 
 
-def substring_dup_stats(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-    width: int = 50, min_count: int = 2,
-) -> DataFrame:
-    """Audit view: one row per duplicated window fingerprint —
-    (h1, h2, n_occurrences, n_docs, keeper_id, keeper_pos)."""
-    wins = window_fingerprints(df, text_col, id_col, width)
-    return (
-        wins.groupBy("h1", "h2")
-        .agg(
-            F.count("*").alias("n_occurrences"),
-            F.count_distinct("id").alias("n_docs"),
-            F.min(F.struct("id", "pos")).alias("_k"),
-        )
-        .filter(F.col("n_occurrences") >= min_count)
-        .select(
-            "h1", "h2", "n_occurrences", "n_docs",
-            F.col("_k.id").alias("keeper_id"),
-            F.col("_k.pos").alias("keeper_pos"),
-        )
-    )
-
-
 def dedup_substrings(
     df: DataFrame,
     text_col: str = "text",
@@ -479,6 +456,43 @@ def substring_index(
     )
 
 
+def stamped_index(
+    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", width: int = 50
+) -> DataFrame:
+    """``substring_index`` rows as they are stored: ``(h1, h2, n_occ,
+    width, fp_version)``.  A store is an append-only log of these deltas
+    (crash-safe: a missing delta only costs recall later); ``merged_index``
+    reads it back.  Index the CLEANED text, so a cut span does not count
+    as a stored occurrence."""
+    return (
+        substring_index(df, text_col, id_col, width)
+        .withColumn("width", F.lit(width))
+        .withColumn("fp_version", F.lit(FP_VERSION))
+    )
+
+
+def merged_index(stored: DataFrame, width: int) -> DataFrame:
+    """The probe index ``(h1, h2, n_occ)`` of a store of ``stamped_index``
+    deltas, summed per fingerprint.
+
+    Raises ``ValueError`` when the store holds another width, or was
+    written by another fingerprint family (a store without ``fp_version``
+    predates versioning: family 1) — probing it would silently match
+    nothing and cost recall without a trace."""
+    fp = F.col("fp_version") if "fp_version" in stored.columns else F.lit(1)
+    stamps = stored.select("width", fp.alias("fp_version")).distinct().collect()
+    widths = sorted({r.width for r in stamps})
+    if widths and widths != [width]:
+        raise ValueError(f"width {width} does not match the stored index width(s) {widths}")
+    versions = sorted({r.fp_version for r in stamps})
+    if versions and versions != [FP_VERSION]:
+        raise ValueError(
+            f"substring index written by fingerprint family {versions}, this build is "
+            f"{FP_VERSION} — probing it would silently match nothing; rebuild the index"
+        )
+    return stored.groupBy("h1", "h2").agg(F.sum("n_occ").alias("n_occ"))
+
+
 def dedup_substrings_incremental(
     index: DataFrame,
     batch: DataFrame,
@@ -531,22 +545,3 @@ def dedup_substrings_incremental(
         .agg(F.sort_array(F.collect_list("pos")).alias("_cut_pos"))
     )
     return _apply_cuts(batch, remove, text_col, id_col, width)
-
-
-def update_substring_index(
-    index: DataFrame,
-    cleaned_batch: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    width: int = 50,
-) -> DataFrame:
-    """New index = old index + the CLEANED batch's fingerprints
-    (re-fingerprinting the cleaned text, not the raw batch — cut spans
-    must not count as stored occurrences).  One token-scale pass over
-    the batch only; merge is a fingerprint-keyed sum."""
-    delta = substring_index(cleaned_batch, text_col, id_col, width)
-    return (
-        index.unionByName(delta)
-        .groupBy("h1", "h2")
-        .agg(F.sum("n_occ").alias("n_occ"))
-    )

@@ -1,5 +1,5 @@
 """Text analysis operators: language-ID, quality scoring, token counting,
-document fingerprinting — all JVM-side expressions (no UDFs), suitable for
+PII scrubbing — all JVM-side expressions (no UDFs), suitable for
 a 100 TB corpus sweep (single scan, map-side only until the final agg).
 """
 
@@ -8,7 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import normalized_text, shingles
+from .dedup import normalized_text
 
 # stopword banks for the n-gram/stopword langid heuristic, as word lists
 # (LANG_MARKERS derives the per-lang regexes; the sweep form fuses all
@@ -145,11 +145,6 @@ def _script_count_exprs(col) -> list:
         (s, F.length(base) - F.length(F.regexp_replace(base, f"[{rng}]", "")))
         for s, rng in SCRIPT_RANGES.items()
     ]
-
-
-def script_counts(col):
-    """Per-script character counts (struct of ints, pure expressions)."""
-    return F.struct(*[c.alias(s) for s, c in _script_count_exprs(col)])
 
 
 def script_id(col):
@@ -423,29 +418,6 @@ def scrub_pii(col):
     for _name, rx, tag in PII_PATTERNS:
         out = F.regexp_replace(out, rx, tag)
     return out
-
-
-def pii_counts(col):
-    """Per-category PII hit counts (struct of ints) — the audit twin of
-    ``scrub_pii``: a corpus operator samples these to alert on PII-dense
-    sources before the scrub even runs."""
-    cur = F.coalesce(col, F.lit(""))
-    fields = []
-    for name, rx, tag in PII_PATTERNS:
-        # count on the text as the scrub chain would SEE it (earlier
-        # patterns already replaced) so categories never double-count
-        # the same span
-        fields.append(F.size(F.regexp_extract_all(cur, F.lit(rx), 0)).alias(name))
-        cur = F.regexp_replace(cur, rx, tag)
-    return F.struct(*fields)
-
-
-def fingerprint(col, k: int = 5, keep: int = 8):
-    """Winnowing-style document fingerprint: the ``keep`` smallest
-    xxhash64 values over word k-grams (rolling-hash analogue), sorted —
-    an order-insensitive near-dup key."""
-    hashes = F.transform(shingles(col, k), lambda s: F.xxhash64(s))
-    return F.slice(F.array_sort(F.array_distinct(hashes)), 1, keep)
 
 
 def md5_fingerprint(col):

@@ -1,5 +1,5 @@
-"""Training-set assembly: leakage-safe splits, mixture weighting,
-deterministic shuffle, and sequence packing.
+"""Training-set assembly: leakage-safe splits, mixture weighting and
+sequence packing.
 
 The last mile of the training-data product: after cleaning
 (``ops/corpus``), dedup (``ops/dedup``) and benchmark decontamination
@@ -16,7 +16,7 @@ Design rules, Spark-first and 100 TB-first:
   derived from ``md5``, computable identically in Spark
   (``conv(substr(md5(x),1,15),16,10)``) and in plain SQL engines
   (DuckDB: ``('0x'||substr(md5(x),1,15))::BIGINT``). No RNG state, no
-  driver coordination: split/sample/shuffle are map-side projections
+  driver coordination: split/sample are map-side projections
   that shuffle NOTHING, and an incremental batch lands in the same
   split/sample its rows would have landed in during a full rebuild —
   the property that makes grow-only corpora (``clean_corpus_incremental``)
@@ -170,31 +170,6 @@ def mixture_sample(
     return out
 
 
-def deterministic_shuffle(
-    df: DataFrame,
-    key_cols: list[str],
-    salt: str = "",
-    out_col: str = "shuffle_key",
-    partitions: int | None = None,
-) -> DataFrame:
-    """Reproducible global shuffle: order by ``hash(key-tuple, salt)``.
-
-    Different salts give independent epoch orders over the same corpus
-    with zero stored state. ``repartitionByRange`` on the hash gives a
-    globally-shuffled LAYOUT (range exchange — the one shuffle here);
-    within-partition sort finishes the total order. At 100 TB this is
-    how you shuffle: no driver-side permutation, no random() (which
-    breaks task retries — a re-executed task must re-draw identical
-    values, and ``rand()`` only guarantees that per partition-id, not
-    across AQE re-plans)."""
-    key = F.concat_ws(_SEP, *[F.col(c).cast("string") for c in key_cols])
-    out = df.withColumn(out_col, portable_hash(key, salt))
-    n = partitions or df.sparkSession.sparkContext.defaultParallelism
-    # key-tuple tie-break: a 60-bit hash collides eventually at corpus
-    # scale, and a tie must not leave the order partition-dependent
-    return out.repartitionByRange(n, out_col).sortWithinPartitions(out_col, *key_cols)
-
-
 # ---------------------------------------------------------------------------
 # sequence packing
 # ---------------------------------------------------------------------------
@@ -311,188 +286,3 @@ def pack_sequences(
 
     packed = staged.groupBy("_pk_bucket").applyInPandas(_pack, schema=out_schema)
     return packed.drop("_pk_key", "_pk_hash", "_pk_bucket", "_pk_tok")
-
-
-def write_shards(
-    df: DataFrame,
-    path: str,
-    n_shards: int,
-    key_cols: list[str],
-    salt: str = "",
-    token_col: str | None = None,
-) -> DataFrame:
-    """The assembly's last mile: deterministic hash-sharded output files
-    plus a manifest — what a trainer's data loader actually consumes.
-
-    Every row lands in ``shard = hash(key, salt) % n_shards`` — a pure
-    function of the row's key, so the same corpus produces byte-stable
-    shard membership under any partitioning, and an incremental rebuild
-    moves no rows between shards that it didn't change. Rows are
-    colocated per shard (``repartition(n_shards, shard)`` — the one
-    shuffle) and sorted within the file by (hash, key) so the file
-    order is the epoch-shuffle order, then written as
-    ``path/shard=NNNNN/`` parquet directories (one file per shard:
-    hash-colocation puts each shard's rows in a single task).
-
-    Returns the manifest (also written to ``path/_manifest``): one row
-    per shard with row count, token sum (when ``token_col`` given) and
-    the key-hash span — the sidecar a loader uses to size epochs and an
-    auditor uses to detect a short-written shard without re-scanning
-    data. Balance note: hash sharding is balanced to ~1/sqrt(rows per
-    shard); pick ``n_shards`` so shards hold thousands of rows, not
-    tens.
-    """
-    if n_shards < 1:
-        raise ValueError("n_shards must be >= 1")
-    key = F.concat_ws(_SEP, *[F.col(c).cast("string") for c in key_cols])
-    staged = (
-        df.withColumn("_sh_hash", portable_hash(key, salt))
-        .withColumn("shard", F.pmod("_sh_hash", F.lit(n_shards)).cast("int"))
-    )
-    (
-        staged.repartition(n_shards, "shard")
-        .sortWithinPartitions("shard", "_sh_hash", *key_cols)
-        .drop("_sh_hash")
-        .write.partitionBy("shard")
-        .mode("overwrite")
-        .parquet(path)
-    )
-    # manifest from the WRITTEN files, not the input plan: re-running the
-    # upstream pipeline just to count would double the job; a columnar
-    # re-read of (keys, token_col) over fresh parquet is ~free, and it
-    # audits what actually landed on disk
-    spark = df.sparkSession
-    written = spark.read.parquet(path)
-    wkey = F.concat_ws(_SEP, *[F.col(c).cast("string") for c in key_cols])
-    aggs = [
-        F.count(F.lit(1)).alias("n_rows"),
-        F.min("_sh_hash").alias("min_hash"),
-        F.max("_sh_hash").alias("max_hash"),
-    ]
-    if token_col is not None:
-        aggs.append(F.sum(F.col(token_col).cast("long")).alias("n_tokens"))
-    manifest = (
-        written.withColumn("_sh_hash", portable_hash(wkey, salt))
-        .groupBy("shard")
-        .agg(*aggs)
-        .orderBy("shard")
-    )
-    manifest.coalesce(1).write.mode("overwrite").parquet(f"{path}/_manifest")
-    return spark.read.parquet(f"{path}/_manifest")
-
-
-def validate_shards(spark, path: str) -> DataFrame:
-    """Audit written shards against their manifest: re-count each
-    ``shard=`` directory and return rows where counts disagree (empty
-    frame = healthy). The cheap post-write integrity gate for a job
-    that must not hand a trainer a short shard."""
-    actual = (
-        spark.read.parquet(path)
-        .groupBy("shard")
-        .agg(F.count(F.lit(1)).alias("actual_rows"))
-    )
-    manifest = spark.read.parquet(f"{path}/_manifest")
-    return (
-        manifest.join(actual, "shard", "full_outer")
-        .filter(
-            F.coalesce(F.col("n_rows"), F.lit(-1)) != F.coalesce(F.col("actual_rows"), F.lit(-1))
-        )
-        .select("shard", "n_rows", "actual_rows")
-    )
-
-
-def split_leakage_pairs(
-    df: DataFrame,
-    split_col: str = "split",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = 0.7,
-    num_hashes: int = 32,
-    bands: int = 8,
-    k: int = 3,
-    max_bucket_size: int | None = None,
-) -> DataFrame:
-    """Cross-split near-duplicate audit — the leakage check a hash split
-    cannot give you by construction.
-
-    ``assign_splits`` guarantees a GROUP never straddles splits, but two
-    *different* groups carrying near-identical text still can (mirrored
-    articles, re-posted code, template families) — and a test-set row
-    whose near-twin sits in train is benchmark leakage. This composes the
-    dedup stack (``dedup.minhash_lsh_pairs`` → ``dedup.jaccard_verify``,
-    same knobs, same skew cap) with the split column and keeps only the
-    verified pairs whose endpoints disagree on split:
-    ``(id_a, split_a, id_b, split_b, jaccard)``.
-
-    Exact duplicates are near-duplicates (jaccard 1.0), so this subsumes
-    an exact cross-split check — except for texts shorter than ``k``
-    words, whose shingle set is empty and which no n-gram method can
-    compare (run the corpus min-token gate first). Cost profile is the
-    dedup pass itself; the split bookkeeping adds two broadcast-sized
-    semi-join projections, no extra shuffle over the verify step.
-    """
-    from . import dedup
-
-    pairs = dedup.minhash_lsh_pairs(
-        df, text_col=text_col, id_col=id_col, num_hashes=num_hashes,
-        bands=bands, k=k, max_bucket_size=max_bucket_size,
-    )
-    verified = dedup.jaccard_verify(
-        df, pairs, text_col=text_col, id_col=id_col, k=k, threshold=threshold
-    )
-    splits = df.select(F.col(id_col).alias("_sl_id"), F.col(split_col).alias("_sl_split"))
-    out = (
-        verified.join(splits, verified["id_a"] == splits["_sl_id"])
-        .withColumnRenamed("_sl_split", "split_a")
-        .drop("_sl_id")
-        .join(splits, verified["id_b"] == splits["_sl_id"])
-        .withColumnRenamed("_sl_split", "split_b")
-        .drop("_sl_id")
-        .filter(F.col("split_a") != F.col("split_b"))
-        .select("id_a", "split_a", "id_b", "split_b", "jaccard")
-    )
-    # ride the dedup pass' recall-loss accounting through to the caller
-    for attr in ("_bucket_cap_observation", "_bucket_cap_fallback"):
-        if getattr(pairs, attr, None) is not None:
-            setattr(out, attr, getattr(pairs, attr))
-    return out
-
-
-def split_leakage_report(leak_pairs: DataFrame) -> DataFrame:
-    """Aggregate ``split_leakage_pairs`` into the frame an operator
-    alerts on: one row per (split_a, split_b) direction with the pair
-    count, distinct contaminated ids on each side, and the worst
-    example. Empty frame = no detectable leakage at the threshold."""
-    return (
-        leak_pairs.groupBy("split_a", "split_b")
-        .agg(
-            F.count(F.lit(1)).alias("n_pairs"),
-            F.countDistinct("id_a").alias("n_ids_a"),
-            F.countDistinct("id_b").alias("n_ids_b"),
-            F.round(F.max("jaccard"), 6).alias("max_jaccard"),
-            F.max_by(F.struct("id_a", "id_b"), F.col("jaccard")).alias("_worst"),
-        )
-        .select(
-            "split_a", "split_b", "n_pairs", "n_ids_a", "n_ids_b", "max_jaccard",
-            F.col("_worst.id_a").alias("worst_id_a"),
-            F.col("_worst.id_b").alias("worst_id_b"),
-        )
-        .orderBy("split_a", "split_b")
-    )
-
-
-def pack_stats(packed: DataFrame, budget: int) -> DataFrame:
-    """One-row utilization summary of a packed frame: pack counts,
-    oversize count, and mean fill fraction — the number a pipeline
-    monitors (fill « 1 means the budget or bucket sizing is wrong)."""
-    per_pack = packed.groupBy("pack_id").agg(
-        F.first("pack_tokens").alias("tokens"), F.count(F.lit(1)).alias("rows")
-    )
-    return per_pack.agg(
-        F.count(F.lit(1)).alias("n_packs"),
-        F.sum("rows").alias("n_rows"),
-        F.sum((F.col("tokens") > budget).cast("int")).alias("n_oversize"),
-        F.round(F.avg(F.least(F.col("tokens"), F.lit(budget)) / F.lit(float(budget))), 6).alias(
-            "mean_fill"
-        ),
-    )

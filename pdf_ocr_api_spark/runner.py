@@ -284,15 +284,9 @@ def _clean_corpus_job(args) -> int:
         """Optional exact-substring-dedup stage over the cleaned rows.
 
         Returns (rows_without_helper_cols, tokens_removed).  The index
-        store is APPEND-ONLY (h1, h2, n_occ, width, fp_version) deltas —
-        crash-safe like the signature store: a missing/partial index
-        only costs recall on later batches, never corrupts text; probes
-        aggregate on read.  Width AND the fingerprint-family version
-        (``substrings.FP_VERSION``) are stamped per row and checked on
-        every incremental probe — a mixed-width index, or one written by
-        an older fingerprint family (absent/different ``fp_version``
-        column), would silently match nothing and cost recall without a
-        trace."""
+        store is the append-only log ``substrings.stamped_index`` writes;
+        incremental probes read it through ``substrings.merged_index``,
+        which refuses a store of another width or fingerprint family."""
         from .ops import corpus as _c
         from .ops import substrings as _ss
 
@@ -306,36 +300,14 @@ def _clean_corpus_job(args) -> int:
                 kept_c = read_table(spark, corpus_target).withColumn(
                     "_sid", _c.turn_id()
                 )
-                boot = (
-                    _ss.substring_index(
-                        kept_c, text_col="clean_text", id_col="_sid", width=width
-                    )
-                    .withColumn("width", F.lit(width))
-                    .withColumn("fp_version", F.lit(_ss.FP_VERSION))
+                boot = _ss.stamped_index(
+                    kept_c, text_col="clean_text", id_col="_sid", width=width
                 )
                 write_table(boot, ss_target, mode="create")
-            raw_idx = read_table(spark, ss_target)
-            widths = [r[0] for r in raw_idx.select("width").distinct().collect()]
-            if widths and widths != [width]:
-                raise SystemExit(
-                    f"--dedup-substrings {width} does not match the stored "
-                    f"index width(s) {widths} at {ss_target}"
-                )
-            if "fp_version" in raw_idx.columns:
-                vers = [
-                    r[0] for r in raw_idx.select("fp_version").distinct().collect()
-                ]
-            else:  # store written before fingerprint versioning existed
-                vers = [1]
-            if vers and vers != [_ss.FP_VERSION]:
-                raise SystemExit(
-                    f"substring index at {ss_target} was written by "
-                    f"fingerprint family {vers}, this build is "
-                    f"{_ss.FP_VERSION} — probing it would silently match "
-                    "nothing; rebuild the index (delete the store or "
-                    "re-run without --clean-incremental)"
-                )
-            idx = raw_idx.groupBy("h1", "h2").agg(F.sum("n_occ").alias("n_occ"))
+            try:
+                idx = _ss.merged_index(read_table(spark, ss_target), width)
+            except ValueError as e:
+                raise SystemExit(f"--dedup-substrings {width}: {e} at {ss_target}") from e
             cleaned = _ss.dedup_substrings_incremental(
                 idx, staged, text_col="clean_text", id_col="_sid", width=width
             )
@@ -345,12 +317,8 @@ def _clean_corpus_job(args) -> int:
             )
         cleaned = materialize(cleaned)
         removed = cleaned.agg(F.sum("n_tokens_removed")).collect()[0][0] or 0
-        delta = (
-            _ss.substring_index(
-                cleaned, text_col="clean_text", id_col="_sid", width=width
-            )
-            .withColumn("width", F.lit(width))
-            .withColumn("fp_version", F.lit(_ss.FP_VERSION))
+        delta = _ss.stamped_index(
+            cleaned, text_col="clean_text", id_col="_sid", width=width
         )
         write_table(delta, ss_target, mode="append" if incremental else "create")
         return cleaned.drop("_sid", "n_tokens_removed"), int(removed)

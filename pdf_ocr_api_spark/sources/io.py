@@ -119,9 +119,22 @@ def local_frame(spark: SparkSession, rows: list, schema: str) -> DataFrame:
 
 
 def table_exists(spark: SparkSession, target: str) -> bool:
+    """Whether ``target`` holds a table: a catalog table for idents; for
+    paths, a ``.parquet`` file at any depth under ``target``.
+
+    Paths resolve through the session's Hadoop filesystem, the one Spark
+    reads and writes with: ``file://``, ``hdfs://`` and ``s3a://`` roots
+    work, and a relative root resolves against the JVM's working
+    directory, as Spark's own writes do, not against Python's.
+    """
     if is_table_ident(target):
         return spark.catalog.tableExists(target)
-    from pathlib import Path
-
-    p = Path(target)
-    return p.exists() and any(p.rglob("*.parquet"))
+    path = spark._jvm.org.apache.hadoop.fs.Path(target)
+    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.exists(path):
+        return False
+    files = fs.listFiles(path, True)
+    while files.hasNext():
+        if files.next().getPath().getName().endswith(".parquet"):
+            return True
+    return False

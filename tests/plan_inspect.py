@@ -12,7 +12,7 @@ plan and assert the properties that matter at 100 TB:
   1 for the conversation windows, …);
 * whole-stage codegen covers the expression layer.
 
-Used by tests/test_plans.py and handy at the REPL:
+Used by tests/test_plans.py and tests/test_ops.py, and handy at the REPL:
 ``print(plan_report(df))``.
 """
 

@@ -17,38 +17,6 @@ def docs(spark):
     return spark.read.parquet(f"{SF_DIR}/documents.parquet")
 
 
-def _rd(spark, urls):
-    df = spark.createDataFrame([(u,) for u in urls], "url string")
-    return [
-        r["d"] for r in df.select(D.registered_domain(F.col("url")).alias("d")).collect()
-    ]
-
-
-def test_registered_domain_battery(spark):
-    cases = {
-        "https://www.example.com/path?q=1": "example.com",
-        "http://EXAMPLE.COM.": "example.com",
-        "https://user:pw@sub.deep.example.org:8080/x#frag": "example.org",
-        "ftp://files.example.net": "example.net",
-        "www.bbc.co.uk": "bbc.co.uk",
-        "https://news.bbc.co.uk/page": "bbc.co.uk",
-        "co.uk": "co.uk",  # the bare suffix — nothing registrable above it
-        "https://shop.example.com.au": "example.com.au",
-        "localhost": "localhost",
-        "http://localhost:3000/api": "localhost",
-        "http://192.168.10.1:8080/admin": "192.168.10.1",
-        "sub.a.b.example.com": "example.com",
-    }
-    got = _rd(spark, list(cases))
-    assert got == list(cases.values())
-
-
-def test_registered_domain_null(spark):
-    df = spark.createDataFrame([(None,), ("example.com",)], "url string")
-    got = [r["d"] for r in df.select(D.registered_domain(F.col("url")).alias("d")).collect()]
-    assert got == [None, "example.com"]
-
-
 def test_domain_stats(spark, docs):
     out = {r["domain"]: r for r in D.domain_stats(docs).collect()}
     assert len(out) == 20
@@ -154,76 +122,6 @@ def test_cap_per_domain_null_domain_group(spark):
         D.cap_per_domain(df, 0)
 
 
-def test_cap_incremental_empty_index_equals_full(spark, docs):
-    empty = spark.createDataFrame([], "domain string, n_docs long")
-    a = sorted(
-        r["doc_id"]
-        for r in D.cap_per_domain_incremental(empty, docs, 7, salt="t-v1")
-        .select("doc_id")
-        .collect()
-    )
-    b = sorted(
-        r["doc_id"]
-        for r in D.cap_per_domain(docs, 7, salt="t-v1").select("doc_id").collect()
-    )
-    assert a == b
-
-
-def test_cap_incremental_chained_batches(spark, docs):
-    """Batch 2 fills only the quota batch 1 left; totals never exceed n;
-    admitted docs are the batch's smallest hashes; full domains admit 0."""
-    n = 8
-    b1 = docs.filter(F.col("doc_id") % 2 == 0)
-    b2 = docs.filter(F.col("doc_id") % 2 == 1)
-    kept1 = D.cap_per_domain(b1, n)
-    idx = D.domain_stats(kept1, text_col=None)
-    kept2 = D.cap_per_domain_incremental(idx, b2, n)
-    per1 = {r["domain"]: r["n_docs"] for r in idx.collect()}
-    per2 = {
-        r["source"]: r["c"]
-        for r in kept2.groupBy("source").agg(F.count("*").alias("c")).collect()
-    }
-    for d, c in per2.items():
-        assert per1.get(d, 0) + c <= n
-    # every domain with batch-2 supply ends exactly at n (25 docs/domain
-    # per batch here, quota always fillable)
-    total = {d: per1.get(d, 0) + per2.get(d, 0) for d in per1}
-    assert all(v == n for v in total.values())
-    # admitted = the smallest-(hash,key) batch docs within the remainder
-    from pdf_ocr_api_spark.ops.training import portable_hash
-
-    ranked = b2.withColumn(
-        "_h",
-        portable_hash(
-            F.concat_ws(chr(0x1F), F.col("source"), F.col("doc_id").cast("string")),
-            "domain-cap-v1",
-        ),
-    )
-    got = {r["doc_id"] for r in kept2.collect()}
-    for d in per1:
-        rows = sorted(
-            (r["_h"], r["doc_id"])
-            for r in ranked.filter(F.col("source") == d).collect()
-        )
-        want = {k for _, k in rows[: n - per1.get(d, 0)]}
-        assert {k for k in got if k in {x[1] for x in rows}} == want
-    # a saturated index admits nothing
-    full = D.domain_stats(docs, text_col=None)
-    assert D.cap_per_domain_incremental(full, b2, 8).count() == 0
-
-
-def test_registered_domain_protocol_relative(spark):
-    """Review regression: scheme-relative '//host/path' hrefs must
-    resolve to the host's domain, not the '' pseudo-domain."""
-    cases = {
-        "//cdn.example.com/lib.js": "example.com",
-        "//bad.co.uk/page?x=1": "bad.co.uk",
-        "//192.168.10.1/x": "192.168.10.1",
-    }
-    got = _rd(spark, list(cases))
-    assert got == list(cases.values())
-
-
 def test_partial_topn_bounds_survivors_across_arrow_batches(spark):
     """Review regression (live-confirmed defect): the partial top-n
     must fold across a partition's Arrow batches — a per-batch head(n)
@@ -258,14 +156,6 @@ def test_partial_topn_bounds_survivors_across_arrow_batches(spark):
         assert kept == want
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
-
-
-def test_registered_domain_empty_host_is_null(spark):
-    """Review regression: path-only / scheme-only / file URLs have no
-    host — they must be NULL (NULL conventions), not an '' pseudo-domain
-    that evades blocklists."""
-    got = _rd(spark, ["/about", "https://", "file:///tmp/x", "//", ""])
-    assert got == [None] * 5
 
 
 def test_filter_domains_suffix_match(spark):

@@ -5,7 +5,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from pdf_ocr_api_spark import fixtures, pipeline
-from pdf_ocr_api_spark.plans import inspect as PI
+from tests import plan_inspect as PI
 
 
 @pytest.fixture(scope="module")
@@ -81,21 +81,6 @@ def test_lsh_topk_plan_is_scan_filter_takeordered(spark):
     assert "TakeOrderedAndProject" in plan, plan[:1500]
     assert "Join" not in plan, plan[:1500]
     assert PI.exchange_count(similarity.lsh_topk(emb, q, k=5)) == 0
-
-
-def test_embedding_near_pairs_no_cartesian(spark):
-    """Banded SRP blocking must never plan a cartesian/NLJ product —
-    candidates come from equi-joins on (band, signature)."""
-    import numpy as np
-
-    from pdf_ocr_api_spark.ops import similarity
-
-    rng = np.random.default_rng(4)
-    rows = [(i, [float(x) for x in rng.standard_normal(8)]) for i in range(40)]
-    emb = spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<FLOAT>")
-    plan = PI.executed_plan(similarity.embedding_near_pairs(emb, threshold=0.9))
-    assert "CartesianProduct" not in plan, plan[:1500]
-    assert "BroadcastNestedLoopJoin" not in plan, plan[:1500]
 
 
 def test_simhash_banding_no_cartesian(spark):

@@ -392,19 +392,6 @@ def test_engine_twins_filter(spark, docs):
         R.repetition_profile(both, engine="nope")
 
 
-def test_with_repetition_join_matches_profile(spark, docs):
-    out = R.with_repetition(docs, "text", "doc_id")
-    assert set(out.columns) == {
-        "doc_id", "text", "n_lines", "n_paras", "dup_line_frac",
-        "dup_line_char_frac", "dup_para_frac", "dup_para_char_frac",
-        "top_2gram_char_frac", "top_3gram_char_frac", "top_4gram_char_frac",
-    }
-    prof = {r["id"]: r["dup_line_frac"] for r in R.repetition_profile(docs).collect()}
-    got = {r["doc_id"]: r["dup_line_frac"] for r in out.collect()}
-    assert got == prof
-    assert out.count() == docs.count()  # 1:1 join, no row loss
-
-
 def test_strip_boilerplate_untouched_docs_keep_bytes(spark):
     """Review regression: a doc that loses NO line keeps its original
     bytes (CRLF endings included); NULL-id docs pass through."""
@@ -434,11 +421,3 @@ def test_expr_engine_reserved_column_guard(spark):
         R.repetition_filter(df, engine="expr")
     # the pandas engine has no staging columns — any schema works
     assert R.repetition_filter(df).count() == 1
-
-
-def test_with_repetition_left_join_keeps_null_id(spark):
-    df = spark.createDataFrame(
-        [(None, "some text body"), (1, "other text")], "doc_id int, text string"
-    )
-    out = R.with_repetition(df, "text", "doc_id")
-    assert out.count() == 2  # NULL-id row not dropped (left join)

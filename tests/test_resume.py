@@ -13,6 +13,11 @@ def transcripts(spark):
     return spark.createDataFrame(fixtures.fixture_frame(20))
 
 
+def done_buckets(spark, out_root: str) -> list[int]:
+    """The buckets a root has committed, as the next run will skip them."""
+    return sorted({r.bucket for r in lineage._commits(spark, out_root)})
+
+
 def test_resume_skips_done_buckets(spark, transcripts, tmp_path):
     out = str(tmp_path / "run")
     s1 = lineage.run(spark, transcripts, out, run_id="r1", n_buckets=8)
@@ -26,6 +31,18 @@ def test_resume_skips_done_buckets(spark, transcripts, tmp_path):
     # lineage rows only from the first run
     lin = lineage.read_lineage(spark, out).toPandas()
     assert set(lin.run_id) == {"r1"}
+
+
+def test_resume_on_uri_root(spark, transcripts, tmp_path):
+    """A ``file://`` root resumes like a plain path: the commit check
+    reads the root through Spark's filesystem, as the writes do, so the
+    same URI form works for ``hdfs://`` and ``s3a://`` deployments."""
+    out = f"{tmp_path.as_uri()}/out"
+    s1 = lineage.run(spark, transcripts, out, run_id="r1", n_buckets=4)
+    assert s1["buckets_processed"] == [0, 1, 2, 3]
+    assert done_buckets(spark, out) == [0, 1, 2, 3]
+    s2 = lineage.run(spark, transcripts, out, run_id="r2", n_buckets=4)
+    assert s2["buckets_processed"] == []
 
 
 def test_partial_resume_produces_identical_output(spark, transcripts, tmp_path):
@@ -136,7 +153,7 @@ def test_crash_before_commit_reprocesses_exactly_that_bucket(spark, transcripts,
     monkeypatch.undo()
 
     assert 4 in {r.bucket for r in lineage.read_output(spark, out).select("bucket").distinct().collect()}
-    assert lineage.done_buckets(spark, out) == [0, 1, 2, 3]
+    assert done_buckets(spark, out) == [0, 1, 2, 3]
 
     s3 = lineage.run(spark, with_b.filter(F.col("b") <= 4).drop("b"), out, run_id="r3", n_buckets=8)
     assert s3["buckets_processed"] == [4]
@@ -176,6 +193,20 @@ def test_fresh_run_spark_job_budget(spark, transcripts, tmp_path):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 6
+
+
+@contextmanager
+def _jvm_workdir(spark, path):
+    """The JVM's local-filesystem working directory — what Spark resolves
+    a relative root against — set to ``path`` for the block, restored after."""
+    jvm = spark._jvm
+    fs = jvm.org.apache.hadoop.fs.FileSystem.getLocal(spark._jsc.hadoopConfiguration())
+    old = fs.getWorkingDirectory()
+    fs.setWorkingDirectory(jvm.org.apache.hadoop.fs.Path(path.as_uri()))
+    try:
+        yield
+    finally:
+        fs.setWorkingDirectory(old)
 
 
 @contextmanager
@@ -248,33 +279,26 @@ def test_one_file_per_bucket_with_and_without_aqe(spark, tmp_path):
 def test_bare_output_root_keeps_tables_together(spark, tmp_path, monkeypatch):
     """``runner --output results --records`` puts data, lineage and
     records under one ``results/`` directory. A bare root is relative to
-    the working directory of both processes: the Python side's (resume
-    checks) and the JVM's local filesystem (Spark's reads and writes), so
-    the test moves both to ``tmp_path`` and restores the JVM's after."""
+    the JVM's local-filesystem working directory (Spark's reads, writes
+    and the resume checks), so the test moves it, and Python's, to
+    ``tmp_path``."""
     from pdf_ocr_api_spark import runner
 
     inp = str(tmp_path / "in")
     spark.createDataFrame(fixtures.fixture_frame(12)).write.parquet(inp)
     monkeypatch.chdir(tmp_path)
-    jvm = spark._jvm
-    fs = jvm.org.apache.hadoop.fs.FileSystem.getLocal(spark._jsc.hadoopConfiguration())
-    old_wd = fs.getWorkingDirectory()
-    fs.setWorkingDirectory(jvm.org.apache.hadoop.fs.Path(tmp_path.as_uri()))
-    try:
+    with _jvm_workdir(spark, tmp_path):
         assert runner.main(["--input", inp, "--output", "results", "--records", "--buckets", "4"]) == 0
-    finally:
-        fs.setWorkingDirectory(old_wd)
     assert sorted(p.name for p in tmp_path.iterdir()) == ["in", "results"]
     assert sorted(p.name for p in (tmp_path / "results").iterdir()) == ["data", "lineage", "records"]
 
 
-def test_old_sibling_layout_refused(spark, transcripts, tmp_path, monkeypatch):
+def test_old_sibling_layout_refused(spark, transcripts, tmp_path):
     """A bare root written with the earlier sibling layout
     (``<root>_data``, ``<root>_lineage``) is refused with the move to
     make, not silently re-extracted into ``<root>/data``."""
-    monkeypatch.chdir(tmp_path)
     lineage.run(spark, transcripts, str(tmp_path / "results_x"), run_id="a", n_buckets=8)
     (tmp_path / "results_x" / "lineage").rename(tmp_path / "results_lineage")
-    with pytest.raises(ValueError, match="old sibling layout"):
-        lineage.done_buckets(spark, "results")
+    with _jvm_workdir(spark, tmp_path), pytest.raises(ValueError, match="old sibling layout"):
+        done_buckets(spark, "results")
     assert not (tmp_path / "results").exists()

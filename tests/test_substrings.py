@@ -118,21 +118,6 @@ def test_short_docs_emit_nothing(spark):
         S.window_fingerprints(sdf, width=1)
 
 
-def test_stats_audit(spark):
-    span = " ".join(f"s{i}" for i in range(10))
-    docs = [(i, f"head{i} " + span + f" tail{i}") for i in range(5)]
-    sdf = spark.createDataFrame(docs, "doc_id int, text string")
-    st = S.substring_dup_stats(sdf, width=10, min_count=2).collect()
-    # only the pure-span alignment (pos 1) repeats — the edge windows
-    # include the per-doc head/tail tokens
-    assert len(st) == 1
-    (r,) = st
-    assert r["n_occurrences"] == 5 and r["n_docs"] == 5
-    assert r["keeper_id"] == 0 and r["keeper_pos"] == 1
-    # min_count above the occurrence count → empty audit
-    assert S.substring_dup_stats(sdf, width=10, min_count=6).count() == 0
-
-
 def test_schema_passthrough_and_extra_columns(spark):
     span = " ".join(f"x{i}" for i in range(6))
     sdf = spark.createDataFrame(
@@ -195,23 +180,24 @@ def test_incremental_min_count_spans_history_and_batch(spark):
 
 
 def test_index_update_rounds(spark):
-    """Three batches through index → update → index: a span stored in
-    round 1 still suppresses copies arriving in round 3, and the
-    UPDATED index counts the CLEANED text (a cut span does not inflate
-    n_occ)."""
+    """Three batches through the append-only index store: each round
+    probes ``merged_index`` of the store and appends the CLEANED batch's
+    ``stamped_index`` delta. A span stored in round 1 still suppresses
+    copies arriving in round 3, and a cut span does not inflate n_occ."""
     span = " ".join(f"r{i}" for i in range(8))
     b1 = [(1, "first round doc with " + span + " inside")]
     b2 = [(10, "second round doc reusing " + span + " again")]
     b3 = [(20, "third round doc also reusing " + span + " here")]
     mk = lambda d: spark.createDataFrame(d, "doc_id int, text string")
-    idx = S.substring_index(mk(b1), width=8)
-    c2 = S.dedup_substrings_incremental(idx, mk(b2), width=8)
+    store = S.stamped_index(mk(b1), width=8)
+    c2 = S.dedup_substrings_incremental(S.merged_index(store, 8), mk(b2), width=8)
     assert c2.collect()[0]["n_tokens_removed"] == 8
-    idx = S.update_substring_index(idx, c2.select("doc_id", "text"), width=8)
+    store = store.unionByName(S.stamped_index(c2.select("doc_id", "text"), width=8))
+    idx = S.merged_index(store, 8)
     c3 = S.dedup_substrings_incremental(idx, mk(b3), width=8)
     assert c3.collect()[0]["n_tokens_removed"] == 8
     # the span's fingerprint still counts exactly ONE stored occurrence
-    # (round 2's copy was cut before the index update)
+    # (round 2's copy was cut before its delta was indexed)
     stats = {(r["h1"], r["h2"]): r["n_occ"] for r in idx.collect()}
     hist_wins = S.window_fingerprints(mk(b1), width=8).collect()
     span_keys = {(r["h1"], r["h2"]) for r in hist_wins}

@@ -1,5 +1,5 @@
 """Training-set assembly operators (ops/training): leakage-safe splits,
-mixture weighting, deterministic shuffle, sequence packing.
+mixture weighting, sequence packing.
 
 The correctness axes that matter for these are OPERATIONAL properties —
 determinism across runs and partitionings, cross-engine hash parity
@@ -129,22 +129,6 @@ def test_mixture_zero_weight_drops_domain(spark):
 
 
 # ---------------------------------------------------------------------------
-# deterministic shuffle
-# ---------------------------------------------------------------------------
-
-def test_deterministic_shuffle_total_order(spark):
-    df = _docs(spark, 500)
-    a = training.deterministic_shuffle(df, ["row_id"], salt="e1", partitions=8)
-    b = training.deterministic_shuffle(df.repartition(11), ["row_id"], salt="e1", partitions=8)
-    ra = [r.row_id for r in a.collect()]
-    rb = [r.row_id for r in b.collect()]
-    assert ra == rb                                   # same total order, any input layout
-    assert ra != sorted(ra)                           # actually shuffled
-    c = [r.row_id for r in training.deterministic_shuffle(df, ["row_id"], salt="e2", partitions=8).collect()]
-    assert c != ra                                    # new salt = new epoch order
-
-
-# ---------------------------------------------------------------------------
 # sequence packing
 # ---------------------------------------------------------------------------
 
@@ -223,15 +207,6 @@ def test_pack_nfd_no_looser_than_sequential(spark):
     assert nfd <= seq
 
 
-def test_pack_stats(spark):
-    df = _docs(spark, 400)
-    packed = training.pack_sequences(df, "n_tokens", budget=300, key_cols=["row_id"], n_buckets=4)
-    s = training.pack_stats(packed, budget=300).collect()[0]
-    assert s.n_rows == 400 and s.n_packs > 0
-    assert s.n_oversize == 0
-    assert 0.5 < s.mean_fill <= 1.0
-
-
 def test_pack_rejects_bad_args(spark):
     df = _docs(spark, 8)
     with pytest.raises(ValueError):
@@ -267,131 +242,8 @@ def test_split_mix_pack_compose(spark):
 
 
 # ---------------------------------------------------------------------------
-# split-leakage audit
+# plain-Python hash twin
 # ---------------------------------------------------------------------------
-
-_LEAK_BASE = (
-    "the quarterly municipal infrastructure report covers road resurfacing "
-    "schedules drainage upgrades and the bridge inspection backlog across "
-    "seven districts with cost projections for the coming fiscal year"
-)
-
-
-def _leak_corpus(spark):
-    """Planted leakage: docs 0/1 are near-identical but in different
-    splits; docs 2/3 near-identical within ONE split; the rest unique."""
-    uniq = [
-        "glacier meltwater chemistry sampling protocol for alpine catchment studies",
-        "sourdough fermentation timing depends on ambient temperature and hydration",
-        "the orchestra rehearsal schedule moved to thursday evenings this season",
-        "vector clock reconciliation in eventually consistent replicated stores",
-    ]
-    rows = [
-        (0, _LEAK_BASE + " appendix one", "test"),
-        (1, _LEAK_BASE + " appendix two", "train"),
-        (2, "shared template " + uniq[0] + " version a", "train"),
-        (3, "shared template " + uniq[0] + " version b", "train"),
-        (4, uniq[1], "train"),
-        (5, uniq[2], "val"),
-        (6, uniq[3], "test"),
-    ]
-    return spark.createDataFrame(rows, "doc_id INT, text STRING, split STRING")
-
-
-def test_split_leakage_pairs_finds_cross_split_only(spark):
-    df = _leak_corpus(spark)
-    leaks = training.split_leakage_pairs(
-        df, threshold=0.5, num_hashes=32, bands=16, k=3
-    ).collect()
-    assert {(r.id_a, r.id_b) for r in leaks} == {(0, 1)}     # 2-3 same-split: excluded
-    (r,) = leaks
-    assert {r.split_a, r.split_b} == {"test", "train"}
-    assert r.jaccard > 0.5
-
-
-def test_split_leakage_clean_corpus_is_empty(spark):
-    df = _leak_corpus(spark).filter(F.col("doc_id") >= 2)
-    assert (
-        training.split_leakage_pairs(df, threshold=0.5, num_hashes=32, bands=16).count() == 0
-    )
-
-
-def test_split_leakage_report_shape(spark):
-    df = _leak_corpus(spark)
-    leaks = training.split_leakage_pairs(df, threshold=0.5, num_hashes=32, bands=16)
-    rep = training.split_leakage_report(leaks).collect()
-    assert len(rep) == 1
-    (r,) = rep
-    assert r.n_pairs == 1 and r.n_ids_a == 1 and r.n_ids_b == 1
-    assert {r.worst_id_a, r.worst_id_b} == {0, 1}
-    assert r.max_jaccard > 0.5
-    # empty input -> empty report, stable schema
-    empty = training.split_leakage_report(leaks.filter(F.lit(False)))
-    assert empty.count() == 0 and "max_jaccard" in empty.columns
-
-
-def test_split_leakage_carries_bucket_cap_accounting(spark):
-    from pdf_ocr_api_spark.ops import dedup
-
-    df = _leak_corpus(spark)
-    leaks = training.split_leakage_pairs(
-        df, threshold=0.5, num_hashes=32, bands=16, max_bucket_size=64
-    )
-    leaks.count()
-    m = dedup.bucket_cap_metrics(leaks)
-    assert m["dropped_buckets"] == 0 and m["max_bucket"] is not None
-
-
-# ---------------------------------------------------------------------------
-# shard writer
-# ---------------------------------------------------------------------------
-
-def test_write_shards_deterministic_and_complete(spark, tmp_path):
-    df = _docs(spark, 400)
-    path = str(tmp_path / "shards")
-    man = training.write_shards(
-        df, path, n_shards=8, key_cols=["row_id"], salt="e0", token_col="n_tokens"
-    ).collect()
-    assert sorted(r.shard for r in man) == list(range(8))
-    assert sum(r.n_rows for r in man) == 400
-    assert sum(r.n_tokens for r in man) == sum(5 + (i * 37) % 90 for i in range(400))
-
-    back = spark.read.parquet(path)
-    assert back.count() == 400
-    # shard assignment is the portable hash — stable under repartitioning
-    again = str(tmp_path / "shards2")
-    training.write_shards(
-        df.repartition(13), again, n_shards=8, key_cols=["row_id"], salt="e0"
-    )
-    a = {r.row_id: r.shard for r in back.collect()}
-    b = {r.row_id: r.shard for r in spark.read.parquet(again).collect()}
-    assert a == b
-    # validation passes on healthy output
-    assert training.validate_shards(spark, path).count() == 0
-
-
-def test_write_shards_one_file_per_shard_dir(spark, tmp_path):
-    import glob
-
-    path = str(tmp_path / "s")
-    training.write_shards(_docs(spark, 200), path, n_shards=4, key_cols=["row_id"])
-    for d in glob.glob(f"{path}/shard=*"):
-        files = [f for f in glob.glob(f"{d}/*.parquet")]
-        assert len(files) == 1, d
-
-
-def test_write_shards_in_file_order_is_shuffle_order(spark, tmp_path):
-    path = str(tmp_path / "s")
-    training.write_shards(_docs(spark, 300), path, n_shards=2, key_cols=["row_id"], salt="ep1")
-    import glob
-    f = sorted(glob.glob(f"{path}/shard=0/*.parquet"))[0]
-    import pandas as pd
-    pdf = pd.read_parquet(f)
-    hashes = [
-        training_hash_py(str(r), "ep1") for r in pdf["row_id"]
-    ]
-    assert hashes == sorted(hashes)
-
 
 def training_hash_py(key: str, salt: str) -> int:
     import hashlib
@@ -400,29 +252,11 @@ def training_hash_py(key: str, salt: str) -> int:
 
 
 def test_portable_hash_python_twin(spark):
-    """The manifest/loader-side reimplementation used above must match
-    Spark's portable_hash (third engine after Spark + DuckDB)."""
+    """A plain-Python reimplementation must match Spark's portable_hash
+    (third engine after Spark + DuckDB)."""
     keys = ["", "a", "row42", "héllo"]
     sdf = spark.createDataFrame([(k,) for k in keys], "k STRING")
     got = {r["k"]: r["h"] for r in sdf.select(
         "k", training.portable_hash(F.col("k"), "s2").alias("h")).collect()}
     for k in keys:
         assert got[k] == training_hash_py(k, "s2"), k
-
-
-def test_validate_shards_detects_short_shard(spark, tmp_path):
-    import glob, os
-
-    path = str(tmp_path / "s")
-    training.write_shards(_docs(spark, 200), path, n_shards=4, key_cols=["row_id"])
-    # sabotage: delete one shard's data file
-    victim = glob.glob(f"{path}/shard=1/*.parquet")[0]
-    os.remove(victim)
-    bad = training.validate_shards(spark, path).collect()
-    assert [r.shard for r in bad] == [1]
-    assert bad[0].actual_rows is None
-
-
-def test_write_shards_rejects_bad_args(spark, tmp_path):
-    with pytest.raises(ValueError):
-        training.write_shards(_docs(spark, 4), str(tmp_path / "x"), 0, ["row_id"])

@@ -36,13 +36,6 @@ def test_delete_turns(convs):
     assert _seq(out, "b") == ["b0", "b4"]
 
 
-def test_rotate_turns(convs):
-    out = turnops.rotate_turns(convs, 2)
-    # shift by 2: old turn 0 lands at position 2
-    assert _seq(out, "a") == ["a6", "a7", "a0", "a1", "a2", "a3", "a4", "a5"]
-    assert _seq(out, "b") == ["b3", "b4", "b0", "b1", "b2"]
-
-
 def test_insert_turns(convs, spark):
     ins = spark.createDataFrame(
         [("a", 0, "X0"), ("a", 1, "X1")], "conv_id STRING, turn_idx INT, payload STRING"
@@ -57,13 +50,6 @@ def test_replace_turns(convs, spark):
     )
     out = turnops.replace_turns(convs.filter("conv_id='a'"), rep, 2, 5)
     assert _seq(out, "a") == ["a0", "a1", "R0", "R1", "a6", "a7"]
-
-
-def test_combine_conversations(convs):
-    a = convs.filter("conv_id='a'")
-    b = convs.filter("conv_id='b'")
-    out = turnops.combine_conversations([b, a], "merged")
-    assert _seq(out, "merged") == ["b0", "b1", "b2", "b3", "b4"] + [f"a{i}" for i in range(8)]
 
 
 def test_split_by_count(convs):
